@@ -13,7 +13,7 @@ Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from dsgrid_spark.pipeline.text import fingerprint
@@ -254,7 +254,7 @@ def lsh_candidate_pairs(df: DataFrame, id_column: str = "doc_id",
     else:
         # caller supplies an ALREADY-PERSISTED (id, band, band_hash)
         # table from band_signatures — the q30 pattern where one banding
-        # pass feeds the full-corpus self-join AND both incremental sides
+        # pass feeds the full-corpus self-join and the incremental calls
         _check_band_table(bands, num_bands, signature_length, "bands")
     if max_bucket_size is not None:
         ok = (
@@ -306,10 +306,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_column: str = "text",
     sh = base.select(
         F.col(id_column), shingles(text_column, shingle_k).alias("__sh")
     )
-    # referenced twice (both sides of the pair join): materialize so the
-    # shingle construction runs once per document, not once per side
-    sh = sh.persist()
-    sh.count()
     if candidates is None:
         a, b = sh.alias("a"), sh.alias("b")
         pairs = a.join(b, F.col(f"a.{id_column}") < F.col(f"b.{id_column}"))
@@ -406,11 +402,7 @@ def minhash_dedup(df: DataFrame, text_column: str = "text",
     so their candidate pairs resolve through the surviving representative
     and non-survivors drop out of the verify join against ``uniq``.
     """
-    # persisted but NOT eagerly counted (r12): the first action that
-    # scans uniq is a SINGLE-reference one either way — cands.count()
-    # when this function signs uniq itself, else the verify pass's
-    # shingle count inside ngram_jaccard_pairs — so the cache fills
-    # without racing scans and the extra materialization job is saved
+    # persisted, not counted: the first action that scans uniq fills it
     uniq = exact_dedup(df, text_column, id_column).persist()
     with_sig = (signatures if signatures is not None
                 else minhash_signatures(uniq, text_column, num_hashes,
@@ -432,6 +424,68 @@ def minhash_dedup(df: DataFrame, text_column: str = "text",
     return uniq.join(to_drop, id_column, "left_anti")
 
 
+def _batch_pairs(uniq: DataFrame, bn: DataFrame, text_column: str,
+                 id_column: str, shingle_k: int, threshold: float,
+                 max_bucket_size: int | None = None,
+                 br: DataFrame | None = None,
+                 reference_df: DataFrame | None = None,
+                 within: bool = True) -> tuple[DataFrame, DataFrame]:
+    """``(pairs, cands)``: ONE tagged candidate table ``cands`` — the
+    reference band rows ``br`` (``ref`` true) and, with ``within``, the
+    batch's own rows (``ref`` false, smaller id) bucket-joined to the
+    batch bands ``bn`` — verified by one shingle join into ``(id_a,
+    id_b, ref, dropped, missing)``; ``missing`` marks a reference
+    candidate whose text ``reference_df`` lacks. ``max_bucket_size``
+    drops the a-side rows of buckets with more same-side rows than
+    that: the reference cap of the cross join and the within-batch
+    self-join cap in one aggregation. With a reference side ``cands``
+    is cached (filled lazily) for the text prune and the verify join;
+    the caller unpersists it."""
+    def tagged(bands, ref):
+        return bands.select(F.col(id_column).alias("id_a"), "band",
+                            "band_hash", F.lit(ref).alias("ref"))
+
+    sides = ([tagged(br, True)] if br is not None else []) + (
+        [tagged(bn, False)] if within else [])
+    a = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
+    if max_bucket_size is not None:
+        keys = ["band", "band_hash", "ref"]
+        ok = (a.groupBy(*keys).count()
+              .filter(F.col("count") <= max_bucket_size).select(*keys))
+        a = a.join(ok, keys, "left_semi")
+    cands = (a.join(bn.select(F.col(id_column).alias("id_b"), "band",
+                              "band_hash"), ["band", "band_hash"])
+             .filter(F.col("ref") | (F.col("id_a") < F.col("id_b")))
+             .select("id_a", "id_b", "ref").distinct())
+
+    def sh(df, ref):
+        return df.select(F.col(id_column).alias("id_a"),
+                         F.lit(ref).alias("ref"),
+                         shingles(text_column, shingle_k).alias("sh_a"))
+
+    # the whole batch is shingled (signing it shingled it anyway); of
+    # the reference, only candidate docs are
+    sh_new = sh(uniq, False)
+    sh_a = sh_new if within else None
+    if br is not None:
+        ref_ids = (cands.persist().filter(F.col("ref"))
+                   .select(F.col("id_a").alias(id_column)))
+        sh_ref = sh(reference_df.join(ref_ids, id_column, "left_semi"),
+                    True)
+        sh_a = sh_ref if sh_a is None else sh_a.unionByName(sh_ref)
+    pairs = (cands.join(sh_a, ["id_a", "ref"], "left")
+             .join(sh_new.select(F.col("id_a").alias("id_b"),
+                                 F.col("sh_a").alias("sh_b")), "id_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    has_a = F.col("sh_a").isNotNull()
+    return pairs.select(
+        "id_a", "id_b", "ref",
+        (has_a & (F.when(union > 0, inter / union).otherwise(0.0)
+                  >= threshold)).alias("dropped"),
+        (F.col("ref") & ~has_a).alias("missing")), cands
+
+
 def within_batch_drop(uniq: DataFrame, sigs_new: DataFrame,
                       text_column: str = "text",
                       id_column: str = "doc_id",
@@ -447,20 +501,17 @@ def within_batch_drop(uniq: DataFrame, sigs_new: DataFrame,
     ``within_drop`` instead of re-running the candidate self-join and
     shingle verify per reference. ``uniq`` must be the exact-deduped
     batch; ``sigs_new``/``bands`` follow the usual precomputed-reuse
-    contract."""
-    wb_cands = lsh_candidate_pairs(sigs_new, id_column, num_bands,
-                                   max_bucket_size=max_bucket_size,
-                                   signature_length=num_hashes,
-                                   bands=bands)
-    wb_cands = wb_cands.persist()
-    wb_cands.count()
-    wb_dups = ngram_jaccard_pairs(uniq, text_column, id_column,
-                                  shingle_k, threshold,
-                                  candidates=wb_cands)
-    # full-corpus semantics: b drops if ANY smaller-id batch doc is a
-    # neighbor, whether or not that doc itself survived the reference
-    # pass — so the drop set comes from all batch pairs, not survivors
-    return wb_dups.select(F.col("id_b").alias(id_column)).distinct()
+    contract. Lazy. Full-corpus semantics: b drops if ANY smaller-id
+    batch doc is a neighbor, whether or not that doc itself survived
+    the reference pass."""
+    if bands is not None:
+        _check_band_table(bands, num_bands, num_hashes, "bands")
+    else:
+        bands = band_signatures(sigs_new, id_column, num_bands, num_hashes)
+    pairs, _ = _batch_pairs(uniq, bands, text_column, id_column,
+                            shingle_k, threshold, max_bucket_size)
+    return (pairs.filter("dropped")
+            .select(F.col("id_b").alias(id_column)).distinct())
 
 
 def incremental_dedup(new_df: DataFrame, reference_sigs: DataFrame,
@@ -479,78 +530,63 @@ def incremental_dedup(new_df: DataFrame, reference_sigs: DataFrame,
     """Dedup a NEW batch against an already-registered corpus using the
     corpus's persisted minhash signatures — the continuous-ingest path.
 
-    Re-signing and self-joining the accumulated corpus on every incoming
-    batch costs O(corpus) per batch; here the reference side only
-    re-bands its stored ``(id, minhash)`` signatures (cheap column ops
-    over an 8-bytes-per-hash table) and the bucket join against the new
-    batch's bands produces output scaling with the batch, never a
-    reference self-join. Reference text (``reference_df``) is touched
-    only for verification, pruned to candidate ids by a semi-join first.
+    The reference side only re-bands its stored ``(id, minhash)``
+    signatures, and the bucket join against the batch's bands scales
+    with the batch, never a reference self-join; reference text
+    (``reference_df``) is read only for candidate ids, by a semi-join.
+    One fused plan: reference-bucket pairs and within-batch pairs form
+    ONE tagged candidate table, verified by ONE shingle join, and each
+    batch doc is flagged from its pairs. The only action is one
+    ``localCheckpoint`` of the flagged batch: the survivors come back
+    materialized, and the caches this call made are released.
 
     ``reference_sigs`` must come from :func:`minhash_signatures` with
-    the same ``num_hashes``/``shingle_k``/seed — banding must line up on
-    both sides for buckets to match.
+    the same ``num_hashes``/``shingle_k``/seed so buckets line up. With
+    ``within_batch=True`` the result provably equals full-corpus
+    ``minhash_dedup`` restricted to the new ids (new ids sorting after
+    reference ids): a new doc is dropped iff some reference doc or some
+    smaller-id batch doc is a verified >= threshold Jaccard neighbor.
+    Returns the surviving rows of ``new_df``.
 
-    With ``within_batch=True`` the result provably equals full-corpus
-    ``minhash_dedup`` restricted to the new ids (assuming new ids sort
-    after reference ids): a new doc is dropped iff some reference doc or
-    some smaller-id batch doc is a verified >= threshold Jaccard
-    neighbor. Returns the surviving rows of ``new_df``.
+    Precomputed inputs (the q30 shape: one signing and banding pass
+    feeding several dedup calls): ``new_sigs`` — batch signatures (same
+    contract as ``minhash_dedup(signatures=...)``; without it the batch
+    is signed once here and carries its signature); ``reference_bands``
+    / ``new_bands`` — persisted :func:`band_signatures` slices;
+    ``new_uniq`` — the batch already exact-deduped (and persisted);
+    ``within_drop`` — a :func:`within_batch_drop` result for the batch
+    (requires ``within_batch=True``).
 
-    ``new_sigs`` takes precomputed batch signatures (same contract as
-    ``minhash_dedup(signatures=...)``) so a job that already signed the
-    corpus once can slice that table instead of re-folding the batch.
-
-    ``reference_bands`` / ``new_bands`` take precomputed, persisted band
-    tables (filtered slices of one :func:`band_signatures` pass over the
-    combined signature table) so a job running full AND incremental dedup
-    bands the corpus once instead of three times.
-
-    ``max_bucket_size`` caps BOTH candidate producers: the within-batch
-    self-join (via :func:`lsh_candidate_pairs`) and the reference-side
-    buckets of the cross join — on a boilerplate-heavy accumulated
-    corpus one low-entropy reference bucket would otherwise fan every
-    matching batch doc into thousands of verify pairs per band.
+    ``max_bucket_size`` caps BOTH candidate producers (the within-batch
+    self-join and the reference-side buckets), so one low-entropy
+    reference bucket cannot fan every matching batch doc into thousands
+    of verify pairs per band.
 
     ``require_reference_coverage=True`` turns the reference-text
     contract into a loud error: a candidate whose reference text is
     absent from ``reference_df`` cannot be verified and would silently
-    KEEP the near-duplicate — with the flag on, any candidate
-    reference id missing from ``reference_df`` raises instead. Cost:
-    the candidate-pruned reference slice is persisted and counted once
-    (candidate-bounded rows; no extra corpus shuffle).
-
-    ``new_uniq`` takes the batch ALREADY exact-deduped (and persisted)
-    so a job deduping one batch against several references pays the
-    exact-dedup shuffle once; ``within_drop`` likewise takes a
-    precomputed :func:`within_batch_drop` result for the same batch
-    (requires ``within_batch=True``) so the within-batch candidate
-    self-join and shingle verify run once, not once per reference.
+    KEEP the near-duplicate, so any such candidate raises instead. The
+    check rides the same pass — an ``Observation`` on the checkpoint
+    counts the batch docs flagged with an uncovered candidate; only
+    the raising path runs extra jobs (the distinct counts of its
+    message).
     """
     if within_drop is not None and not within_batch:
         raise ValueError("within_drop requires within_batch=True")
-    if new_uniq is not None:
-        uniq = new_uniq
-    else:
-        uniq = (exact_dedup(new_df, text_column, id_column)
-                if within_batch else new_df)
-        uniq = uniq.persist()
-        if not (within_batch and within_drop is None):
-            # the within-batch verify's shingle count is the safe
-            # single-reference cache fill (r12); without it the first
-            # scan would be the final action's concurrent references,
-            # so materialize eagerly as before
-            uniq.count()
-    sigs_new = (new_sigs if new_sigs is not None
-                else minhash_signatures(uniq, text_column, num_hashes,
-                                        shingle_k))
+    uniq = new_uniq if new_uniq is not None else (
+        exact_dedup(new_df, text_column, id_column) if within_batch
+        else new_df)
+    cols = uniq.columns
+    if new_sigs is None:
+        uniq = new_sigs = minhash_signatures(uniq, text_column, num_hashes,
+                                             shingle_k)
+    if uniq is not new_uniq:
+        uniq.persist()
     if new_bands is not None:
         _check_band_table(new_bands, num_bands, num_hashes, "new_bands")
         bn = new_bands
     else:
-        bn = band_signatures(sigs_new, id_column, num_bands, num_hashes)
-        bn = bn.persist()
-        bn.count()
+        bn = band_signatures(new_sigs, id_column, num_bands, num_hashes)
     if reference_bands is not None:
         _check_band_table(reference_bands, num_bands, num_hashes,
                           "reference_bands")
@@ -558,73 +594,41 @@ def incremental_dedup(new_df: DataFrame, reference_sigs: DataFrame,
     else:
         br = band_signatures(reference_sigs, id_column, num_bands,
                              num_hashes)
-    if max_bucket_size is not None:
-        ok = (
-            br.groupBy("band", "band_hash").count()
-            .filter(F.col("count") <= max_bucket_size)
-            .select("band", "band_hash")
-        )
-        br = br.join(ok, ["band", "band_hash"], "left_semi")
-    cross = (
-        bn.select(F.col(id_column).alias("id_b"), "band", "band_hash")
-        .join(br.select(F.col(id_column).alias("id_a"), "band", "band_hash"),
-              ["band", "band_hash"])
-        .select("id_a", "id_b")
-        .distinct()
-        .persist()
-    )
-    cross.count()
-    sh_a = (
-        reference_df
-        .join(cross.select(F.col("id_a").alias(id_column)).distinct(),
-              id_column, "left_semi")
-        .select(F.col(id_column).alias("id_a"),
-                shingles(text_column, shingle_k).alias("sh_a"))
-    )
+    pairs, cands = _batch_pairs(
+        uniq, bn, text_column, id_column, shingle_k, threshold,
+        max_bucket_size, br, reference_df,
+        within=within_batch and within_drop is None)
+    flags = pairs.select(F.col("id_b").alias(id_column), "dropped",
+                         "missing")
+    if within_drop is not None:
+        flags = flags.unionByName(within_drop.select(
+            id_column, F.lit(True).alias("dropped"),
+            F.lit(False).alias("missing")))
+    # one row per batch doc with a candidate: bounded by the batch
+    per_doc = flags.groupBy(id_column).agg(
+        F.max("dropped").alias("__dropped"),
+        F.max("missing").alias("__missing"))
+    marked = uniq.join(F.broadcast(per_doc), id_column, "left")
     if require_reference_coverage:
-        # both sides are candidate-bounded: `cross` is persisted above
-        # and sh_a is the candidate-pruned reference slice — persisting
-        # it here also saves the verify join its recompute
-        sh_a = sh_a.persist()
-        n_cand_ref = cross.select("id_a").distinct().count()
-        n_covered = sh_a.select("id_a").distinct().count()
-        if n_covered < n_cand_ref:
-            raise ValueError(
-                f"reference_df lacks the text of "
-                f"{n_cand_ref - n_covered} of {n_cand_ref} candidate "
-                f"reference id(s); their near-duplicates in the new "
-                f"batch would silently be KEPT. Pass the accumulated "
-                f"corpus (every committed id), or set "
-                f"require_reference_coverage=False to accept the gap.")
-    sh_b = (
-        uniq
-        .join(cross.select(F.col("id_b").alias(id_column)).distinct(),
-              id_column, "left_semi")
-        .select(F.col(id_column).alias("id_b"),
-                shingles(text_column, shingle_k).alias("sh_b"))
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    vs_ref = (
-        cross.join(sh_a, "id_a").join(sh_b, "id_b")
-        .withColumn("jaccard",
-                    F.when(union > 0, inter / union).otherwise(0.0))
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("id_b").alias(id_column))
-        .distinct()
-    )
-    survivors = uniq.join(vs_ref, id_column, "left_anti")
-    if within_batch:
-        # reuse bn — the locally computed (and persisted) band table when
-        # new_bands was not supplied; passing new_bands here would re-band
-        # and re-persist the batch signatures in that case (ADVICE r5)
-        wb_drop = (within_drop if within_drop is not None
-                   else within_batch_drop(
-                       uniq, sigs_new, text_column, id_column,
-                       num_hashes, num_bands, shingle_k, threshold,
-                       max_bucket_size=max_bucket_size, bands=bn))
-        survivors = survivors.join(wb_drop, id_column, "left_anti")
-    return survivors
+        obs = Observation()
+        marked = marked.observe(
+            obs, F.count(F.when(F.col("__missing"), 1)).alias("n"))
+    marked = marked.localCheckpoint()
+    cands.unpersist()
+    if uniq is not new_uniq:
+        uniq.unpersist()
+    if require_reference_coverage and obs.get["n"]:
+        ref_pairs = pairs.filter("ref")
+        raise ValueError(
+            f"reference_df lacks the text of "
+            f"{ref_pairs.filter('missing').select('id_a').distinct().count()}"
+            f" of {ref_pairs.select('id_a').distinct().count()} candidate "
+            f"reference id(s); their near-duplicates in the new batch "
+            f"would silently be KEPT. Pass the accumulated corpus (every "
+            f"committed id), or set require_reference_coverage=False to "
+            f"accept the gap.")
+    return (marked.filter(~F.coalesce(F.col("__dropped"), F.lit(False)))
+            .select(*cols))
 
 
 def dedup_paragraphs(df: DataFrame, text_column: str = "text",

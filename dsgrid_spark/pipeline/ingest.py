@@ -153,8 +153,6 @@ def ingest_batch(store, corpus_id: str, batch: DataFrame,
         num_hashes=num_hashes, num_bands=num_bands, shingle_k=shingle_k,
         threshold=threshold,
     )
-    survivors = survivors.persist()
-    survivors.count()
     new_sigs = minhash_signatures(
         survivors, text_column, num_hashes, shingle_k
     ).select(id_column, "minhash")

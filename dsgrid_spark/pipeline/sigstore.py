@@ -47,7 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dsgrid_spark.pipeline import indexlog
-from dsgrid_spark.pipeline.dedup import incremental_dedup, minhash_signatures
+from dsgrid_spark.pipeline.dedup import (exact_dedup, incremental_dedup,
+                                         minhash_signatures)
 
 __all__ = [
     "write_sig_store",
@@ -173,8 +174,12 @@ def read_corpus(spark: SparkSession, path: str, corpus_path: str,
     """The accumulated corpus rows of COMMITTED batches — the
     ``reference_df`` a store-managed ingest loop uses (``path`` is the
     signature store whose log governs visibility; ``as_of`` pins as in
-    :func:`read_sig_store`)."""
+    :func:`read_sig_store`). A compaction moves batches' signatures
+    into its compacted batch but leaves their corpus rows where they
+    landed, so the read also takes every batch retired, transitively,
+    into a visible one."""
     ids = indexlog.resolve_batches(spark, path, as_of)
+    ids |= indexlog._retired(ids, indexlog._replacements(spark, path))
     return (spark.read.parquet(corpus_path)
             .filter(F.col("batch").isin(sorted(ids))).drop("batch"))
 
@@ -279,48 +284,46 @@ def ingest_dedup_batch(new_df: DataFrame, path: str,
                        corpus_path: str | None = None) -> DataFrame:
     """Dedup one incoming batch against the persisted store and
     register the survivors' signatures — the crash-safe continuous-
-    ingest step.
+    ingest step: :func:`incremental_dedup` with the store's committed
+    signatures as the reference side (``reference_df`` supplies corpus
+    TEXT for candidate verification only), then an exactly-once append
+    of the SURVIVORS' signatures under ``batch_id``. Returns the
+    surviving rows of ``new_df``.
 
-    Runs :func:`incremental_dedup` with the store's committed
-    signatures as the reference side (``reference_df`` supplies the
-    corpus TEXT for candidate verification only, semi-join-pruned to
-    candidates as usual), appends the SURVIVORS' signatures
-    exactly-once under ``batch_id``, and returns the surviving rows of
-    ``new_df``.
+    One signing pass: the exact-deduped batch is signed once with the
+    store's params and cached with its ``minhash`` column; banding, the
+    verify join, the corpus swap and the signature append all read
+    that one table. The dedup is one fused plan (one candidate table,
+    one verify join, one ``localCheckpoint`` of the survivors), and
+    that checkpoint is all the call leaves cached.
 
     ``reference_df`` MUST cover the text of EVERY committed id in the
-    store, not just the original seed corpus: the verification join
-    looks candidate texts up by id, and a candidate whose reference
-    text is absent cannot be verified — the near-duplicate would be
-    KEPT. By default (``require_reference_coverage=True``) any
-    candidate reference id missing from ``reference_df`` now raises
-    (a candidate-bounded count, no extra corpus shuffle) instead of
-    degrading silently. In a continuous-ingest loop pass the
-    accumulated corpus (or any superset table keyed by id); a
-    reference scoped to the seed quietly stops deduping against later
-    batches' survivors.
+    store, not just the seed corpus: a candidate whose reference text
+    is absent cannot be verified, so its near-duplicate would be KEPT.
+    By default (``require_reference_coverage=True``) such a candidate
+    raises instead; the check is counted while the survivors
+    materialize (no extra corpus scan) and raises before the corpus
+    swap or the signature append writes anything. In a
+    continuous-ingest loop pass the accumulated corpus (or any superset
+    table keyed by id).
 
-    ``corpus_path`` makes the loop TURNKEY: the store manages the
-    accumulated corpus itself. Each batch's surviving rows (all
-    columns) are written under ``<corpus_path>/batch=<id>`` BEFORE the
-    signature commit — visible exactly when the batch's signatures
-    are, rewritten by crashed-attempt retries — and when
-    ``reference_df`` is omitted, the reference becomes the committed
-    corpus read (:func:`read_corpus`), which by construction covers
-    every committed id: the coverage foot-gun is designed out rather
-    than guarded. Seed it at build time
-    (``write_sig_store(..., corpus_path=...)``).
+    ``corpus_path`` makes the loop TURNKEY: each batch's surviving rows
+    (all columns) land under ``<corpus_path>/batch=<id>`` BEFORE the
+    signature commit — visible exactly when its signatures are,
+    rewritten by crashed-attempt retries — and with ``reference_df``
+    omitted the reference is the committed corpus read
+    (:func:`read_corpus`), which covers every committed id, compacted
+    batches included. Seed it with ``write_sig_store(...,
+    corpus_path=...)``.
 
-    Crash/replay contract: if ``batch_id`` already committed, nothing
-    is recomputed or re-registered — the survivor set is recovered
-    from the store itself (the batch's registered ids ARE the
-    survivors) via one batch-pruned id scan, so a re-run returns the
-    identical rows. If a previous attempt crashed mid-append, the
-    retry recomputes against the UNCHANGED committed state (the
-    crashed batch was never visible to readers), deletes its orphan
-    directories, and lands the same survivors. Signature params come
-    from the store's meta; ``num_bands``/``threshold`` stay per-run
-    knobs (banding happens at read time).
+    Crash/replay contract: a ``batch_id`` already committed recomputes
+    and registers nothing — the survivors are recovered from the store
+    (the batch's registered ids ARE the survivors) by one batch-pruned
+    id scan. A retry after a crash mid-append recomputes against the
+    UNCHANGED committed state (the crashed batch was never visible),
+    deletes its orphan directories and lands the same survivors.
+    Signature params come from the store's meta; ``num_bands`` and
+    ``threshold`` stay per-run knobs (banding happens at read time).
     """
     spark = new_df.sparkSession
     if reference_df is None and corpus_path is None:
@@ -350,44 +353,34 @@ def ingest_dedup_batch(new_df: DataFrame, path: str,
     if reference_df is None:
         reference_df = read_corpus(spark, path, corpus_path)
     ref_sigs = read_sig_store(spark, path, id_column)
-    new_sigs = minhash_signatures(
-        new_df, text_column, num_hashes=int(params["num_hashes"]),
-        shingle_k=int(params["shingle_k"]), seed=int(params["seed"]))
-    survivors = incremental_dedup(
-        new_df, ref_sigs, reference_df, text_column, id_column,
-        num_hashes=int(params["num_hashes"]), num_bands=num_bands,
-        shingle_k=int(params["shingle_k"]), threshold=threshold,
-        within_batch=within_batch, new_sigs=new_sigs,
-        max_bucket_size=max_bucket_size,
-        require_reference_coverage=require_reference_coverage)
-    # materialize the survivor set once: the append below and the
-    # caller's consumption must see the SAME rows, and the append
-    # re-reads it
-    survivors = survivors.localCheckpoint()
+    cols = new_df.columns
+    signed = minhash_signatures(
+        exact_dedup(new_df, text_column, id_column) if within_batch
+        else new_df, text_column, num_hashes=int(params["num_hashes"]),
+        shingle_k=int(params["shingle_k"]),
+        seed=int(params["seed"])).persist()
+    try:
+        survivors = incremental_dedup(
+            new_df, ref_sigs, reference_df, text_column, id_column,
+            num_hashes=int(params["num_hashes"]), num_bands=num_bands,
+            shingle_k=int(params["shingle_k"]), threshold=threshold,
+            within_batch=within_batch, new_sigs=signed, new_uniq=signed,
+            max_bucket_size=max_bucket_size,
+            require_reference_coverage=require_reference_coverage)
+    finally:
+        signed.unpersist()
     if corpus_path is not None:
         # corpus rows land BEFORE the commit (retry deletes+rewrites);
         # readers filter to committed batches, so they flip atomically
-        # with the signatures at the log write below. The swap runs as
-        # TEMP WRITE -> RE-CHECK -> RENAME -> RE-CHECK so a racing
-        # writer that committed this id DURING our dedup keeps its
-        # corpus text: the expensive Spark write happens off to the
-        # side, the committed-set re-check happens immediately before
-        # the one-FS-op rename (so a commit during OUR write is seen),
-        # and a commit landing inside the rename window itself is
-        # caught by the post-swap re-check, which removes only OUR
-        # artifacts before failing loudly. The real discipline remains
-        # one writer per batch id (checkpoint-derived stream ids give
-        # that for free); this closes the r10 advice residue where the
-        # loser's delete+rewrite replaced the winner's committed
-        # reference texts.
-        _swap_corpus_batch(spark, path, corpus_path, survivors, batch_id)
-    # ONE signing pass serves dedup and registration: the batch's
-    # signature table sliced to the survivor ids (extra signatures of
-    # dropped rows never reach the store)
-    ok = append_sig_store(
-        survivors, path, text_column, id_column, batch_id=batch_id,
-        signatures=new_sigs.join(
-            survivors.select(id_column), id_column, "left_semi"))
+        # with the signatures at the log write below. The swap (temp
+        # write, re-check, rename, re-check) keeps the text of a racing
+        # writer that committed this id during our dedup; the rule is
+        # still one writer per batch id (stream ids give that).
+        _swap_corpus_batch(spark, path, corpus_path,
+                           survivors.select(*cols), batch_id)
+    # the survivors carry their signatures: registration re-signs nothing
+    ok = append_sig_store(survivors, path, text_column, id_column,
+                          batch_id=batch_id, signatures=survivors)
     if not ok:
         # another writer committed this id between our batch_sets
         # snapshot and the append — a REAL exception, not an assert
@@ -397,4 +390,4 @@ def ingest_dedup_batch(new_df: DataFrame, path: str,
             f"batch {batch_id!r} was committed by another writer "
             f"mid-ingest; these survivors were NOT registered — "
             f"re-run under a fresh batch id")
-    return survivors
+    return survivors.select(*cols)

@@ -832,9 +832,35 @@ def test_mixture_sample_targets_binding_group_and_determinism(spark):
            {r["doc_id"] for r in out2.collect()}
 
 
-def test_incremental_dedup_equals_full_restricted(spark):
+# exact duplicates of a reference doc and (after normalization) of a
+# batch doc: exact dedup must collapse them before the near-dup pass
+_EXACT_DUPS = [
+    (14, "one two three four five six seven eight nine ten"),
+    (15, "Spark catalyst, tungsten shuffle broadcast partition codegen "
+         "adaptive skew salt!"),
+]
+
+
+@pytest.mark.parametrize("path,within_batch,max_bucket_size,extra", [
+    ("dataframe", True, None, []),
+    ("store", True, None, []),
+    ("store", True, None, _EXACT_DUPS),
+    ("store", False, None, []),
+    ("store", True, 2, []),
+], ids=["dataframe", "store", "store-exact-dups", "store-no-within",
+        "store-bucket-cap"])
+def test_incremental_dedup_equals_full_restricted(
+        spark, tmp_path, path, within_batch, max_bucket_size, extra):
+    """incremental_dedup, directly or through the store-managed
+    ingest_dedup_batch(corpus_path=...), keeps exactly what full-corpus
+    minhash_dedup keeps among the batch ids (per batch doc when
+    within_batch=False: the batch is then not deduped against itself),
+    and the store registers the survivors' own signatures."""
     from dsgrid_spark.pipeline.dedup import (
         incremental_dedup, minhash_dedup, minhash_signatures,
+    )
+    from dsgrid_spark.pipeline.sigstore import (
+        ingest_dedup_batch, read_sig_store, write_sig_store,
     )
 
     base = [
@@ -851,20 +877,45 @@ def test_incremental_dedup_equals_full_restricted(spark):
         (12, "spark catalyst tungsten shuffle broadcast partition codegen adaptive skew salt"),
         # near-dup within batch of 11
         (13, "spark catalyst tungsten shuffle broadcast partition codegen adaptive skew SALTY"),
-    ]
+    ] + extra
     ref = spark.createDataFrame(base, "doc_id long, text string")
     new = spark.createDataFrame(batch, "doc_id long, text string")
-    ref_sigs = minhash_signatures(ref, num_hashes=64, shingle_k=3)
-    out = incremental_dedup(new, ref_sigs, ref, num_hashes=64, num_bands=32,
-                            shingle_k=3, threshold=0.5)
+    knobs = dict(num_bands=32, threshold=0.5,
+                 max_bucket_size=max_bucket_size)
+    if path == "dataframe":
+        ref_sigs = minhash_signatures(ref, num_hashes=64, shingle_k=3)
+        out = incremental_dedup(new, ref_sigs, ref, num_hashes=64,
+                                shingle_k=3, within_batch=within_batch,
+                                **knobs)
+    else:
+        store, corpus = str(tmp_path / "sigs"), str(tmp_path / "corpus")
+        write_sig_store(ref, store, num_hashes=64, shingle_k=3,
+                        n_shards=2, corpus_path=corpus)
+        out = ingest_dedup_batch(new, store, batch_id="b1",
+                                 corpus_path=corpus,
+                                 within_batch=within_batch, **knobs)
     kept = sorted(r["doc_id"] for r in out.collect())
-    assert kept == [11]
+    assert kept == ([11] if within_batch else [11, 12, 13])
 
     # equivalence: full-corpus dedup restricted to batch ids
-    full = minhash_dedup(ref.unionByName(new), num_hashes=64, num_bands=32,
-                         shingle_k=3, threshold=0.5)
-    full_kept = sorted(r["doc_id"] for r in full.collect() if r["doc_id"] >= 10)
-    assert kept == full_kept
+    def full_kept(docs):
+        full = minhash_dedup(ref.unionByName(docs), num_hashes=64,
+                             shingle_k=3, **knobs)
+        return [r["doc_id"] for r in full.collect() if r["doc_id"] >= 10]
+
+    if within_batch:
+        assert kept == sorted(full_kept(new))
+    else:
+        assert kept == sorted(
+            i for i, _ in batch
+            if full_kept(new.filter(F.col("doc_id") == i)) == [i])
+    if path == "store":
+        stored = sorted(map(tuple, read_sig_store(spark, store)
+                            .filter(F.col("doc_id") >= 10).collect()))
+        signed = sorted(map(tuple, minhash_signatures(
+            out, num_hashes=64, shingle_k=3)
+            .select("doc_id", "minhash").collect()))
+        assert stored == signed
 
 
 def test_top_terms_tfidf_and_integer_ordering(spark):

@@ -1,8 +1,9 @@
 """Round-11 additions: DataFrame-query BM25/hybrid with one-job batch
 analysis, the append-vs-rebalance generation guard, enforced
 append-blocking rebalances, legacy flat-centroid migration, the
-codebook-retrain tier, the recall-proxy drift gate, and the sigstore
-corpus-swap hardening (r10 VERDICT next-round items 1-6 + ADVICE)."""
+codebook-retrain tier and the recall-proxy drift gate (r10 VERDICT
+next-round items 1-6 + ADVICE). The sigstore corpus-swap tests live in
+test_sigstore.py."""
 
 from __future__ import annotations
 
@@ -587,77 +588,6 @@ def test_assignment_drift_validation(spark, tmp_path):
     # healthy index: the gate declines to rebalance
     assert rebalance_if_drifted(spark, path, max_distortion_ratio=5.0,
                                 sample=64) is None
-
-
-# ---------------------------------------------------------------------------
-# Sigstore corpus swap (ADVICE item 4)
-# ---------------------------------------------------------------------------
-
-def test_sigstore_corpus_swap_preserves_committed_texts(spark, tmp_path):
-    """The corpus write never clobbers a RACING WRITER'S committed
-    reference text: once the batch id is committed elsewhere, the swap
-    raises ConcurrentBatchError and the committed corpus rows are
-    byte-identical afterwards (r10 ADVICE: the delete+rewrite window)."""
-    from dsgrid_spark.pipeline.sigstore import (ConcurrentBatchError,
-                                                _swap_corpus_batch,
-                                                ingest_dedup_batch,
-                                                read_corpus,
-                                                write_sig_store)
-
-    store = str(tmp_path / "sigs")
-    corpus = str(tmp_path / "corpus")
-    seed = spark.createDataFrame(
-        [(0, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string")
-    write_sig_store(seed, store, num_hashes=8, shingle_k=2, n_shards=2,
-                    corpus_path=corpus)
-    winner = spark.createDataFrame(
-        [(1, "a completely different committed document text")],
-        "doc_id long, text string")
-    ingest_dedup_batch(winner, store, batch_id="b1", corpus_path=corpus)
-    committed_rows = sorted(map(tuple, read_corpus(
-        spark, store, corpus).collect()))
-
-    loser = spark.createDataFrame(
-        [(2, "the loser's text that must never replace the winner's")],
-        "doc_id long, text string")
-    with pytest.raises(ConcurrentBatchError, match="committed"):
-        _swap_corpus_batch(spark, store, corpus, loser, "b1")
-    assert sorted(map(tuple, read_corpus(
-        spark, store, corpus).collect())) == committed_rows
-    # no temp debris left behind
-    assert [e for e in os.listdir(corpus) if e.startswith("_tmp.")] == []
-
-
-def test_ingest_dedup_batch_still_roundtrips_with_swap(spark, tmp_path):
-    """The rename-based corpus swap preserves the turnkey loop's
-    semantics: survivors land, replay recovers them, corpus text reads
-    back committed-filtered."""
-    from dsgrid_spark.pipeline.sigstore import (ingest_dedup_batch,
-                                                read_corpus,
-                                                write_sig_store)
-
-    store = str(tmp_path / "sigs2")
-    corpus = str(tmp_path / "corpus2")
-    seed = spark.createDataFrame(
-        [(0, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string")
-    write_sig_store(seed, store, num_hashes=8, shingle_k=2, n_shards=2,
-                    corpus_path=corpus)
-    batch = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta"),  # dup
-         (2, "iota kappa lambda mu nu xi omicron pi rho")],
-        "doc_id long, text string")
-    survivors = ingest_dedup_batch(batch, store, batch_id="d1",
-                                   corpus_path=corpus, threshold=0.5)
-    ids = {r["doc_id"] for r in survivors.collect()}
-    assert ids == {2}
-    replay = ingest_dedup_batch(batch, store, batch_id="d1",
-                                corpus_path=corpus, threshold=0.5)
-    assert {r["doc_id"] for r in replay.collect()} == ids
-    texts = {r["doc_id"]: r["text"]
-             for r in read_corpus(spark, store, corpus).collect()}
-    assert set(texts) == {0, 2}
 
 
 def test_cli_describe_drift_and_rebalance_flags(spark, tmp_path, capsys):
