@@ -530,12 +530,12 @@ def _parse_candidates(spark, spec: str | None):
     path_shaped = ("://" in spec or os.sep in spec
                    or spec.endswith(".parquet"))
     if path_shaped:
-        # existence probed through the Hadoop FileSystem API, so
+        # existence probed through the filesystem interface, so
         # s3://, hdfs://, etc. work like every other index operation —
         # a driver-local os.path.exists would reject any remote path
-        jp = spark._jvm.org.apache.hadoop.fs.Path(spec)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jp):
+        from dsgrid_spark.filesystem import filesystem_for
+
+        if filesystem_for(spark, spec).exists(spec):
             return spark.read.parquet(spec)
         # path-shaped but absent: fail loudly — treating a typo'd path
         # as a one-string id list would "succeed" with zero results
@@ -653,32 +653,27 @@ def cmd_index_describe(args) -> int:
         # legacy flat layout; the establisher's id otherwise)
         out["centroid_generation"] = indexlog.resolve_generation(
             spark, args.path, visible)
+    from dsgrid_spark.filesystem import filesystem_for
+
+    fs = filesystem_for(spark, args.path)
     meta_sub = "stats" if kind == "term" else "meta"
     try:
-        out["meta"] = (spark.read.parquet(f"{args.path}/{meta_sub}")
-                       .collect()[0].asDict())
+        out["meta"] = fs.read_rows(f"{args.path}/{meta_sub}")[0]
     except Exception:
         out["meta"] = None
-    log = spark.read.parquet(f"{args.path}/batches")
-    metric_cols = [c for c in log.columns
+    metric_cols = [c for c in fs.read_rows(f"{args.path}/batches")[0]
                    if c not in ("batch", "committed", "committed_at_ms")]
     out["totals"] = indexlog.logged_totals(spark, args.path,
                                            *metric_cols)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     subs = {}
     for sub, col in sorted(indexlog.payload_subdirs(spark,
                                                     args.path).items()):
-        jp = jvm.org.apache.hadoop.fs.Path(f"{args.path}/{sub}")
-        fs = jp.getFileSystem(conf)
-        cs = fs.getContentSummary(jp)
-        bglob = jvm.org.apache.hadoop.fs.Path(
-            f"{args.path}/{sub}/*/batch=*")
+        files = fs.list_sizes(f"{args.path}/{sub}")
         info = {
             "partition_column": col,
-            "batch_dirs": len(list(fs.globStatus(bglob) or [])),
-            "files": int(cs.getFileCount()),
-            "bytes": int(cs.getLength()),
+            "batch_dirs": len(fs.glob(f"{args.path}/{sub}/*/batch=*")),
+            "files": len(files),
+            "bytes": sum(sz for _, sz in files),
         }
         if args.counts:
             info["committed_rows"] = indexlog.read_committed(

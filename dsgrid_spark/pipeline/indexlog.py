@@ -36,9 +36,10 @@ the marker, the log-size-derived id would drift and the crashed
 attempt's orphans would never be cleaned. The marker is removed when
 the batch commits.
 
-Partition deletion goes through the Hadoop FileSystem API (via the
-JVM gateway), so it works on any Spark-supported filesystem, not just
-``file://``.
+Every listing, deletion, lock and metadata-row read or write goes
+through ``dsgrid_spark.filesystem`` (:func:`filesystem_for`), so the
+protocol runs on any Spark-supported filesystem, and one interface is
+all a fault-injecting wrapper has to cover.
 
 COMPACTION (:func:`compact`) merges many small committed batch
 directories into one coalesced batch — the antidote to the small-files
@@ -68,6 +69,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from dsgrid_spark.filesystem import break_marker, filesystem_for
 
 _BATCH_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
@@ -146,217 +149,6 @@ def check_batch_id(batch_id: str) -> str:
     return batch_id
 
 
-def delete_glob(spark: SparkSession, pattern: str) -> int:
-    """Recursively delete every path matching a Hadoop glob; returns the
-    number of paths removed (0 when nothing matched)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    matches = fs.globStatus(jpath)
-    n = 0
-    for st in (matches or []):
-        fs.delete(st.getPath(), True)
-        n += 1
-    return n
-
-
-# ---------------------------------------------------------------------------
-# Driver-side metadata IO (r13, guide §5/§1.2): every batch-log row,
-# meta/stats row and committed-set resolution used to be a full Spark
-# job — a 1-task parquet write with the whole FileSource commit protocol
-# (temp dir, task file, rename, _SUCCESS), or a 1-2-task scan+collect —
-# measured 0.15-0.5 s EACH on local[32], times 2-4 per index build and
-# 2 per search call (q32 'bdf': 1.25 s of its 2.7 s warm path; q30
-# 'store' pays the same around its sigstore build). These files are
-# driver-bounded BY CONSTRUCTION (one row per batch / one meta row), so
-# the driver reads and writes them directly with pyarrow when the index
-# lives on the local filesystem, and falls back to the Spark path
-# verbatim on any other scheme (hdfs/s3a keep the cluster-FS story).
-# Atomicity matches the Spark writer: appends land as a hidden temp
-# file renamed into place (readers never see a partial file);
-# overwrites build a sibling temp dir and swap.
-
-_DEFAULT_FS_CACHE: dict[int, str] = {}
-
-
-def _meta_local_dir(spark: SparkSession, path: str) -> str | None:
-    """Local-filesystem directory for ``path`` when it resolves to the
-    local FS (explicit ``file:`` scheme, or no scheme under a ``file:``
-    default FS), else None — the driver-side metadata fast path only
-    applies where the driver can touch the files directly."""
-    from urllib.parse import urlparse
-    u = urlparse(path)
-    if u.scheme == "file":
-        return u.path
-    if u.scheme:
-        return None
-    key = id(spark._jsc)
-    fsdef = _DEFAULT_FS_CACHE.get(key)
-    if fsdef is None:
-        try:
-            fsdef = spark._jsc.hadoopConfiguration().get(
-                "fs.defaultFS", "file:///")
-        except Exception:
-            return None
-        _DEFAULT_FS_CACHE[key] = fsdef
-    return path if fsdef.startswith("file:") else None
-
-
-def _partition_value(raw: str):
-    """Spark-style partition-value inference (int, then double, else
-    string) for the one hive level metadata dirs carry (``batch=<id>``,
-    ``by=<id>``). Batch ids are ``[A-Za-z0-9._-]`` by check_batch_id,
-    so no unescaping is needed."""
-    try:
-        return int(raw)
-    except ValueError:
-        pass
-    try:
-        return float(raw)
-    except ValueError:
-        return raw
-
-
-def read_meta_rows(spark: SparkSession, dirpath: str):
-    """Driver-side read of a SMALL parquet metadata directory: the
-    batch log (one row per batch), the compaction log, meta/stats rows.
-
-    Returns a list of dicts (hive ``k=v`` partition levels resolved
-    like Spark resolves them, keys normalized across files with missing
-    columns read as None — the ``mergeSchema`` behavior the log readers
-    rely on), or None when the path is not on the local filesystem
-    (callers fall back to ``spark.read``). Raises FileNotFoundError
-    when the directory is missing or holds no data files, mirroring
-    spark.read.parquet's analysis error so existing try/except call
-    sites keep their semantics. NOT for data-scale tables — postings/
-    sigs/codebooks stay on the scan path."""
-    loc = _meta_local_dir(spark, dirpath)
-    if loc is None:
-        return None
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    rows: list[dict] = []
-    n_files = 0
-
-    def _walk(d: str, extra: dict) -> None:
-        nonlocal n_files
-        for name in sorted(_os.listdir(d)):
-            if name.startswith((".", "_")):
-                continue
-            p = _os.path.join(d, name)
-            if _os.path.isdir(p):
-                if "=" in name:
-                    k, _, v = name.partition("=")
-                    _walk(p, {**extra, k: _partition_value(v)})
-                continue
-            if not name.endswith(".parquet"):
-                continue
-            n_files += 1
-            for r in _pq.read_table(p).to_pylist():
-                r.update(extra)
-                rows.append(r)
-
-    if not _os.path.isdir(loc):
-        raise FileNotFoundError(dirpath)
-    _walk(loc, {})
-    if n_files == 0:
-        raise FileNotFoundError(f"no parquet data files under {dirpath}")
-    keys = set()
-    for r in rows:
-        keys.update(r)
-    for r in rows:
-        for k in keys - r.keys():
-            r[k] = None
-    return rows
-
-
-def _pa_schema(schema_ddl: str):
-    """pyarrow schema for a DDL of scalar (or array-of-scalar) fields,
-    or None when a type has no mapping (caller falls back to the Spark
-    writer)."""
-    import pyarrow as pa
-    from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
-                                   ByteType, DoubleType, FloatType,
-                                   IntegerType, LongType, ShortType,
-                                   StringType, StructType)
-    try:
-        st = StructType.fromDDL(schema_ddl)
-    except Exception:
-        return None
-    mapping = {LongType: pa.int64(), IntegerType: pa.int32(),
-               ShortType: pa.int16(), ByteType: pa.int8(),
-               DoubleType: pa.float64(), FloatType: pa.float32(),
-               StringType: pa.string(), BooleanType: pa.bool_(),
-               BinaryType: pa.binary()}
-    fields = []
-    for f in st.fields:
-        dt = f.dataType
-        if isinstance(dt, ArrayType):
-            inner = mapping.get(type(dt.elementType))
-            t = pa.list_(inner) if inner is not None else None
-        else:
-            t = mapping.get(type(dt))
-        if t is None:
-            return None
-        fields.append(pa.field(f.name, t))
-    return pa.schema(fields)
-
-
-def write_meta_rows(spark: SparkSession, dirpath: str, rows,
-                    schema_ddl: str,
-                    partition: tuple[str, str] | None = None) -> bool:
-    """Driver-side parquet write of a BOUNDED metadata row set; returns
-    False when the fast path doesn't apply (non-local FS, unmappable
-    type) and the caller must run the Spark write it replaces.
-
-    ``partition=None``: overwrite ``dirpath`` (sibling temp dir built
-    first, then swapped — the same not-yet-visible-until-complete
-    window the Spark overwrite has). ``partition=(col, value)``: append
-    one ``<dirpath>/<col>=<value>/`` partition directory, written as a
-    hidden temp file renamed into place so readers never observe a
-    partial file — the partition column stays in the directory name
-    only, exactly as ``partitionBy`` writes it."""
-    loc = _meta_local_dir(spark, dirpath)
-    if loc is None:
-        return False
-    schema = _pa_schema(schema_ddl)
-    if schema is None:
-        return False
-    import os as _os
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as _pq
-
-    rows = [tuple(r) for r in rows]
-    try:
-        cols = {f.name: pa.array([r[i] for r in rows], type=f.type)
-                for i, f in enumerate(schema)}
-    except (pa.ArrowInvalid, pa.ArrowTypeError, IndexError):
-        return False
-    table = pa.table(cols, schema=schema)
-    token = _uuid.uuid4().hex[:12]
-    if partition is not None:
-        col, value = partition
-        pdir = _os.path.join(loc, f"{col}={value}")
-        _os.makedirs(pdir, exist_ok=True)
-        tmp = _os.path.join(pdir, f".part-{token}.parquet.tmp")
-        _pq.write_table(table, tmp, compression="snappy")
-        _os.rename(tmp, _os.path.join(pdir, f"part-00000-{token}.parquet"))
-        return True
-    tmpdir = f"{loc}__tmp_{token}"
-    _os.makedirs(tmpdir)
-    _pq.write_table(table, _os.path.join(tmpdir, f"part-00000-{token}.parquet"),
-                    compression="snappy")
-    if _os.path.isdir(loc):
-        import shutil as _shutil
-        _shutil.rmtree(loc)
-    _os.rename(tmpdir, loc)
-    return True
-
-
 def _log_path(index_path: str) -> str:
     return f"{index_path}/batches"
 
@@ -370,39 +162,20 @@ def _raw_logged(spark: SparkSession, index_path: str) -> set[str]:
     replaced by a committed compaction (internal; readers want
     :func:`committed_batches`)."""
     try:
-        rows = read_meta_rows(spark, _log_path(index_path))
-        if rows is None:
-            rows = (spark.read.parquet(_log_path(index_path))
-                    .select("batch").distinct().collect())
+        rows = filesystem_for(spark, index_path).read_rows(
+            _log_path(index_path))
     except Exception:
         return set()
     return {r["batch"] for r in rows}
 
 
 def _replacements(spark: SparkSession, index_path: str) -> list[tuple]:
-    """(replaced, by) pairs from the compaction log ([] when none).
-
-    Existence is probed with one FileSystem call first: most indexes
-    are never compacted, and letting the parquet read throw would cost
-    a full analysis failure plus a noisy stack-trace WARN on EVERY
-    committed-batch resolution."""
-    cp = _compactions_path(index_path)
-    loc = _meta_local_dir(spark, cp)
-    if loc is not None:
-        import os as _os
-        if not _os.path.isdir(loc):
-            return []
-        try:
-            rows = read_meta_rows(spark, cp)
-            return [(r["replaced"], r["by"]) for r in rows]
-        except Exception:
-            return []
-    jp = spark._jvm.org.apache.hadoop.fs.Path(cp)
-    if not jp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jp):
-        return []
+    """(replaced, by) pairs from the compaction log ([] when none —
+    most indexes are never compacted, and ``read_rows`` reports the
+    absent log as FileNotFoundError without a Spark analysis error)."""
     try:
-        rows = (spark.read.parquet(cp)
-                .select("replaced", "by").collect())
+        rows = filesystem_for(spark, index_path).read_rows(
+            _compactions_path(index_path))
     except Exception:
         return []
     return [(r["replaced"], r["by"]) for r in rows]
@@ -507,12 +280,9 @@ def resolve_as_of(spark: SparkSession, index_path: str,
     # purge finishes the deletion and this check then fails the pin
     # loudly.
     retired_in_pin = _retired(raw, pairs) & pin
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    fs = filesystem_for(spark, index_path)
     for bid in sorted(retired_in_pin):
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/*/*/batch={bid}")
-        if not list(p.getFileSystem(conf).globStatus(p) or []):
+        if not fs.glob(f"{index_path}/*/*/batch={bid}"):
             raise ValueError(
                 f"as_of batch {bid!r} was replaced and its data has "
                 f"been purged (crashed purge left its log row); the "
@@ -556,12 +326,9 @@ def resolve_timestamp(spark: SparkSession, index_path: str,
     """
     t_ms = _parse_as_of_ms(as_of)
     try:
-        rows = read_meta_rows(spark, _log_path(index_path))
-        if rows is None:
-            rows = (spark.read.option("mergeSchema", "true")
-                    .parquet(_log_path(index_path))
-                    .select("batch", "committed_at_ms").collect())
-        elif rows and "committed_at_ms" not in rows[0]:
+        rows = filesystem_for(spark, index_path).read_rows(
+            _log_path(index_path))
+        if rows and "committed_at_ms" not in rows[0]:
             raise KeyError("committed_at_ms")
     except Exception:
         raise ValueError(
@@ -649,16 +416,11 @@ def log_snapshot(spark: SparkSession, index_path: str,
     if isinstance(as_of, str):
         as_of = resolve_timestamp(spark, index_path, as_of)
     try:
-        rows = read_meta_rows(spark, _log_path(index_path))
-        if rows is None:
-            rows = (spark.read.parquet(_log_path(index_path))
-                    .select("batch", *columns).collect())
-        else:
-            for c in columns:
-                if rows and c not in rows[0]:
-                    # a column absent from EVERY log file — the Spark
-                    # select would throw here too
-                    raise KeyError(c)
+        rows = filesystem_for(spark, index_path).read_rows(
+            _log_path(index_path))
+        for c in columns:
+            if rows and c not in rows[0]:
+                raise KeyError(c)  # absent from EVERY log file
     except Exception:
         if as_of is not None:
             raise ValueError("as_of given but the index has no batch "
@@ -699,11 +461,8 @@ def _intents_path(index_path: str) -> str:
 def open_intents(spark: SparkSession, index_path: str) -> set[str]:
     """Batch ids with an intent marker on disk (reserved, possibly
     in-flight or crashed)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{_intents_path(index_path)}/*")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    matches = fs.globStatus(jpath)
-    return {st.getPath().getName() for st in (matches or [])}
+    return {st.name for st in filesystem_for(spark, index_path).glob(
+        f"{_intents_path(index_path)}/*")}
 
 
 def claim_auto_batch_id(spark: SparkSession, index_path: str,
@@ -738,11 +497,8 @@ def claim_auto_batch_id(spark: SparkSession, index_path: str,
     while f"{prefix}{n:06d}" in taken:
         n += 1
     batch_id = f"{prefix}{n:06d}"
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(
+    filesystem_for(spark, index_path).mkdirs(
         f"{_intents_path(index_path)}/{batch_id}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(jpath)
     return batch_id
 
 
@@ -750,7 +506,8 @@ def clear_intent(spark: SparkSession, index_path: str,
                  batch_id: str) -> None:
     """Drop a batch's intent marker (call after ``log_batch``; a no-op
     for caller-named batches that never claimed one)."""
-    delete_glob(spark, f"{_intents_path(index_path)}/{batch_id}")
+    filesystem_for(spark, index_path).glob_delete(
+        f"{_intents_path(index_path)}/{batch_id}")
 
 
 def _lock_path(index_path: str, name: str) -> str:
@@ -770,92 +527,49 @@ def acquire_compact_lock(spark: SparkSession, index_path: str,
     full copy and readers would then double-count every compacted row —
     the one operational mistake the rest of this module's armor turns
     into silent corruption rather than a loud failure. The lock is an
-    atomic ``createNewFile`` of a well-known marker: exactly one of two
-    racers creates it; the loser raises. A crashed holder's stale lock
-    (mtime older than ``ttl_seconds``, the same contract vacuum uses:
-    the ttl must exceed the longest possible compaction) is broken —
-    via an atomic RENAME to a breaker-unique tombstone, so of two
-    racing breakers exactly one proceeds and the loser can never
-    delete the fresh lock the winner re-created; a lock re-acquired
-    between the staleness stat and the rename is detected by the
-    tombstone's (rename-preserved) mtime and handed straight back.
+    atomic ``create_exclusive`` of a well-known marker (``O_EXCL`` on
+    the local filesystem): exactly one of any number of racers creates
+    it; the losers raise. A crashed holder's stale lock (mtime older
+    than ``ttl_seconds``, the same contract vacuum uses: the ttl must
+    exceed the longest possible compaction) is broken through
+    :func:`dsgrid_spark.filesystem.break_marker` — an atomic RENAME to
+    a breaker-unique tombstone, so of two racing breakers exactly one
+    proceeds and the loser can never delete the fresh lock the winner
+    re-created; a lock re-acquired between the staleness stat and the
+    rename is detected by the tombstone's (rename-preserved) mtime and
+    handed straight back.
     """
     import time as _time
 
-    jvm = spark._jvm
-    lp = jvm.org.apache.hadoop.fs.Path(_lock_path(index_path, name))
-    fs = lp.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(lp.getParent())
-    if fs.createNewFile(lp):
+    fs = filesystem_for(spark, index_path)
+    lp = _lock_path(index_path, name)
+    if fs.create_exclusive(lp, ""):
         return
-    cutoff = _time.time() * 1000.0 - ttl_seconds * 1000.0
-    try:
-        seen = fs.getFileStatus(lp).getModificationTime()
-    except Exception:
+    seen = fs.mtime(lp)
+    if seen is None:
         # holder released between our create and stat: one retry
-        if fs.createNewFile(lp):
+        if fs.create_exclusive(lp, ""):
             return
+        raise ConcurrentCompactionError(f"another compaction holds {lp}")
+    if seen >= _time.time() * 1000.0 - ttl_seconds * 1000.0:
         raise ConcurrentCompactionError(
-            f"another compaction holds {_lock_path(index_path, name)}")
-    if seen >= cutoff:
+            f"another compaction holds {lp} (age under "
+            f"ttl_seconds={ttl_seconds}); if its holder crashed, retry "
+            f"after the ttl or delete the lock")
+    if not break_marker(fs, lp, lambda tomb: fs.mtime(tomb) == seen):
         raise ConcurrentCompactionError(
-            f"another compaction holds {_lock_path(index_path, name)} "
-            f"(age under ttl_seconds={ttl_seconds}); if its holder "
-            f"crashed, retry after the ttl or delete the lock")
-    # stale: break it by RENAMING it to a breaker-unique tombstone —
-    # the rename is the atomic arbitration point, so of two racing
-    # breakers exactly one wins and the loser can never delete the
-    # fresh lock the winner immediately re-creates (check-then-delete
-    # let both proceed). Rename preserves mtime, so the tombstone's
-    # mtime re-check still catches a lock re-acquired between our stat
-    # and our rename — that one is handed straight back.
-    import os as _os
-    tomb = jvm.org.apache.hadoop.fs.Path(
-        f"{_lock_path(index_path, name)}.broken-{_os.getpid()}-"
-        f"{_time.monotonic_ns()}")
-    try:
-        won = fs.rename(lp, tomb)
-    except Exception:
-        won = False
-    if not won:
+            f"lost the race breaking stale lock {lp} (another breaker "
+            f"moved it, or it was re-acquired while being broken)")
+    if not fs.create_exclusive(lp, ""):
         raise ConcurrentCompactionError(
-            f"lost the race breaking stale lock "
-            f"{_lock_path(index_path, name)}")
-    try:
-        t_mtime = fs.getFileStatus(tomb).getModificationTime()
-    except Exception:
-        t_mtime = None
-    if t_mtime != seen:
-        # we displaced a freshly re-acquired LIVE lock: restore it
-        restored = False
-        try:
-            restored = fs.rename(tomb, lp)
-        except Exception:
-            restored = False
-        if not restored:
-            # a THIRD racer re-created lp between our rename and this
-            # restore. The tombstone IS the displaced holder's live
-            # re-acquired lock — deleting it would erase the only
-            # evidence that two compactions may now be interleaved.
-            # Leave it for vacuum to reap: fsck surfaces breaker
-            # tombstones as warnings, so the overlap is visible to an
-            # operator instead of silently swallowed.
-            pass
-        raise ConcurrentCompactionError(
-            f"lock {_lock_path(index_path, name)} was re-acquired "
-            f"while being broken")
-    fs.delete(tomb, False)
-    if not fs.createNewFile(lp):
-        raise ConcurrentCompactionError(
-            f"lost the race re-claiming stale lock "
-            f"{_lock_path(index_path, name)}")
+            f"lost the race re-claiming stale lock {lp}")
 
 
 def release_compact_lock(spark: SparkSession, index_path: str,
                          name: str = "compact") -> None:
     """Drop the single-compactor lock (call in a finally around
     :func:`compact` / rebalance work)."""
-    delete_glob(spark, _lock_path(index_path, name))
+    filesystem_for(spark, index_path).rm_tree(_lock_path(index_path, name))
 
 
 #: the well-known append-block marker's lock name (the ``.lock``
@@ -869,21 +583,19 @@ def block_appends(spark: SparkSession, index_path: str) -> None:
     start AND at its pre-commit check, turning "schedule rebalances
     during quiescence" from an ops convention into an enforced mode
     (``rebalance_index(..., block_appends=True)``). Idempotent; the
-    marker's mtime is refreshed so a leftover stale marker becomes
-    live again for this run."""
-    jvm = spark._jvm
-    lp = jvm.org.apache.hadoop.fs.Path(
-        _lock_path(index_path, APPEND_BLOCK_NAME))
-    fs = lp.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(lp.getParent())
-    fs.delete(lp, False)
-    fs.createNewFile(lp)
+    marker is re-created so a leftover stale marker becomes live again
+    for this run."""
+    fs = filesystem_for(spark, index_path)
+    lp = _lock_path(index_path, APPEND_BLOCK_NAME)
+    fs.rm_tree(lp)
+    fs.create_exclusive(lp, "")
 
 
 def unblock_appends(spark: SparkSession, index_path: str) -> None:
     """Drop the append-block marker (call in a finally around the
     blocking maintenance work)."""
-    delete_glob(spark, _lock_path(index_path, APPEND_BLOCK_NAME))
+    filesystem_for(spark, index_path).rm_tree(
+        _lock_path(index_path, APPEND_BLOCK_NAME))
 
 
 def check_appends_allowed(spark: SparkSession, index_path: str,
@@ -891,17 +603,13 @@ def check_appends_allowed(spark: SparkSession, index_path: str,
     """Raise :class:`AppendsBlockedError` while the append-block marker
     is live (younger than ``ttl_seconds`` — a crashed blocking
     rebalance must not block appends forever; vacuum also reaps the
-    marker under its lock ttl). ONE FileSystem probe — the per-append
+    marker under its lock ttl). ONE filesystem probe — the per-append
     cost of the enforced-quiescence mode."""
     import time as _time
 
-    jvm = spark._jvm
-    lp = jvm.org.apache.hadoop.fs.Path(
+    mtime = filesystem_for(spark, index_path).mtime(
         _lock_path(index_path, APPEND_BLOCK_NAME))
-    fs = lp.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        mtime = fs.getFileStatus(lp).getModificationTime()
-    except Exception:
+    if mtime is None:
         return  # no marker: appends allowed
     if mtime >= _time.time() * 1000.0 - ttl_seconds * 1000.0:
         raise AppendsBlockedError(
@@ -967,26 +675,17 @@ def log_batch(spark: SparkSession, index_path: str, batch_id: str,
     """
     import time as _time
 
+    fs = filesystem_for(spark, index_path)
     lp = _log_path(index_path)
-    delete_glob(spark, f"{lp}/batch={batch_id}")
+    fs.glob_delete(f"{lp}/batch={batch_id}")
     # the constant marker keeps at least one data column next to the
     # batch partition column (Spark rejects all-partition-column writes)
     metrics = {"committed": 1,
                "committed_at_ms": int(_time.time() * 1000), **metrics}
     cols = sorted(metrics)
-    # r13: the one-row log write goes through the driver-side metadata
-    # writer (no Spark job, no commit protocol — atomic temp+rename
-    # into the batch dir); the Spark write remains the non-local path
-    vals = tuple(int(metrics[c]) for c in cols)
-    if write_meta_rows(spark, lp, [vals],
-                       ", ".join(f"{c} long" for c in cols),
-                       partition=("batch", batch_id)):
-        return
-    row = [vals + (batch_id,)]
-    schema = ", ".join([f"{c} long" for c in cols] + ["batch string"])
-    from dsgrid_spark.session import one_slice_df
-    (one_slice_df(spark, row, schema)
-       .write.mode("append").partitionBy("batch").parquet(lp))
+    fs.write_rows(lp, [tuple(int(metrics[c]) for c in cols)],
+                  ", ".join(f"{c} long" for c in cols),
+                  partition=("batch", batch_id))
 
 
 def logged_totals(spark: SparkSession, index_path: str,
@@ -1011,12 +710,13 @@ def reset_log(spark: SparkSession, index_path: str) -> None:
     ``(replaced=X, by=Y)`` row would lie dormant until some future
     append commits a NEW batch named ``Y`` and then silently hide a
     healthy batch ``X``."""
-    delete_glob(spark, _log_path(index_path))
-    delete_glob(spark, _intents_path(index_path))
-    delete_glob(spark, _compactions_path(index_path))
+    fs = filesystem_for(spark, index_path)
+    fs.glob_delete(_log_path(index_path))
+    fs.glob_delete(_intents_path(index_path))
+    fs.glob_delete(_compactions_path(index_path))
     # a dead compactor's lock must not outlive the index it was
     # compacting (the rebuild is a new lifecycle)
-    delete_glob(spark, f"{index_path}/locks")
+    fs.glob_delete(f"{index_path}/locks")
 
 
 def fsck(spark: SparkSession, index_path: str,
@@ -1046,7 +746,7 @@ def fsck(spark: SparkSession, index_path: str,
     grace), dormant compaction rows (a crashed compaction's inert
     replacement pairs), live locks younger than the ttl.
 
-    Cost: FileSystem listings plus one collect of the one-row-per-batch
+    Cost: filesystem listings plus one read of the one-row-per-batch
     log and the tiny meta/centroid tables — no payload scan. Returns
     ``{"ok": <no errors>, "kind", "errors", "warnings", "info"}``.
     """
@@ -1065,13 +765,7 @@ def fsck(spark: SparkSession, index_path: str,
     visible, ingested = batch_sets(spark, index_path)
     info["visible_batches"] = len(visible)
     info["retired_batches"] = len(ingested - visible)
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _glob(pattern):
-        p = jvm.org.apache.hadoop.fs.Path(pattern)
-        return list(p.getFileSystem(conf).globStatus(p) or [])
+    fs = filesystem_for(spark, index_path)
 
     # payload layout sanity (mixed partition columns refuse compaction
     # and signal a foreign write landed in the tree)
@@ -1084,8 +778,8 @@ def fsck(spark: SparkSession, index_path: str,
 
     # per-batch data-dir census over every payload subtree
     dirs_of: dict[str, int] = {}
-    for st in _glob(f"{index_path}/*/*/batch=*"):
-        bid = st.getPath().getName().split("=", 1)[1]
+    for st in fs.glob(f"{index_path}/*/*/batch=*"):
+        bid = st.name.split("=", 1)[1]
         dirs_of[bid] = dirs_of.get(bid, 0) + 1
     dataless = sorted(b for b in visible if dirs_of.get(b, 0) == 0)
     if dataless and raw:
@@ -1117,13 +811,13 @@ def fsck(spark: SparkSession, index_path: str,
         from dsgrid_spark.pipeline.rebalance import _flat_entries
 
         gens = centroid_generations(spark, index_path)
-        _, flat = _flat_entries(spark, _centroids_path(index_path))
-        flat_data = [st for st in flat
-                     if not st.getPath().getName().startswith(("_", "."))]
+        flat_data = [st for st in _flat_entries(
+                         spark, _centroids_path(index_path))
+                     if not st.name.startswith(("_", "."))]
         if gens and flat_data:
             errors.append(
                 f"MIXED centroid layout: flat files "
-                f"{[str(s.getPath().getName()) for s in flat_data]} next "
+                f"{[s.name for s in flat_data]} next "
                 f"to generation dirs {sorted(gens)} — root-level "
                 f"partition discovery fails; a rebalance migrates this "
                 f"(or remove the flat files once a committed generation "
@@ -1143,9 +837,9 @@ def fsck(spark: SparkSession, index_path: str,
         info["centroid_generation"] = gen
         if kind == "pq":
             marked = codebook_generations(spark, index_path)
-            _, cb_flat = _flat_entries(spark, f"{index_path}/codebooks")
-            cb_flat_data = [st for st in cb_flat if not
-                            st.getPath().getName().startswith(("_", "."))]
+            cb_flat_data = [st for st in _flat_entries(
+                                spark, f"{index_path}/codebooks")
+                            if not st.name.startswith(("_", "."))]
             if marked and cb_flat_data:
                 # NOT an error: _read_codebooks reads flat-first (flat
                 # files are only removed after a retrain verifies both
@@ -1169,11 +863,7 @@ def fsck(spark: SparkSession, index_path: str,
                 "binary": "meta"}.get(kind)
     if meta_sub is not None:
         try:
-            rows = read_meta_rows(spark, f"{index_path}/{meta_sub}")
-            if rows is None:
-                spark.read.parquet(
-                    f"{index_path}/{meta_sub}").collect()[0]
-            elif not rows:
+            if not fs.read_rows(f"{index_path}/{meta_sub}"):
                 raise ValueError("empty meta row set")
         except Exception:
             errors.append(f"missing or unreadable {meta_sub}/ row")
@@ -1181,11 +871,10 @@ def fsck(spark: SparkSession, index_path: str,
     # locks / tombstones / append-block markers
     cutoff = _time.time() * 1000.0 - lock_ttl_seconds * 1000.0
     held, stale, tombs = [], [], []
-    for st in _glob(f"{index_path}/locks/*.lock"):
-        (stale if st.getModificationTime() < cutoff else held).append(
-            st.getPath().getName())
-    for st in _glob(f"{index_path}/locks/*.lock.broken-*"):
-        tombs.append(st.getPath().getName())
+    for st in fs.glob(f"{index_path}/locks/*.lock"):
+        (stale if st.mtime_ms < cutoff else held).append(st.name)
+    for st in fs.glob(f"{index_path}/locks/*.lock.broken-*"):
+        tombs.append(st.name)
     if stale:
         warnings.append(f"stale locks past lock_ttl_seconds (a crashed "
                         f"holder; vacuum reaps): {sorted(stale)}")
@@ -1213,12 +902,9 @@ def centroid_generations(spark: SparkSession,
     i.e. the ``centroids/batch=<id>`` directory names. Empty for
     indexes without centroids (term, sigs) and for the legacy flat
     ``centroids/`` layout (pre-generation builds)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{_centroids_path(index_path)}/batch=*")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return {st.getPath().getName().split("=", 1)[1]
-            for st in (fs.globStatus(p) or [])}
+    return {st.name.split("=", 1)[1]
+            for st in filesystem_for(spark, index_path).glob(
+                f"{_centroids_path(index_path)}/batch=*")}
 
 
 def resolve_generation(spark: SparkSession, index_path: str,
@@ -1268,23 +954,20 @@ def _check_pin_generation(spark: SparkSession, index_path: str,
     generation than the pin's marker (see resolve_generation). Best
     effort by construction: batches or markers without recorded commit
     times (pre-commit-time layouts) are skipped rather than guessed."""
+    fs = filesystem_for(spark, index_path)
     try:
-        cent = (spark.read.option("mergeSchema", "true")
-                .parquet(_centroids_path(index_path))
-                .select("batch", "gen_src").distinct().collect())
+        src_of = {r["batch"]: r["gen_src"]
+                  for r in fs.read_rows(_centroids_path(index_path))}
     except Exception:
         return  # pre-identity marker layout: nothing to key on
-    src_of = {r["batch"]: r["gen_src"] for r in cent}
     identity = src_of.get(gen)
     if identity is None:
         return
     try:
-        rows = (spark.read.option("mergeSchema", "true")
-                .parquet(_log_path(index_path))
-                .select("batch", "committed_at_ms").collect())
+        at = {r["batch"]: r.get("committed_at_ms")
+              for r in fs.read_rows(_log_path(index_path))}
     except Exception:
         return
-    at = {r["batch"]: r["committed_at_ms"] for r in rows}
     # establishment events: markers that INTRODUCED their identity
     # (gen_src == own batch id) — transfers are not identity changes
     events = sorted((int(at[b]), s) for b, s in src_of.items()
@@ -1321,19 +1004,48 @@ def payload_subdirs(spark: SparkSession,
     per-index schema registry — postings/sigs/codes/bits/vectors are
     all found, while ``batches/`` (one level), ``meta/``, and
     ``centroids/`` (no batch dirs) never match."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/*/*/batch=*")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     subs: dict[str, str] = {}
-    for st in (fs.globStatus(p) or []):
-        coldir = st.getPath().getParent()
-        sub = coldir.getParent().getName()
-        col = coldir.getName().split("=", 1)[0]
+    for st in filesystem_for(spark, index_path).glob(
+            f"{index_path}/*/*/batch=*"):
+        sub, coldir = st.path.rstrip("/").split("/")[-3:-1]
+        col = coldir.split("=", 1)[0]
         if subs.setdefault(sub, col) != col:
             raise ValueError(
                 f"subtree {sub!r} mixes partition columns "
                 f"({subs[sub]!r} and {col!r}); refusing to compact")
     return subs
+
+
+def clear_attempt(spark: SparkSession, index_path: str,
+                  batch_id: str) -> None:
+    """Delete a previous crashed attempt's artifacts of a replacing
+    batch (compaction or rebalance): payload dirs, its compaction
+    rows, and its centroid and codebook generation dirs."""
+    fs = filesystem_for(spark, index_path)
+    for pattern in (f"{index_path}/*/*/batch={batch_id}",
+                    f"{_compactions_path(index_path)}/by={batch_id}",
+                    f"{_centroids_path(index_path)}/batch={batch_id}",
+                    f"{index_path}/codebooks/batch={batch_id}"):
+        fs.glob_delete(pattern)
+
+
+def summed_metrics(spark: SparkSession, index_path: str,
+                   sources) -> dict[str, int]:
+    """The sources' log metrics summed per column — the replacing
+    batch's log row, so :func:`logged_totals` is invariant under
+    compaction and rebalance."""
+    sources = set(sources)
+    metrics: dict[str, int] = {}
+    for r in filesystem_for(spark, index_path).read_rows(
+            _log_path(index_path)):
+        if r["batch"] not in sources:
+            continue
+        for c, v in r.items():
+            if c in ("batch", "committed", "committed_at_ms") \
+                    or v is None:
+                continue
+            metrics[c] = metrics.get(c, 0) + int(v)
+    return metrics
 
 
 def compact(spark: SparkSession, index_path: str,
@@ -1407,20 +1119,9 @@ def _compact_locked(spark: SparkSession, index_path: str,
         return None
     batch_id = claim_auto_batch_id(spark, index_path, ingested,
                                    prefix=COMPACT_PREFIX)
-    delete_glob(spark, f"{index_path}/*/*/batch={batch_id}")
-    delete_glob(spark, f"{_compactions_path(index_path)}/by={batch_id}")
-    delete_glob(spark,
-                f"{_centroids_path(index_path)}/batch={batch_id}")
-    delete_glob(spark, f"{index_path}/codebooks/batch={batch_id}")
-    log_rows = (spark.read.parquet(_log_path(index_path))
-                .filter(F.col("batch").isin(sources)).collect())
-    metrics = {}
-    for r in log_rows:
-        for c, v in r.asDict().items():
-            if c in ("batch", "committed", "committed_at_ms") \
-                    or v is None:
-                continue
-            metrics[c] = metrics.get(c, 0) + int(v)
+    clear_attempt(spark, index_path, batch_id)
+    metrics = summed_metrics(spark, index_path, sources)
+    fs = filesystem_for(spark, index_path)
     subs = payload_subdirs(spark, index_path)
     if not subs:
         # committing a data-less batch while marking sources replaced
@@ -1441,8 +1142,6 @@ def _compact_locked(spark: SparkSession, index_path: str,
     # "the unique gen-marked batch in my view" — keeps working after
     # the source retires. Tiny payload (K centroid rows).
     gen_sources = centroid_generations(spark, index_path) & set(sources)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     for g in sorted(gen_sources):
         # gen-scoped dirs are read DIRECTLY (pq._read_centroids's
         # convention): a legacy index with a crashed half-migrated
@@ -1456,8 +1155,7 @@ def _compact_locked(spark: SparkSession, index_path: str,
         # same marker transfer — the absorbing batch becomes the
         # establisher of the SAME generation for both tables
         cb = f"{index_path}/codebooks/batch={g}"
-        cbp = jvm.org.apache.hadoop.fs.Path(cb)
-        if cbp.getFileSystem(conf).exists(cbp):
+        if fs.exists(cb):
             (spark.read.parquet(cb)
                .withColumn("batch", F.lit(batch_id))
                .coalesce(1)
@@ -1467,21 +1165,14 @@ def _compact_locked(spark: SparkSession, index_path: str,
         # transfer (missing it is harmless — the auto gate would just
         # recalibrate — but carrying it keeps the gate armed)
         db = f"{index_path}/drift_baseline/batch={g}"
-        dbp = jvm.org.apache.hadoop.fs.Path(db)
-        if dbp.getFileSystem(conf).exists(dbp):
+        if fs.exists(db):
             (spark.read.parquet(db)
                .withColumn("batch", F.lit(batch_id))
                .coalesce(1)
                .write.mode("append").partitionBy("batch")
                .parquet(f"{index_path}/drift_baseline"))
-    if not write_meta_rows(spark, _compactions_path(index_path),
-                           [(s,) for s in sources], "replaced string",
-                           partition=("by", batch_id)):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, [(s, batch_id) for s in sources],
-                      "replaced string, by string")
-           .write.mode("append").partitionBy("by")
-           .parquet(_compactions_path(index_path)))
+    fs.write_rows(_compactions_path(index_path), [(s,) for s in sources],
+                  "replaced string", partition=("by", batch_id))
     log_batch(spark, index_path, batch_id, **metrics)
     clear_intent(spark, index_path, batch_id)
     if purge:
@@ -1531,16 +1222,7 @@ def purge_replaced(spark: SparkSession, index_path: str,
     pairs = _replacements(spark, index_path)
     replaced = _retired(raw, pairs)
     direct_by = {r: by for r, by in pairs}
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _mtime(path_str):
-        p = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = p.getFileSystem(conf)
-        sts = list(fs.globStatus(p) or [])
-        return max((st.getModificationTime() for st in sts),
-                   default=None)
-
+    fs = filesystem_for(spark, index_path)
     removed_dirs = 0
     removed_log_rows = 0
     for bid in sorted(replaced & raw):
@@ -1548,8 +1230,8 @@ def purge_replaced(spark: SparkSession, index_path: str,
             by = direct_by.get(bid)
             retired_at = max(
                 (t for t in (
-                    _mtime(f"{_compactions_path(index_path)}/by={by}"),
-                    _mtime(f"{_log_path(index_path)}/batch={by}"))
+                    fs.mtime(f"{_compactions_path(index_path)}/by={by}"),
+                    fs.mtime(f"{_log_path(index_path)}/batch={by}"))
                  if t is not None),
                 default=None)
             # unknown retirement time (replacer already purged of both
@@ -1557,26 +1239,17 @@ def purge_replaced(spark: SparkSession, index_path: str,
             # purge cycle old — eligible
             if retired_at is not None and retired_at >= older_than_ms:
                 continue
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/*/*/batch={bid}")
-        fs = p.getFileSystem(conf)
-        dirs = list(fs.globStatus(p) or [])
-        for st in dirs:
-            fs.delete(st.getPath(), True)
-            removed_dirs += 1
+        removed_dirs += fs.glob_delete(f"{index_path}/*/*/batch={bid}")
         # a retired generation-establishing batch's centroid (and, for
         # retrained PQ, codebook) dirs go with its data
         # (compact/rebalance already transferred the live generation's
         # marker to the replacing batch); pins into that generation
         # fail loudly at resolve_generation afterwards
-        removed_dirs += delete_glob(
-            spark, f"{_centroids_path(index_path)}/batch={bid}")
-        removed_dirs += delete_glob(
-            spark, f"{index_path}/codebooks/batch={bid}")
-        removed_dirs += delete_glob(
-            spark, f"{index_path}/drift_baseline/batch={bid}")
-        removed_log_rows += delete_glob(
-            spark, f"{_log_path(index_path)}/batch={bid}")
+        for sub in ("centroids", "codebooks", "drift_baseline"):
+            removed_dirs += fs.glob_delete(
+                f"{index_path}/{sub}/batch={bid}")
+        removed_log_rows += fs.glob_delete(
+            f"{_log_path(index_path)}/batch={bid}")
     return {"data_dirs_removed": removed_dirs,
             "log_rows_removed": removed_log_rows}
 
@@ -1634,25 +1307,21 @@ def vacuum(spark: SparkSession, index_path: str,
     cutoff = _time.time() * 1000.0 - ttl_seconds * 1000.0
     purged = purge_replaced(spark, index_path, older_than_ms=cutoff)
     committed = batch_sets(spark, index_path)[1]
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    fs = filesystem_for(spark, index_path)
 
-    def statuses(pattern):
-        p = jvm.org.apache.hadoop.fs.Path(pattern)
-        fs = p.getFileSystem(conf)
-        return fs, list(fs.globStatus(p) or [])
+    def data_statuses(bid):
+        # a crashed rebalance's centroid (and codebook) generation dirs
+        # are artifacts of its (uncommitted) batch like any payload dir
+        # — judged and deleted with the batch as a unit
+        return [st for pattern in (
+                    f"{index_path}/*/*/batch={bid}",
+                    f"{_centroids_path(index_path)}/batch={bid}",
+                    f"{index_path}/codebooks/batch={bid}",
+                    f"{index_path}/drift_baseline/batch={bid}")
+                for st in fs.glob(pattern)]
 
-    fs_i, intent_sts = statuses(f"{_intents_path(index_path)}/*")
-    fs_d, data_sts = statuses(f"{index_path}/*/*/batch=*")
-    # a crashed rebalance's centroid (and codebook) generation dirs
-    # are artifacts of its (uncommitted) batch like any payload dir —
-    # judged and deleted with the batch as a unit
-    data_sts = data_sts + statuses(
-        f"{_centroids_path(index_path)}/batch=*")[1]
-    data_sts = data_sts + statuses(
-        f"{index_path}/codebooks/batch=*")[1]
-    data_sts = data_sts + statuses(
-        f"{index_path}/drift_baseline/batch=*")[1]
+    intent_sts = fs.glob(f"{_intents_path(index_path)}/*")
+    data_sts = data_statuses("*")
 
     # group every artifact of each UNCOMMITTED batch; stale intents of
     # committed batches are removable immediately (data never touched)
@@ -1660,7 +1329,7 @@ def vacuum(spark: SparkSession, index_path: str,
     intent_of: dict[str, object] = {}
     artifacts: dict[str, list] = {}
     for st in intent_sts:
-        bid = st.getPath().getName()
+        bid = st.name
         if bid in committed:
             stale_committed_intents.append(st)
         else:
@@ -1668,7 +1337,7 @@ def vacuum(spark: SparkSession, index_path: str,
             artifacts.setdefault(bid, []).append(st)
     data_of: dict[str, list] = {}
     for st in data_sts:
-        bid = st.getPath().getName().split("=", 1)[1]
+        bid = st.name.split("=", 1)[1]
         if bid in committed:
             continue
         data_of.setdefault(bid, []).append(st)
@@ -1677,7 +1346,7 @@ def vacuum(spark: SparkSession, index_path: str,
     removed_dirs = 0
     removed_intents = 0
     for bid, sts in artifacts.items():
-        if any(st.getModificationTime() >= cutoff for st in sts):
+        if any(st.mtime_ms >= cutoff for st in sts):
             continue  # some artifact is young: the batch may be live
         # TOCTOU re-check immediately before deletion: the upfront
         # snapshot may predate a slow in-flight append's FIRST data
@@ -1691,33 +1360,24 @@ def vacuum(spark: SparkSession, index_path: str,
         # the longest possible append duration (the intent contract).
         if bid in batch_sets(spark, index_path)[1]:
             continue
-        _, fresh = statuses(f"{index_path}/*/*/batch={bid}")
-        fresh = fresh + statuses(
-            f"{_centroids_path(index_path)}/batch={bid}")[1]
-        fresh = fresh + statuses(
-            f"{index_path}/codebooks/batch={bid}")[1]
-        fresh = fresh + statuses(
-            f"{index_path}/drift_baseline/batch={bid}")[1]
-        snap = {str(st.getPath()) for st in data_of.get(bid, [])}
-        if ({str(st.getPath()) for st in fresh} != snap
-                or any(st.getModificationTime() >= cutoff for st in fresh)):
+        fresh = data_statuses(bid)
+        snap = {st.path for st in data_of.get(bid, [])}
+        if ({st.path for st in fresh} != snap
+                or any(st.mtime_ms >= cutoff for st in fresh)):
             continue
-        if bid in intent_of:
-            _, ist = statuses(f"{_intents_path(index_path)}/{bid}")
-            old_mtime = intent_of[bid].getModificationTime()
-            if (not ist
-                    or ist[0].getModificationTime() != old_mtime):
-                continue
+        if bid in intent_of and fs.mtime(
+                intent_of[bid].path) != intent_of[bid].mtime_ms:
+            continue
         for st in data_of.get(bid, []):
-            fs_d.delete(st.getPath(), True)
+            fs.rm_tree(st.path)
             removed_dirs += 1
         # marker removed LAST, and only with its data gone: a crash
         # mid-vacuum leaves the id reserved over the remaining orphans
         if bid in intent_of:
-            fs_i.delete(intent_of[bid].getPath(), True)
+            fs.rm_tree(intent_of[bid].path)
             removed_intents += 1
     for st in stale_committed_intents:
-        fs_i.delete(st.getPath(), True)
+        fs.rm_tree(st.path)
         removed_intents += 1
     # a compactor that died holding the single-compactor lock would
     # otherwise block compaction until someone notices. Staleness is
@@ -1731,10 +1391,9 @@ def vacuum(spark: SparkSession, index_path: str,
     removed_locks = 0
     for pattern in (f"{index_path}/locks/*.lock",
                     f"{index_path}/locks/*.lock.broken-*"):
-        fs_l, lock_sts = statuses(pattern)
-        for st in lock_sts:
-            if st.getModificationTime() < lock_cutoff:
-                fs_l.delete(st.getPath(), False)
+        for st in fs.glob(pattern):
+            if st.mtime_ms < lock_cutoff:
+                fs.rm_tree(st.path)
                 removed_locks += 1
     return {"data_dirs_removed": removed_dirs + purged["data_dirs_removed"],
             "intents_removed": removed_intents,

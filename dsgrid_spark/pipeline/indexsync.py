@@ -61,6 +61,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from dsgrid_spark.filesystem import LocalFilesystem, filesystem_for
 from dsgrid_spark.pipeline import indexlog
 
 __all__ = ["sync_index"]
@@ -72,32 +73,20 @@ _TWO_LEVEL = (("centroids", "batch"), ("codebooks", "batch"),
               ("drift_baseline", "batch"), ("compactions", "by"))
 
 
-def _fs_of(spark, path_str: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _exists(spark, path_str: str) -> bool:
-    fs, p = _fs_of(spark, path_str)
-    return fs.exists(p)
-
-
 def _copy_tree(spark, src_path: str, dst_path: str) -> None:
     """Recursive DRIVER-SIDE copy of one directory (or file) to an
     EXACT destination path (pre-deleted by the caller, so Hadoop's
     copy-into-existing-dir nesting can never trigger). Used for the
     tiny serial pieces — static tables, compaction rows, log rows —
     and as the fallback when the parallel path can't serve a scheme;
-    bulk batch payloads go through :func:`_parallel_copy`."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    sfs, sp = _fs_of(spark, src_path)
-    dfs, dp = _fs_of(spark, dst_path)
-    dfs.mkdirs(dp.getParent())
-    if not jvm.org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dfs, dp,
-                                                  False, conf):
-        raise IOError(f"copy failed: {src_path} -> {dst_path}")
+    bulk batch payloads go through :func:`_parallel_copy`. A local
+    source copies through the destination's filesystem, a remote one
+    through its own (Hadoop resolves each side from its path, so the
+    copy may cross schemes)."""
+    fs = filesystem_for(spark, src_path)
+    if isinstance(fs, LocalFilesystem):
+        fs = filesystem_for(spark, dst_path)
+    fs.copy_tree(src_path, dst_path)
 
 
 def _copy_tree_atomic(spark, src_path: str, dst_path: str) -> None:
@@ -108,32 +97,28 @@ def _copy_tree_atomic(spark, src_path: str, dst_path: str) -> None:
     (invisible to partition discovery and re-replaced on retry), never
     a permanently partial table the skip-if-exists pre-pass would
     treat as done."""
-    jvm = spark._jvm
-    dfs, dp = _fs_of(spark, dst_path)
-    tmp = f"{dp.getParent().toString()}/_sync_tmp_{dp.getName()}"
-    tp = jvm.org.apache.hadoop.fs.Path(tmp)
-    dfs.delete(tp, True)
+    fs = filesystem_for(spark, dst_path)
+    parent, name = dst_path.rstrip("/").rsplit("/", 1)
+    tmp = f"{parent}/_sync_tmp_{name}"
+    fs.rm_tree(tmp)
     _copy_tree(spark, src_path, tmp)
-    dfs.delete(dp, True)
-    if not dfs.rename(tp, dp):
+    fs.rm_tree(dst_path)
+    if not fs.rename(tmp, dst_path):
         raise IOError(f"rename failed: {tmp} -> {dst_path}")
 
 
 def _list_files(spark, root: str) -> list[tuple[str, int]]:
-    """All files under ``root`` recursively, as (path-relative-to-root,
-    size) pairs — the metadata listing the parallel copy schedules
-    from. Driver-side: file COUNT per sync is bounded by batch count ×
-    partitions, orders of magnitude below the byte volume that made
-    the serial copy the bottleneck."""
-    fs, p = _fs_of(spark, root)
-    base = fs.getFileStatus(p).getPath().toString().rstrip("/")
-    out = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        full = st.getPath().toString()
-        out.append((full[len(base) + 1:], int(st.getLen())))
-    return out
+    """Data files under ``root`` recursively (``_``/``.`` markers and
+    checksums skipped), as (path-relative-to-root, size) pairs — the
+    metadata listing the parallel copy schedules from. Driver-side:
+    file COUNT per sync is bounded by batch count × partitions, orders
+    of magnitude below the byte volume that made the serial copy the
+    bottleneck."""
+    from urllib.parse import urlparse
+
+    cut = len(urlparse(root).path.rstrip("/")) + 1
+    return [(urlparse(p).path[cut:], sz)
+            for p, sz in filesystem_for(spark, root).list_sizes(root)]
 
 
 def _pafs_of(path: str):
@@ -196,24 +181,15 @@ def _parallel_copy(spark, specs: list[tuple[str, str, int]],
     sc.parallelize(groups, n).foreach(_copy_file_group)
 
 
-def _glob(spark, pattern: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(pattern)
-    return list(p.getFileSystem(
-        spark._jsc.hadoopConfiguration()).globStatus(p) or [])
-
-
 def _batch_rels(spark, src: str, batch_id: str) -> list[str]:
     """Every source artifact of one batch, as index-relative paths,
     log row EXCLUDED (the caller copies it last): payload dirs plus
     the 2-level generation/compaction dirs."""
-    rels = []
-    for st in _glob(spark, f"{src}/*/*/batch={batch_id}"):
-        p = st.getPath()
-        rels.append(f"{p.getParent().getParent().getName()}/"
-                    f"{p.getParent().getName()}/{p.getName()}")
+    fs = filesystem_for(spark, src)
+    rels = ["/".join(st.path.rstrip("/").split("/")[-3:])
+            for st in fs.glob(f"{src}/*/*/batch={batch_id}")]
     for sub, col in _TWO_LEVEL:
-        if _exists(spark, f"{src}/{sub}/{col}={batch_id}"):
+        if fs.exists(f"{src}/{sub}/{col}={batch_id}"):
             rels.append(f"{sub}/{col}={batch_id}")
     return rels
 
@@ -271,16 +247,17 @@ def sync_index(spark: SparkSession, src: str, dst: str,
         raise ValueError("src and dst are the same path")
     if (src_corpus is None) != (dst_corpus is None):
         raise ValueError("pass src_corpus and dst_corpus together")
-    if not _exists(spark, f"{src}/batches"):
+    sfs, dfs = filesystem_for(spark, src), filesystem_for(spark, dst)
+    if not sfs.exists(f"{src}/batches"):
         raise ValueError(f"no batch log at {src!r}: not a persisted "
                          f"index (or nothing committed yet)")
     if overwrite:
-        indexlog.delete_glob(spark, dst)
+        dfs.rm_tree(dst)
         if dst_corpus is not None:
             # a rebuilt source reuses batch ids: stale corpus text left
             # under a reused id would read back as the NEW batch's text
-            indexlog.delete_glob(spark, dst_corpus)
-    elif _exists(spark, f"{dst}/batches"):
+            filesystem_for(spark, dst_corpus).rm_tree(dst_corpus)
+    elif dfs.exists(f"{dst}/batches"):
         # the destination is already an index: refuse to interleave a
         # DIFFERENT one into it (kind or immutable config mismatch —
         # also catches most rebuilt-source cases, whose new build
@@ -294,16 +271,9 @@ def sync_index(spark: SparkSession, src: str, dst: str,
                 f"destination holds a {dkind!r} index; source is "
                 f"{skind!r} — pass overwrite=True to replace it")
         for sub in ("meta", "stats"):
-            if _exists(spark, f"{src}/{sub}") and \
-                    _exists(spark, f"{dst}/{sub}"):
-                srow = indexlog.read_meta_rows(spark, f"{src}/{sub}")
-                srow = (srow[0] if srow is not None else
-                        spark.read.parquet(
-                            f"{src}/{sub}").collect()[0].asDict())
-                drow = indexlog.read_meta_rows(spark, f"{dst}/{sub}")
-                drow = (drow[0] if drow is not None else
-                        spark.read.parquet(
-                            f"{dst}/{sub}").collect()[0].asDict())
+            if sfs.exists(f"{src}/{sub}") and dfs.exists(f"{dst}/{sub}"):
+                srow = sfs.read_rows(f"{src}/{sub}")[0]
+                drow = dfs.read_rows(f"{dst}/{sub}")[0]
                 # corpus-size fields drift with appends; only the
                 # immutable CONFIG keys must agree
                 informational = {"n_docs", "total_tokens"}
@@ -321,19 +291,13 @@ def sync_index(spark: SparkSession, src: str, dst: str,
     # commit time = the unknown past = first), so every intermediate
     # destination state is a historical source view
     try:
-        rows = indexlog.read_meta_rows(spark, f"{src}/batches")
-        if rows is None:
-            rows = (spark.read.option("mergeSchema", "true")
-                    .parquet(f"{src}/batches")
-                    .select("batch", "committed_at_ms").collect())
         at = {r["batch"]: r.get("committed_at_ms")
-              if isinstance(r, dict) else r["committed_at_ms"]
-              for r in rows}
+              for r in sfs.read_rows(f"{src}/batches")}
     except Exception:
         at = {}
     visible = indexlog.resolve_batches(spark, src, as_of)
     if as_of is not None and not overwrite \
-            and _exists(spark, f"{dst}/batches"):
+            and dfs.exists(f"{dst}/batches"):
         ahead = indexlog.committed_batches(spark, dst) - visible
         if ahead:
             raise ValueError(
@@ -349,17 +313,14 @@ def sync_index(spark: SparkSession, src: str, dst: str,
     # copied as whole files when the destination has no such table yet
     static_copied = []
     for sub in ("meta", "stats"):
-        if _exists(spark, f"{src}/{sub}") and \
-                not _exists(spark, f"{dst}/{sub}"):
+        if sfs.exists(f"{src}/{sub}") and not dfs.exists(f"{dst}/{sub}"):
             _copy_tree(spark, f"{src}/{sub}", f"{dst}/{sub}")
             static_copied.append(sub)
     for sub in ("centroids", "codebooks"):
-        flat = [st for st in _glob(spark, f"{src}/{sub}/*")
-                if not st.getPath().getName().startswith(
-                    ("batch=", "_", "."))]
-        if flat and not _exists(spark, f"{dst}/{sub}"):
-            for st in flat:
-                name = st.getPath().getName()
+        flat = [st.name for st in sfs.glob(f"{src}/{sub}/*")
+                if not st.name.startswith(("batch=", "_", "."))]
+        if flat and not dfs.exists(f"{dst}/{sub}"):
+            for name in flat:
                 _copy_tree(spark, f"{src}/{sub}/{name}",
                            f"{dst}/{sub}/{name}")
             static_copied.append(f"{sub} (flat)")
@@ -373,9 +334,9 @@ def sync_index(spark: SparkSession, src: str, dst: str,
     # commits; ones whose ``by`` is already committed at dst activate
     # retirements the source has already made — both safe at every
     # intermediate state. The batch loop below re-copies its own.
-    for st in _glob(spark, f"{src}/compactions/by=*"):
-        name = st.getPath().getName()
-        if not _exists(spark, f"{dst}/compactions/{name}"):
+    for st in sfs.glob(f"{src}/compactions/by=*"):
+        name = st.name
+        if not dfs.exists(f"{dst}/compactions/{name}"):
             # temp+rename: a ``by=`` dir whose batch is already
             # committed at dst is LIVE the moment it exists, and this
             # skip-if-exists pass would treat a crashed partial copy
@@ -384,7 +345,7 @@ def sync_index(spark: SparkSession, src: str, dst: str,
                               f"{dst}/compactions/{name}")
 
     ingested_dst = indexlog.batch_sets(spark, dst)[1] \
-        if _exists(spark, f"{dst}/batches") else set()
+        if dfs.exists(f"{dst}/batches") else set()
     todo = [b for b in order if b not in ingested_dst]
     skipped = len(order) - len(todo)
 
@@ -396,22 +357,22 @@ def sync_index(spark: SparkSession, src: str, dst: str,
     rels_of: dict[str, list[str]] = {}
     specs: list[tuple[str, str, int]] = []
     for b in todo:
-        indexlog.delete_glob(spark, f"{dst}/*/*/batch={b}")
+        dfs.glob_delete(f"{dst}/*/*/batch={b}")
         for sub, col in _TWO_LEVEL:
-            indexlog.delete_glob(spark, f"{dst}/{sub}/{col}={b}")
+            dfs.glob_delete(f"{dst}/{sub}/{col}={b}")
         rels = _batch_rels(spark, src, b)
         rels_of[b] = rels
         for rel in rels:
             files = _list_files(spark, f"{src}/{rel}")
             if not files:  # preserve empty dirs (FileUtil.copy did)
-                fs, p = _fs_of(spark, f"{dst}/{rel}")
-                fs.mkdirs(p)
+                dfs.mkdirs(f"{dst}/{rel}")
             specs.extend((f"{src}/{rel}/{f}", f"{dst}/{rel}/{f}", sz)
                          for f, sz in files)
-        if src_corpus is not None and \
-                _exists(spark, f"{src_corpus}/batch={b}"):
+        if src_corpus is not None and filesystem_for(
+                spark, src_corpus).exists(f"{src_corpus}/batch={b}"):
             # corpus rows stage before the commit, like every artifact
-            indexlog.delete_glob(spark, f"{dst_corpus}/batch={b}")
+            filesystem_for(spark, dst_corpus).rm_tree(
+                f"{dst_corpus}/batch={b}")
             specs.extend(
                 (f"{src_corpus}/batch={b}/{f}",
                  f"{dst_corpus}/batch={b}/{f}", sz)
@@ -423,7 +384,7 @@ def sync_index(spark: SparkSession, src: str, dst: str,
     # retirements / generation flips it carries) becomes visible here
     copied = []
     for b in todo:
-        indexlog.delete_glob(spark, f"{dst}/batches/batch={b}")
+        dfs.rm_tree(f"{dst}/batches/batch={b}")
         _copy_tree(spark, f"{src}/batches/batch={b}",
                    f"{dst}/batches/batch={b}")
         copied.append(b)
@@ -433,11 +394,9 @@ def sync_index(spark: SparkSession, src: str, dst: str,
         # at dst would hit the mixed layout the source already escaped
         for sub in ("centroids", "codebooks"):
             if any(r.startswith(f"{sub}/") for r in rels_of[b]):
-                for st in _glob(spark, f"{dst}/{sub}/*"):
-                    name = st.getPath().getName()
-                    if not name.startswith(("batch=", "_", ".")):
-                        fs, p = _fs_of(spark, f"{dst}/{sub}/{name}")
-                        fs.delete(p, True)
+                for st in dfs.glob(f"{dst}/{sub}/*"):
+                    if not st.name.startswith(("batch=", "_", ".")):
+                        dfs.rm_tree(st.path)
     out = {"copied_batches": copied, "skipped_batches": skipped,
            "static_copied": static_copied,
            "copied_files": len(specs),

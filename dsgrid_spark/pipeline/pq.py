@@ -51,6 +51,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
                                StructField, StructType)
 
+from dsgrid_spark.filesystem import filesystem_for
 from dsgrid_spark.pipeline import indexlog
 from dsgrid_spark.session import one_slice_df as _osdf
 
@@ -786,37 +787,18 @@ def codebook_generations(spark, path: str) -> set[str]:
     """Batch ids with a generation-scoped codebook table
     (``codebooks/batch=<establisher>`` directory names). Empty for the
     flat pre-retrain layout — the common case."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/codebooks/batch=*")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return {st.getPath().getName().split("=", 1)[1]
-            for st in (fs.globStatus(p) or [])}
-
-
-def _read_parquet_files_local(spark, files: list[str]):
-    """Driver-side read of an explicit SMALL parquet file list (the
-    flat codebook layout), or None when any file is off the local
-    filesystem (caller falls back to spark.read). r13, guide §5."""
-    locs = [indexlog._meta_local_dir(spark, f) for f in files]
-    if any(loc is None for loc in locs):
-        return None
-    import pyarrow.parquet as _pq
-    rows: list[dict] = []
-    for loc in locs:
-        rows.extend(_pq.read_table(loc).to_pylist())
-    return rows
+    return {st.name.split("=", 1)[1]
+            for st in filesystem_for(spark, path).glob(
+                f"{path}/codebooks/batch=*")}
 
 
 def _flat_codebook_files(spark, path: str) -> list[str]:
     """Root-level DATA files of the legacy flat ``codebooks/`` layout
     — ``batch=`` partition dirs and ``_``/``.``-prefixed side entries
     (``_SUCCESS``, in-flight ``_tmp`` gen writes) excluded."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/codebooks/*")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return [st.getPath().toString() for st in (fs.globStatus(p) or [])
-            if not st.getPath().getName().startswith(
-                ("batch=", "_", "."))]
+    return [st.path for st in filesystem_for(spark, path).glob(
+                f"{path}/codebooks/*")
+            if not st.name.startswith(("batch=", "_", "."))]
 
 
 def _read_codebooks(spark, path: str,
@@ -838,15 +820,11 @@ def _read_codebooks(spark, path: str,
     books, and a crashed retrain's partial ``batch=`` dir (rewritten
     from these files on the retry) can never be read as authoritative.
     """
+    fs = filesystem_for(spark, path)
     flat = _flat_codebook_files(spark, path)
     if flat:
-        # r13: codebooks are driver-bounded (m x k rows); read the flat
-        # files driver-side when local — the flat-files-win contract
-        # above is preserved because exactly these files are read
-        rows = _read_parquet_files_local(spark, flat)
-        if rows is None:
-            rows = [r.asDict()
-                    for r in spark.read.parquet(*flat).collect()]
+        # exactly these files are read: the flat-files-win contract
+        rows = [r for f in flat for r in fs.read_rows(f)]
     else:
         marked = codebook_generations(spark, path)
         if not marked:
@@ -856,11 +834,7 @@ def _read_codebooks(spark, path: str,
                 f"no codebook table for generation {gen!r} at {path!r} "
                 f"(found {sorted(marked)}): purged generation, or a "
                 f"view predating the generation-scoped codebook layout")
-        rows = indexlog.read_meta_rows(
-            spark, f"{path}/codebooks/batch={gen}")
-        if rows is None:
-            rows = [r.asDict() for r in spark.read.parquet(
-                f"{path}/codebooks/batch={gen}").collect()]
+        rows = fs.read_rows(f"{path}/codebooks/batch={gen}")
     m = max(r["j"] for r in rows) + 1
     k = max(r["i"] for r in rows) + 1
     books = [[None] * k for _ in range(m)]
@@ -882,11 +856,8 @@ def _read_centroids(spark, path: str,
     cdir = (f"{path}/centroids/batch={gen}" if gen is not None
             else f"{path}/centroids")
     try:
-        rows = indexlog.read_meta_rows(spark, cdir)
-        if rows is None:
-            rows = (spark.read.parquet(cdir)
-                    .select("cluster", "centroid").collect())
-        rows = sorted(rows, key=lambda r: r["cluster"])
+        rows = sorted(filesystem_for(spark, path).read_rows(cdir),
+                      key=lambda r: r["cluster"])
     except Exception:
         rows = []
     if not rows:
@@ -897,12 +868,7 @@ def _read_centroids(spark, path: str,
 
 
 def _read_meta(spark, path: str) -> dict:
-    # r13: one meta row — driver-side read (indexlog.read_meta_rows; no
-    # Spark job), spark.read on non-local filesystems
-    rows = indexlog.read_meta_rows(spark, f"{path}/meta")
-    if rows is not None:
-        return rows[0]
-    return spark.read.parquet(f"{path}/meta").collect()[0].asDict()
+    return filesystem_for(spark, path).read_rows(f"{path}/meta")[0]
 
 
 def _assign_encode(df, centroids, codebooks, id_column, vector_column,
@@ -1046,28 +1012,18 @@ def write_pq_index(df: DataFrame, path: str,
         # a rebuild DOWN from store_vectors=True must reclaim the old
         # full-precision subtree (the dominant payload): meta now says
         # no vectors, so nothing would ever read OR vacuum it
-        indexlog.delete_glob(spark, f"{path}/vectors")
+        filesystem_for(spark, path).glob_delete(f"{path}/vectors")
     from dsgrid_spark.pipeline.similarity import write_centroid_generation
     write_centroid_generation(spark, path, coarse_centroids,
                               indexlog.BASE_BATCH)
-    cb_ddl = "j int, i int, centroid array<double>"
-    cb_rows = _codebooks_to_rows(codebooks)
-    meta_ddl = ("dim int, m int, k int, dsub int, store_vectors boolean,"
-                " residual boolean, vectors_dtype string")
-    meta_row = [(dim, m, k, dsub, bool(store_vectors), bool(residual),
-                 vectors_dtype)]
-    # r13: both bounded metadata writes go driver-side (no Spark job /
-    # commit protocol each); the Spark writes remain the non-local path
-    if not indexlog.write_meta_rows(spark, f"{path}/codebooks", cb_rows,
-                                    cb_ddl):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, cb_rows, cb_ddl)
-           .write.mode("overwrite").parquet(f"{path}/codebooks"))
-    if not indexlog.write_meta_rows(spark, f"{path}/meta", meta_row,
-                                    meta_ddl):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, meta_row, meta_ddl)
-           .write.mode("overwrite").parquet(f"{path}/meta"))
+    fs = filesystem_for(spark, path)
+    fs.write_rows(f"{path}/codebooks", _codebooks_to_rows(codebooks),
+                  "j int, i int, centroid array<double>")
+    fs.write_rows(f"{path}/meta",
+                  [(dim, m, k, dsub, bool(store_vectors), bool(residual),
+                    vectors_dtype)],
+                  "dim int, m int, k int, dsub int, store_vectors boolean,"
+                  " residual boolean, vectors_dtype string")
     indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
 
 
@@ -1108,9 +1064,9 @@ def append_pq_index(df: DataFrame, path: str,
         raise ValueError(f"batch vector dim {len(first[0])} != index "
                          f"dim {meta['dim']}")
     indexlog.check_appends_allowed(spark, path)
-    indexlog.delete_glob(spark, f"{path}/codes/cluster=*/batch={batch_id}")
-    indexlog.delete_glob(spark,
-                         f"{path}/vectors/cluster=*/batch={batch_id}")
+    fs = filesystem_for(spark, path)
+    fs.glob_delete(f"{path}/codes/cluster=*/batch={batch_id}")
+    fs.glob_delete(f"{path}/vectors/cluster=*/batch={batch_id}")
     gen = indexlog.resolve_generation(spark, path, committed)
     centroids = _read_centroids(spark, path, gen)
     codebooks = _read_codebooks(spark, path, gen)

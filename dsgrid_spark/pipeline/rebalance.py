@@ -75,6 +75,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dsgrid_spark.filesystem import filesystem_for
 from dsgrid_spark.pipeline import indexlog
 
 __all__ = ["rebalance_index", "rebalance_if_skewed",
@@ -212,15 +213,12 @@ def rebalance_index(spark: SparkSession, path: str,
 
 
 def _flat_entries(spark, subdir_path: str):
-    """(fs, [status...]) of root-level entries under an index subtree
-    that are NOT ``batch=`` partition dirs — the legacy flat layout's
-    files (plus ``_SUCCESS`` markers)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{subdir_path}/*")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    sts = [st for st in (fs.globStatus(p) or [])
-           if not st.getPath().getName().startswith("batch=")]
-    return fs, sts
+    """Statuses of root-level entries under an index subtree that are
+    NOT ``batch=`` partition dirs — the legacy flat layout's files
+    (plus ``_SUCCESS`` markers)."""
+    return [st for st in filesystem_for(spark, subdir_path).glob(
+                f"{subdir_path}/*")
+            if not st.name.startswith("batch=")]
 
 
 def _sweep_flat_centroids(spark, path: str, visible: set[str]) -> None:
@@ -234,9 +232,9 @@ def _sweep_flat_centroids(spark, path: str, visible: set[str]) -> None:
     to reap the orphan marker instead."""
     if not (indexlog.centroid_generations(spark, path) & visible):
         return
-    fs, sts = _flat_entries(spark, f"{path}/centroids")
-    for st in sts:
-        fs.delete(st.getPath(), True)
+    fs = filesystem_for(spark, path)
+    for st in _flat_entries(spark, f"{path}/centroids"):
+        fs.rm_tree(st.path)
 
 
 def _migrate_flat_centroids(spark, path: str, visible: set[str]) -> str:
@@ -262,10 +260,8 @@ def _migrate_flat_centroids(spark, path: str, visible: set[str]) -> str:
         carrier = indexlog.BASE_BATCH
     else:
         try:
-            rows = (spark.read.option("mergeSchema", "true")
-                    .parquet(f"{path}/batches")
-                    .select("batch", "committed_at_ms").collect())
-            at = {r["batch"]: r["committed_at_ms"] for r in rows}
+            at = {r["batch"]: r.get("committed_at_ms") for r in
+                  filesystem_for(spark, path).read_rows(f"{path}/batches")}
         except Exception:
             at = {}
         # NULL commit time = the unknown past (resolve_timestamp's
@@ -278,60 +274,42 @@ def _migrate_flat_centroids(spark, path: str, visible: set[str]) -> str:
     # so concurrent readers never see an empty/partial marker during
     # the one-time migration (a partitionBy append creates the dir at
     # job start, data files only at commit)
-    from dsgrid_spark.session import one_slice_df
-
-    tmp = f"{path}/centroids/_tmp_gen_{carrier}"
-    indexlog.delete_glob(spark, tmp)
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(flat)]
-    # r13: bounded metadata — driver-side write when local (no Spark
-    # job), same side-dir + rename landing either way
-    if not indexlog.write_meta_rows(
-            spark, tmp, [(i, c, carrier) for i, c in rows],
-            "cluster int, centroid array<double>, gen_src string"):
-        (one_slice_df(spark, rows, "cluster int, centroid array<double>")
-           .withColumn("gen_src", F.lit(carrier))
-           .write.mode("overwrite").parquet(tmp))
-    _rename_into(spark, tmp, f"{path}/centroids/batch={carrier}")
+    _write_gen_table(
+        spark, path, "centroids", carrier,
+        [(i, [float(x) for x in c], carrier) for i, c in enumerate(flat)],
+        "cluster int, centroid array<double>, gen_src string")
     _sweep_flat_centroids(spark, path, visible)
     return carrier
 
 
-def _rename_into(spark, tmp: str, final: str) -> None:
-    """Replace ``final`` with ``tmp`` in one FS rename (the atomic
-    landing step of every side-dir write here); the previous ``final``
+def _write_gen_table(spark, path: str, sub: str, bid: str, rows,
+                     ddl: str) -> None:
+    """Land a small generation-scoped table at ``<sub>/batch=<bid>``
+    ATOMICALLY: rows go to a ``_``-prefixed side dir (invisible to
+    partition discovery, generation globs, and flat-file detection)
+    and are RENAMED into place in one FS op, so readers of a COMMITTED
+    ``bid`` never observe an empty/partial table. The previous target
     — a crashed partial attempt — is deleted first, which is safe
-    because every caller targets a dir whose authoritative copy still
-    exists elsewhere (flat files, or the side dir being renamed)."""
-    jvm = spark._jvm
-    fp = jvm.org.apache.hadoop.fs.Path(final)
-    tp = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = fp.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(fp, True)
-    if not fs.rename(tp, fp):
+    because every caller's authoritative copy still exists elsewhere
+    (flat files, or the side dir being renamed). Idempotent."""
+    fs = filesystem_for(spark, path)
+    tmp, final = f"{path}/{sub}/_tmp_gen_{bid}", f"{path}/{sub}/batch={bid}"
+    fs.rm_tree(tmp)
+    fs.write_rows(tmp, rows, ddl)
+    fs.rm_tree(final)
+    if not fs.rename(tmp, final):
         raise IOError(f"rename failed: {tmp} -> {final}")
 
 
 def _write_codebooks_gen(spark, path: str, books, bid: str) -> None:
-    """One generation's codebook table under ``codebooks/batch=<bid>``,
-    landed ATOMICALLY: rows go to a ``_``-prefixed side dir (invisible
-    to partition discovery, generation globs, and flat-file detection)
-    and are RENAMED into place in one FS op — the marker dir never
-    exists half-populated, so readers of a COMMITTED ``bid`` (the
-    retrain writes the live old generation's copy) never observe an
-    empty/partial table. Idempotent: a crashed attempt's side and
-    target dirs are both replaced, never doubled."""
+    """One generation's codebook table under ``codebooks/batch=<bid>``
+    (the retrain writes the live old generation's copy too), landed
+    atomically by :func:`_write_gen_table`."""
     from dsgrid_spark.pipeline.pq import _codebooks_to_rows
-    from dsgrid_spark.session import one_slice_df
 
-    tmp = f"{path}/codebooks/_tmp_gen_{bid}"
-    indexlog.delete_glob(spark, tmp)
-    cb_rows = _codebooks_to_rows(books)
-    cb_ddl = "j int, i int, centroid array<double>"
-    # r13: driver-side write when local, same rename landing
-    if not indexlog.write_meta_rows(spark, tmp, cb_rows, cb_ddl):
-        (one_slice_df(spark, cb_rows, cb_ddl)
-           .write.mode("overwrite").parquet(tmp))
-    _rename_into(spark, tmp, f"{path}/codebooks/batch={bid}")
+    _write_gen_table(spark, path, "codebooks", bid,
+                     _codebooks_to_rows(books),
+                     "j int, i int, centroid array<double>")
 
 
 def _rebalance_locked(spark, path, kind, n_clusters, iterations, seed,
@@ -377,11 +355,7 @@ def _rebalance_locked(spark, path, kind, n_clusters, iterations, seed,
     # 2. claim the replacement id and clean any previous attempt
     batch_id = indexlog.claim_auto_batch_id(
         spark, path, ingested, prefix=indexlog.COMPACT_PREFIX)
-    indexlog.delete_glob(spark, f"{path}/*/*/batch={batch_id}")
-    indexlog.delete_glob(
-        spark, f"{path}/compactions/by={batch_id}")
-    indexlog.delete_glob(spark, f"{path}/centroids/batch={batch_id}")
-    indexlog.delete_glob(spark, f"{path}/codebooks/batch={batch_id}")
+    indexlog.clear_attempt(spark, path, batch_id)
 
     # 3. one assignment pass; the (id, cluster) map is the ONLY
     #    corpus-scale state carried across the subtree writes
@@ -476,9 +450,9 @@ def _rebalance_locked(spark, path, kind, n_clusters, iterations, seed,
                             f"codebooks/batch={bid} holds {n} rows, "
                             f"expected m*k={expect}; keeping the flat "
                             f"codebook files (retry the rebalance)")
-                fs, sts = _flat_entries(spark, f"{path}/codebooks")
-                for st in sts:
-                    fs.delete(st.getPath(), True)
+                fs = filesystem_for(spark, path)
+                for st in _flat_entries(spark, f"{path}/codebooks"):
+                    fs.rm_tree(st.path)
         elif marked:
             # gen-scoped layout without retrain: the new generation
             # reuses the same books — copy them under its id so its
@@ -486,30 +460,12 @@ def _rebalance_locked(spark, path, kind, n_clusters, iterations, seed,
             _write_codebooks_gen(
                 spark, path, _read_codebooks(spark, path, gen), batch_id)
     sources = sorted(visible)
-    if not indexlog.write_meta_rows(
-            spark, f"{path}/compactions", [(s,) for s in sources],
-            "replaced string", partition=("by", batch_id)):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, [(s, batch_id) for s in sources],
-                      "replaced string, by string")
-           .write.mode("append").partitionBy("by")
-           .parquet(f"{path}/compactions"))
+    filesystem_for(spark, path).write_rows(
+        f"{path}/compactions", [(s,) for s in sources], "replaced string",
+        partition=("by", batch_id))
 
     # 6. summed log metrics (indexlog.compact's convention)
-    log_rows = indexlog.read_meta_rows(spark, f"{path}/batches")
-    if log_rows is None:
-        log_rows = [r.asDict() for r in
-                    (spark.read.parquet(f"{path}/batches")
-                     .filter(F.col("batch").isin(sources)).collect())]
-    else:
-        log_rows = [r for r in log_rows if r["batch"] in set(sources)]
-    metrics: dict[str, int] = {}
-    for r in log_rows:
-        for c, v in r.items():
-            if c in ("batch", "committed", "committed_at_ms") \
-                    or v is None:
-                continue
-            metrics[c] = metrics.get(c, 0) + int(v)
+    metrics = indexlog.summed_metrics(spark, path, sources)
 
     if _pre_commit_hook is not None:
         _pre_commit_hook()
@@ -704,20 +660,14 @@ def write_drift_baseline(spark: SparkSession, path: str, gen: str,
     ``"auto"`` drift gate compares against, so ``maintain_index``
     needs no hand-tuned absolute threshold (the probe's magnitude is
     regime-dependent: 1.002 healthy on the sf10 rehearsal, >1.3
-    planted drift on low-dim fixtures). Landed atomically (side dir +
-    rename): ``gen`` is committed and live when this runs."""
-    from dsgrid_spark.session import one_slice_df
-
-    tmp = f"{path}/drift_baseline/_tmp_gen_{gen}"
-    indexlog.delete_glob(spark, tmp)
-    db_row = [(float(drift["ratio"]), int(drift["n_sample"]),
-               int(drift["n_clusters"]), int(drift["dim"]))]
-    db_ddl = "ratio double, n_sample int, n_clusters int, dim int"
-    # r13: driver-side write when local, same rename landing
-    if not indexlog.write_meta_rows(spark, tmp, db_row, db_ddl):
-        (one_slice_df(spark, db_row, db_ddl)
-           .write.mode("overwrite").parquet(tmp))
-    _rename_into(spark, tmp, f"{path}/drift_baseline/batch={gen}")
+    planted drift on low-dim fixtures). Landed atomically
+    (:func:`_write_gen_table`): ``gen`` is committed and live when this
+    runs."""
+    _write_gen_table(
+        spark, path, "drift_baseline", gen,
+        [(float(drift["ratio"]), int(drift["n_sample"]),
+          int(drift["n_clusters"]), int(drift["dim"]))],
+        "ratio double, n_sample int, n_clusters int, dim int")
 
 
 def read_drift_baseline(spark: SparkSession, path: str,
@@ -725,17 +675,11 @@ def read_drift_baseline(spark: SparkSession, path: str,
     """The persisted healthy-ratio record for one generation, or None
     when this generation was never calibrated (pre-feature index, or
     a build that skipped it)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/drift_baseline/batch={gen}")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    try:
+        rows = filesystem_for(spark, path).read_rows(
+            f"{path}/drift_baseline/batch={gen}")
+    except FileNotFoundError:
         return None
-    rows = indexlog.read_meta_rows(
-        spark, f"{path}/drift_baseline/batch={gen}")
-    if rows is None:
-        rows = [r.asDict() for r in spark.read.parquet(
-            f"{path}/drift_baseline/batch={gen}").collect()]
     return rows[0] if rows else None
 
 

@@ -46,6 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dsgrid_spark.filesystem import filesystem_for
 from dsgrid_spark.pipeline import indexlog
 from dsgrid_spark.pipeline.text import ANALYZERS
 
@@ -172,13 +173,8 @@ def _df_query_terms(queries: DataFrame, analyzer: str,
 
 
 def _read_stats(spark: SparkSession, path: str) -> dict:
-    """The index's one stats row as a dict — driver-side read when the
-    index is on the local filesystem (indexlog.read_meta_rows, no Spark
-    job; r13), spark.read elsewhere."""
-    rows = indexlog.read_meta_rows(spark, f"{path}/stats")
-    if rows is not None:
-        return rows[0]
-    return spark.read.parquet(f"{path}/stats").collect()[0].asDict()
+    """The index's one stats row as a dict."""
+    return filesystem_for(spark, path).read_rows(f"{path}/stats")[0]
 
 def _postings(df: DataFrame, id_column: str, text_column: str,
               n_buckets: int, positions: bool = False,
@@ -276,15 +272,12 @@ def write_term_index(df: DataFrame, path: str,
     # postings. The n_docs/total_tokens here are informational
     # as-of-build; query totals come from the batch log, which appends
     # keep current.
-    stats_row = [(int(totals["n_docs"]), int(totals["total_tokens"]),
-                  n_buckets, bool(positions), analyzer)]
-    stats_ddl = ("n_docs long, total_tokens long, n_buckets int,"
-                 " has_positions boolean, analyzer string")
-    if not indexlog.write_meta_rows(spark, f"{path}/stats", stats_row,
-                                    stats_ddl):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, stats_row, stats_ddl)
-           .write.mode("overwrite").parquet(f"{path}/stats"))
+    filesystem_for(spark, path).write_rows(
+        f"{path}/stats",
+        [(int(totals["n_docs"]), int(totals["total_tokens"]), n_buckets,
+          bool(positions), analyzer)],
+        "n_docs long, total_tokens long, n_buckets int,"
+        " has_positions boolean, analyzer string")
     indexlog.log_batch(spark, path, indexlog.BASE_BATCH,
                        n_docs=int(totals["n_docs"]),
                        total_tokens=int(totals["total_tokens"]))
@@ -575,8 +568,8 @@ def append_term_index(df: DataFrame, path: str,
         # replayed batch: already fully ingested (possibly since
         # compacted away -- its rows live on in the compacted batch)
         return False
-    indexlog.delete_glob(
-        spark, f"{path}/postings/bucket=*/batch={batch_id}")
+    filesystem_for(spark, path).glob_delete(
+        f"{path}/postings/bucket=*/batch={batch_id}")
     from pyspark.sql import Observation
 
     obs = Observation()

@@ -46,6 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dsgrid_spark.filesystem import filesystem_for
 from dsgrid_spark.pipeline import indexlog
 from dsgrid_spark.pipeline.dedup import (exact_dedup, incremental_dedup,
                                          minhash_signatures)
@@ -71,12 +72,7 @@ class ConcurrentBatchError(RuntimeError):
 
 
 def _read_params(spark: SparkSession, path: str) -> dict:
-    # r13: one meta row — driver-side read (indexlog.read_meta_rows; no
-    # Spark job), spark.read on non-local filesystems
-    rows = indexlog.read_meta_rows(spark, f"{path}/meta")
-    if rows is not None:
-        return rows[0]
-    return spark.read.parquet(f"{path}/meta").collect()[0].asDict()
+    return filesystem_for(spark, path).read_rows(f"{path}/meta")[0]
 
 
 def sig_store_params(spark: SparkSession, path: str) -> dict:
@@ -125,11 +121,10 @@ def _swap_corpus_batch(spark: SparkSession, path: str, corpus_path: str,
     Raises :class:`ConcurrentBatchError` — with only OUR artifacts
     removed — when the id committed under another writer at any
     check."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    fs = filesystem_for(spark, corpus_path)
     tmp = f"{corpus_path}/_tmp.{batch_id}"
     dst = f"{corpus_path}/batch={batch_id}"
-    indexlog.delete_glob(spark, tmp)
+    fs.rm_tree(tmp)
     # the files carry no batch column: the partition value comes from
     # the directory name after the rename, exactly as partitionBy
     # writes it
@@ -139,29 +134,29 @@ def _swap_corpus_batch(spark: SparkSession, path: str, corpus_path: str,
         return batch_id in indexlog.batch_sets(spark, path)[1]
 
     if _committed_elsewhere():
-        indexlog.delete_glob(spark, tmp)
+        fs.rm_tree(tmp)
         raise ConcurrentBatchError(
             f"batch {batch_id!r} was committed by another writer "
             f"mid-ingest; these survivors were NOT registered — "
             f"re-run under a fresh batch id")
     # only a CRASHED PRIOR ATTEMPT's orphan can exist here (the id is
     # uncommitted); a live racer's dir appearing after this delete
-    # makes the rename nest, which the post-swap check unwinds
-    indexlog.delete_glob(spark, dst)
-    tp = jvm.org.apache.hadoop.fs.Path(tmp)
-    dp = jvm.org.apache.hadoop.fs.Path(dst)
-    fs = tp.getFileSystem(conf)
-    renamed = fs.rename(tp, dp)
+    # makes the rename nest (Hadoop) or fail (local), which the
+    # post-swap check unwinds
+    fs.rm_tree(dst)
+    try:
+        renamed = fs.rename(tmp, dst)
+    except OSError:  # local rename onto a racer's non-empty dir
+        renamed = False
     if _committed_elsewhere() or not renamed:
         # unwind OUR artifacts only: the clean-rename dir is wholly
         # ours; a nested rename (dst existed) left ours inside it
-        nested = jvm.org.apache.hadoop.fs.Path(
-            f"{dst}/_tmp.{batch_id}")
+        nested = f"{dst}/_tmp.{batch_id}"
         if fs.exists(nested):
-            fs.delete(nested, True)
+            fs.rm_tree(nested)
         elif renamed:
-            indexlog.delete_glob(spark, dst)
-        indexlog.delete_glob(spark, tmp)
+            fs.rm_tree(dst)
+        fs.rm_tree(tmp)
         raise ConcurrentBatchError(
             f"batch {batch_id!r} was committed by another writer "
             f"mid-ingest (detected at the corpus swap); these "
@@ -213,13 +208,9 @@ def write_sig_store(df: DataFrame, path: str, text_column: str = "text",
     if corpus_path is not None:
         _write_corpus_batch(df, corpus_path, indexlog.BASE_BATCH,
                             mode="overwrite")
-    meta_ddl = "num_hashes int, shingle_k int, seed int, n_shards int"
-    meta_row = [(num_hashes, shingle_k, seed, n_shards)]
-    if not indexlog.write_meta_rows(spark, f"{path}/meta", meta_row,
-                                    meta_ddl):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, meta_row, meta_ddl)
-           .write.mode("overwrite").parquet(f"{path}/meta"))
+    filesystem_for(spark, path).write_rows(
+        f"{path}/meta", [(num_hashes, shingle_k, seed, n_shards)],
+        "num_hashes int, shingle_k int, seed int, n_shards int")
     indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
 
 
@@ -246,7 +237,8 @@ def append_sig_store(df: DataFrame, path: str,
         # compacted away -- its rows live on in the compacted batch)
         return False
     params = _read_params(spark, path)
-    indexlog.delete_glob(spark, f"{path}/sigs/shard=*/batch={batch_id}")
+    filesystem_for(spark, path).glob_delete(
+        f"{path}/sigs/shard=*/batch={batch_id}")
     rows = _sig_rows(df, text_column, id_column, params, batch_id,
                      signatures)
     (rows.repartition("shard")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import StructField, StructType
 
+from dsgrid_spark.filesystem import filesystem_for
 from dsgrid_spark.session import one_slice_df as _osdf
 
 from dsgrid_spark.pipeline import indexlog
@@ -1231,25 +1232,14 @@ def write_centroid_generation(spark, path: str,
     # compact()'s marker transfer copies rows verbatim (new batch,
     # same gen_src), so two markers are the same generation exactly
     # when their gen_src matches — what resolve_generation's pin
-    # validation keys on.
-    # r13: the centroid table is driver-bounded by construction (it
-    # arrives as a Python list), so it writes driver-side when local
-    # (indexlog.write_meta_rows — no Spark job per generation flip).
-    # mode="overwrite" reproduces the static-overwrite semantics (the
-    # whole centroids base dir is replaced) before the partition lands.
+    # validation keys on. mode="overwrite" replaces the whole
+    # centroids base dir before the partition lands.
+    fs = filesystem_for(spark, path)
     if mode == "overwrite":
-        indexlog.delete_glob(spark, f"{path}/centroids")
-    if indexlog.write_meta_rows(
-            spark, f"{path}/centroids",
-            [(i, c, gen) for i, c in rows],
-            "cluster int, centroid array<double>, gen_src string",
-            partition=("batch", gen)):
-        return
-    (_osdf(spark, rows, "cluster int, centroid array<double>")
-       .withColumn("gen_src", F.lit(gen))
-       .withColumn("batch", F.lit(gen))
-       .write.mode(mode).partitionBy("batch")
-       .parquet(f"{path}/centroids"))
+        fs.glob_delete(f"{path}/centroids")
+    fs.write_rows(f"{path}/centroids", [(i, c, gen) for i, c in rows],
+                  "cluster int, centroid array<double>, gen_src string",
+                  partition=("batch", gen))
 
 
 def write_ivf_index(df: DataFrame, path: str,
@@ -1424,8 +1414,8 @@ def append_ivf_index(df: DataFrame, path: str,
         # compacted away -- its rows live on in the compacted batch)
         return False
     indexlog.check_appends_allowed(spark, path)
-    indexlog.delete_glob(
-        spark, f"{path}/vectors/cluster=*/batch={batch_id}")
+    filesystem_for(spark, path).glob_delete(
+        f"{path}/vectors/cluster=*/batch={batch_id}")
     from dsgrid_spark.pipeline.pq import _read_centroids
     gen = indexlog.resolve_generation(spark, path, committed)
     centroids = _read_centroids(spark, path, gen)
@@ -1566,20 +1556,14 @@ def write_binary_index(df: DataFrame, path: str,
         # a rebuild DOWN from store_vectors=True must reclaim the old
         # full-precision subtree (the dominant payload): meta now says
         # no vectors, so nothing would ever read OR vacuum it
-        indexlog.delete_glob(spark, f"{path}/vectors")
+        filesystem_for(spark, path).glob_delete(f"{path}/vectors")
     write_centroid_generation(spark, path, coarse_centroids,
                               indexlog.BASE_BATCH)
-    meta_ddl = ("dim int, word_bits int, store_vectors boolean, "
-                "vectors_dtype string")
-    meta_row = [(dim, BINARY_WORD_BITS, bool(store_vectors),
-                 vectors_dtype)]
-    # r13: driver-side metadata write (indexlog.write_meta_rows — no
-    # Spark job); the Spark write remains the non-local path
-    if not indexlog.write_meta_rows(spark, f"{path}/meta", meta_row,
-                                    meta_ddl):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, meta_row, meta_ddl)
-           .write.mode("overwrite").parquet(f"{path}/meta"))
+    filesystem_for(spark, path).write_rows(
+        f"{path}/meta",
+        [(dim, BINARY_WORD_BITS, bool(store_vectors), vectors_dtype)],
+        "dim int, word_bits int, store_vectors boolean, "
+        "vectors_dtype string")
     indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
 
 
@@ -1619,9 +1603,9 @@ def append_binary_index(df: DataFrame, path: str,
         raise ValueError(f"batch vector dim {len(first[0])} != index "
                          f"dim {meta['dim']}")
     indexlog.check_appends_allowed(spark, path)
-    indexlog.delete_glob(spark, f"{path}/bits/cluster=*/batch={batch_id}")
-    indexlog.delete_glob(spark,
-                         f"{path}/vectors/cluster=*/batch={batch_id}")
+    fs = filesystem_for(spark, path)
+    fs.glob_delete(f"{path}/bits/cluster=*/batch={batch_id}")
+    fs.glob_delete(f"{path}/vectors/cluster=*/batch={batch_id}")
     gen = indexlog.resolve_generation(spark, path, committed)
     centroids = _read_centroids(spark, path, gen)
     assigned = _assign_canonical(df, centroids, id_column, vector_column,

@@ -49,6 +49,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dsgrid_spark.filesystem import filesystem_for
 from dsgrid_spark.pipeline.ingest import _stream_id
 
 __all__ = ["index_kind", "stream_batch_id", "streaming_index_append",
@@ -62,15 +63,14 @@ _KINDS = ("term", "ivf", "pq", "binary", "sigs")
 
 def index_kind(spark: SparkSession, path: str) -> str:
     """term | ivf | pq | binary | sigs, detected from the index layout
-    (Hadoop FileSystem API, so any Spark-supported filesystem). Raises
-    ValueError for half-built trees instead of guessing: appending raw
-    vectors into a crashed PQ build would corrupt it silently."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    (through :func:`filesystem_for`, so any Spark-supported
+    filesystem). Raises ValueError for half-built trees instead of
+    guessing: appending raw vectors into a crashed PQ build would
+    corrupt it silently."""
+    fs = filesystem_for(spark, path)
 
     def exists(sub: str) -> bool:
-        jp = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-        return jp.getFileSystem(conf).exists(jp)
+        return fs.exists(f"{path}/{sub}")
 
     if exists("meta") and exists("codes"):
         return "pq"

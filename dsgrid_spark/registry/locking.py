@@ -15,6 +15,12 @@ expires instead of wedging the registry forever:
 - **acquire**: create the lock file exclusively; if that fails, read the
   holder — same uuid → re-entrant success; expired (now − timestamp >
   ttl) → break the stale lock and retry; otherwise poll until timeout.
+- **stale break**: never check-then-delete (two breakers that both saw
+  the stale holder would let the second delete the lock the first just
+  created). The lock is renamed to a breaker-unique tombstone
+  (``filesystem.break_marker``, the same primitive the index compaction
+  lock uses); the breaker proceeds only when the tombstone carries the
+  stale holder's uuid, and otherwise puts it back and backs off.
 - **read-back**: after a successful create, re-read the file and require
   our uuid. On strict filesystems this always passes; on an object store
   whose create is last-writer-wins it demotes a double-acquire to a
@@ -35,7 +41,7 @@ import uuid as uuid_mod
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from dsgrid_spark.filesystem import FilesystemInterface
+from dsgrid_spark.filesystem import FilesystemInterface, break_marker
 
 LOCK_DIR = ".locks"
 LOCK_NAME = "registry.lock"
@@ -73,6 +79,12 @@ class RegistryLock:
         except (OSError, ValueError):
             return None
 
+    def _holder_uuid(self, path: str):
+        try:
+            return json.loads(self.fs.read_text(path)).get("uuid")
+        except (OSError, ValueError, AttributeError):
+            return None
+
     def _is_stale(self, holder: dict) -> bool:
         ts = holder.get("timestamp")
         if not isinstance(ts, (int, float)):
@@ -99,10 +111,10 @@ class RegistryLock:
             if holder is not None and holder.get("uuid") == self.uuid:
                 self._depth = 1  # our own file (e.g. retry after a crash)
                 return
-            if holder is not None and self._is_stale(holder):
-                # break the expired lock; the create_exclusive retry
-                # decides the winner among concurrent breakers
-                self.fs.rm_tree(self.lock_path)
+            broke = holder is not None and self._is_stale(holder) and \
+                break_marker(self.fs, self.lock_path,
+                             lambda tomb: self._holder_uuid(tomb)
+                             == holder.get("uuid"))
             if time.monotonic() >= deadline:
                 holder = holder or {}
                 raise RegistryLockError(
@@ -111,7 +123,7 @@ class RegistryLock:
                     f"age={time.time() - holder.get('timestamp', 0):.0f}s) "
                     f"at {self.lock_path}; retries timed out after "
                     f"{self.timeout_seconds}s")
-            if holder is None or not self._is_stale(holder):
+            if not broke:
                 time.sleep(self.poll_seconds)
 
     def release(self, force: bool = False) -> None:

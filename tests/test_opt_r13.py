@@ -1,17 +1,14 @@
-"""Round-13 OPTIMIZATION tests: pin the driver-side metadata IO fast
-path (indexlog.read_meta_rows / write_meta_rows — guide §5: the driver
-reads and writes driver-bounded metadata itself instead of scheduling a
-Spark job per one-row parquet file) bit- and schema-compatible with the
-Spark read/write paths it replaces, in BOTH directions, and pin the
-non-local-filesystem fallback."""
+"""Driver-side metadata IO: ``LocalFilesystem.write_rows`` (pyarrow, no
+Spark job per one-row parquet file) stays bit- and schema-compatible
+with the Spark writer it replaces, and an overwrite leaves nothing of
+the previous write behind. The same checks run through both filesystem
+implementations in ``test_filesystem.py``."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
-from dsgrid_spark.pipeline import indexlog
+from dsgrid_spark.filesystem import LocalFilesystem
 from dsgrid_spark.session import one_slice_df
 
 STATS_DDL = ("n_docs long, total_tokens long, n_buckets int,"
@@ -20,12 +17,12 @@ STATS_ROW = [(250, 31415, 8, False, "simple")]
 
 
 def test_write_meta_rows_spark_readable(spark, tmp_path):
-    """A flat overwrite via the pyarrow fast path reads back through
+    """A flat overwrite via the pyarrow path reads back through
     spark.read.parquet with the values AND dtypes the one_slice_df
     Spark write produces."""
     fast = f"{tmp_path}/fast"
     slow = f"{tmp_path}/slow"
-    assert indexlog.write_meta_rows(spark, fast, STATS_ROW, STATS_DDL)
+    LocalFilesystem().write_rows(fast, STATS_ROW, STATS_DDL)
     (one_slice_df(spark, STATS_ROW, STATS_DDL)
        .write.mode("overwrite").parquet(slow))
     df_fast = spark.read.parquet(fast)
@@ -38,121 +35,11 @@ def test_write_meta_rows_spark_readable(spark, tmp_path):
 def test_write_meta_rows_overwrite_replaces(spark, tmp_path):
     """Overwrite semantics: a second write fully replaces the first
     (no stale part files), like mode('overwrite')."""
+    fs = LocalFilesystem()
     p = f"{tmp_path}/meta"
-    assert indexlog.write_meta_rows(spark, p, STATS_ROW, STATS_DDL)
-    row2 = [(999, 1, 4, True, "std")]
-    assert indexlog.write_meta_rows(spark, p, row2, STATS_DDL)
-    got = indexlog.read_meta_rows(spark, p)
+    fs.write_rows(p, STATS_ROW, STATS_DDL)
+    fs.write_rows(p, [(999, 1, 4, True, "std")], STATS_DDL)
+    got = fs.read_rows(p)
     assert len(got) == 1 and got[0]["n_docs"] == 999
-
-
-def test_partition_append_matches_partitionby(spark, tmp_path):
-    """The partition-append form lays out <dir>/batch=<id>/ exactly as
-    partitionBy does: same directory shape, partition column derived
-    from the dirname by BOTH readers, partition column absent from the
-    file payload."""
-    fast = f"{tmp_path}/fast_log"
-    slow = f"{tmp_path}/slow_log"
-    for b, n in (("base", 10), ("auto000001", 7)):
-        assert indexlog.write_meta_rows(
-            spark, fast, [(1, n)], "committed long, n_docs long",
-            partition=("batch", b))
-        (one_slice_df(spark, [(1, n, b)],
-                      "committed long, n_docs long, batch string")
-           .write.mode("append").partitionBy("batch").parquet(slow))
-    df_fast = spark.read.parquet(fast)
-    df_slow = spark.read.parquet(slow)
-    assert df_fast.schema == df_slow.schema
-    key = lambda r: r["batch"]  # noqa: E731
-    assert (sorted([tuple(r) for r in df_fast.collect()])
-            == sorted([tuple(r) for r in df_slow.collect()]))
-    # pyarrow reader sees both layouts identically
-    ra = sorted(indexlog.read_meta_rows(spark, fast), key=key)
-    rb = sorted(indexlog.read_meta_rows(spark, slow), key=key)
-    assert ra == rb
-    # partition column lives in the dirname, not the file
-    import pyarrow.parquet as pq
-    files = [os.path.join(d, f)
-             for d, _, fs in os.walk(fast) for f in fs
-             if f.endswith(".parquet")]
-    assert files and all(
-        "batch" not in pq.read_table(f).column_names for f in files)
-
-
-def test_read_meta_rows_on_spark_written_log(spark, tmp_path):
-    """read_meta_rows over a log the SPARK path wrote (fallback writer
-    forced) equals the spark.read view — the mixed-engine case a
-    pre-r13 index upgrade hits."""
-    lp = f"{tmp_path}/idx/batches"
-    for b, n in (("base", 3), ("day1", 4)):
-        (one_slice_df(spark, [(1, n, b)],
-                      "committed long, n_docs long, batch string")
-           .write.mode("append").partitionBy("batch").parquet(lp))
-    via_pa = sorted(indexlog.read_meta_rows(spark, lp),
-                    key=lambda r: r["batch"])
-    via_spark = sorted(
-        (r.asDict() for r in spark.read.parquet(lp).collect()),
-        key=lambda r: r["batch"])
-    assert via_pa == via_spark
-
-
-def test_read_meta_rows_merges_missing_columns(spark, tmp_path):
-    """Files lacking a column read as None for it (the mergeSchema
-    tolerance resolve_timestamp relies on for pre-commit-time logs)."""
-    lp = f"{tmp_path}/log"
-    assert indexlog.write_meta_rows(spark, lp, [(1,)], "committed long",
-                                    partition=("batch", "old"))
-    assert indexlog.write_meta_rows(
-        spark, lp, [(1, 123456789)], "committed long, committed_at_ms long",
-        partition=("batch", "new"))
-    rows = {r["batch"]: r for r in indexlog.read_meta_rows(spark, lp)}
-    assert rows["old"]["committed_at_ms"] is None
-    assert rows["new"]["committed_at_ms"] == 123456789
-
-
-def test_meta_helpers_nonlocal_fallback(spark, tmp_path):
-    """Non-local schemes bypass the fast path: read returns None, write
-    returns False (callers run the Spark path) — without touching any
-    network filesystem."""
-    assert indexlog._meta_local_dir(spark, "s3a://bucket/idx") is None
-    assert indexlog.read_meta_rows(spark, "s3a://bucket/idx/meta") is None
-    assert not indexlog.write_meta_rows(
-        spark, "hdfs://nn/idx/meta", STATS_ROW, STATS_DDL)
-    # unmappable type (timestamp) also falls back, writing nothing
-    target = f"{tmp_path}/never_written"
-    assert not indexlog.write_meta_rows(
-        spark, target, [(None,)], "v timestamp")
-    assert not os.path.exists(target)
-
-
-def test_read_meta_rows_missing_dir_raises(spark, tmp_path):
-    """A missing or data-free dir raises (the spark.read analysis-error
-    parity existing try/except call sites depend on)."""
-    with pytest.raises(FileNotFoundError):
-        indexlog.read_meta_rows(spark, f"{tmp_path}/nope")
-    os.makedirs(f"{tmp_path}/empty")
-    with pytest.raises(FileNotFoundError):
-        indexlog.read_meta_rows(spark, f"{tmp_path}/empty")
-
-
-def test_log_batch_fast_path_preserves_log_contract(spark, tmp_path):
-    """log_batch → committed_batches / log_snapshot / resolve_timestamp
-    behave identically through the driver-side writer: ids visible,
-    totals summed, commit times readable."""
-    path = f"{tmp_path}/idx"
-    indexlog.log_batch(spark, path, "base", n_docs=5, total_tokens=100)
-    indexlog.log_batch(spark, path, "auto000001", n_docs=2,
-                       total_tokens=40)
-    ids, totals = indexlog.log_snapshot(spark, path, "n_docs",
-                                        "total_tokens")
-    assert ids == {"base", "auto000001"}
-    assert totals == {"n_docs": 7, "total_tokens": 140}
-    assert indexlog.committed_batches(spark, path) == ids
-    # time-travel sees the commit times the fast writer stamped
-    view = indexlog.resolve_timestamp(
-        spark, path, "2100-01-01T00:00:00+00:00")
-    assert view == ids
-    # a hidden temp file never counts as data
-    lp = indexlog._log_path(path)
-    assert not any(f.startswith(".") and f.endswith(".tmp")
-                   for d, _, fs in os.walk(lp) for f in fs)
+    assert spark.read.parquet(p).count() == 1
+    assert len([f for f in os.listdir(p) if f.endswith(".parquet")]) == 1

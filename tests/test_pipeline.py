@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from dsgrid_spark.filesystem import LocalFilesystem
 from dsgrid_spark.pipeline.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
@@ -2434,7 +2435,7 @@ def test_append_term_index_exactly_once(spark, tmp_path):
 
     # crashed attempt: data landed but the log entry (written LAST)
     # didn't — the retry must clean the orphan partitions and re-ingest
-    indexlog.delete_glob(spark, f"{path}/batches/batch=ingest-42")
+    LocalFilesystem().glob_delete(f"{path}/batches/batch=ingest-42")
     assert append_term_index(b, path, batch_id="ingest-42") is True
     assert sorted(map(tuple, spark.read.parquet(f"{path}/postings")
                       .drop("batch").collect())) == want_post
@@ -2473,7 +2474,7 @@ def test_append_ivf_index_exactly_once(spark, tmp_path):
                      .select("id", "cluster").collect()))
     assert got == want
 
-    indexlog.delete_glob(spark, f"{path}/batches/batch=v7")
+    LocalFilesystem().glob_delete(f"{path}/batches/batch=v7")
     assert append_ivf_index(b, path, batch_id="v7") is True
     got = sorted(map(tuple, spark.read.parquet(f"{path}/vectors")
                      .select("id", "cluster").collect()))
@@ -2594,7 +2595,7 @@ def test_index_readers_never_see_uncommitted_batch(spark, tmp_path):
     # mid-append on-disk state: batch data fully landed, log entry not
     # yet written (simulated by a real append minus its commit record)
     assert append_term_index(b, path, batch_id="inflight") is True
-    indexlog.delete_glob(spark, f"{path}/batches/batch=inflight")
+    LocalFilesystem().glob_delete(f"{path}/batches/batch=inflight")
     assert snap() == pre_bm25
     assert sorted(r["id"] for r in
                   phrase_search(spark, path, "window stream").collect()) \
@@ -2633,7 +2634,7 @@ def test_ivf_readers_never_see_uncommitted_batch(spark, tmp_path):
     pre = snap()
 
     assert append_ivf_index(b, path, batch_id="inflight") is True
-    indexlog.delete_glob(spark, f"{path}/batches/batch=inflight")
+    LocalFilesystem().glob_delete(f"{path}/batches/batch=inflight")
     assert snap() == pre  # orphan vectors invisible
 
     assert append_ivf_index(b, path, batch_id="inflight") is True
@@ -2664,7 +2665,7 @@ def test_auto_batch_id_intent_survives_interleaved_commit(spark, tmp_path):
     # state by removing the commit record and re-claiming the id —
     # the claim is exactly the marker mkdir the crashed run performed.)
     assert append_term_index(b, path) is True  # claims auto000002
-    indexlog.delete_glob(spark, f"{path}/batches/batch=auto000002")
+    LocalFilesystem().glob_delete(f"{path}/batches/batch=auto000002")
     assert indexlog.claim_auto_batch_id(
         spark, path, indexlog.committed_batches(spark, path)) == "auto000002"
     assert indexlog.open_intents(spark, path) == {"auto000002"}
@@ -2711,7 +2712,7 @@ def test_vacuum_cleans_expired_orphans_keeps_inflight(spark, tmp_path):
 
     # crashed auto-id append: data dirs + intent marker, no log entry
     assert append_term_index(b, path) is True
-    indexlog.delete_glob(spark, f"{path}/batches/batch=auto000002")
+    LocalFilesystem().glob_delete(f"{path}/batches/batch=auto000002")
     indexlog.claim_auto_batch_id(
         spark, path, indexlog.committed_batches(spark, path))
     # committed named batch + a STALE intent for it (crash between
@@ -4033,7 +4034,7 @@ def test_index_kind_refuses_crashed_pq_as_ivf(spark, tmp_path):
     path = str(tmp_path / "pq")
     write_pq_index(emb, path, cents, books)
     assert index_kind(spark, path) == "pq"
-    indexlog.delete_glob(spark, f"{path}/meta")
+    LocalFilesystem().glob_delete(f"{path}/meta")
     with _pytest.raises(ValueError, match="incomplete index tree"):
         index_kind(spark, path)
 
@@ -4182,7 +4183,7 @@ def test_as_of_guards_string_pin_and_crashed_purge(spark, tmp_path):
     pin = indexlog.committed_batches(spark, path)
     indexlog.compact(spark, path)
     # simulate the crashed purge: base's data dirs deleted, log row kept
-    indexlog.delete_glob(spark, f"{path}/*/*/batch=base")
+    LocalFilesystem().glob_delete(f"{path}/*/*/batch=base")
     with _pytest.raises(ValueError, match="purged"):
         bm25_search(spark, path, ["spark"], as_of=pin)
     # the live view is unaffected (base is retired anyway)

@@ -14,6 +14,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from dsgrid_spark.filesystem import LocalFilesystem
+
 
 # ---------------------------------------------------------------------------
 # DataFrame-query BM25 + hybrid (VERDICT item 1)
@@ -812,15 +814,15 @@ def test_index_fsck_classifies_states(spark, tmp_path, capsys):
     out = indexlog.fsck(spark, path, lock_ttl_seconds=3600)
     assert out["ok"] and len(out["warnings"]) == 2
     indexlog.release_compact_lock(spark, path)
-    indexlog.delete_glob(spark, f"{path}/locks/*.lock.broken-*")
+    LocalFilesystem().glob_delete(f"{path}/locks/*.lock.broken-*")
 
     # WARNING: a visible batch whose data dirs vanished (crashed purge)
-    gone = indexlog.delete_glob(spark, f"{path}/vectors/*/batch=b2")
+    gone = LocalFilesystem().glob_delete(f"{path}/vectors/*/batch=b2")
     assert gone > 0
     # b2 was retired by the rebalance; fake the crashed-purge state on
     # the LIVE batch instead: remove the rebalance batch's dirs
     live = next(iter(indexlog.committed_batches(spark, path)))
-    indexlog.delete_glob(spark, f"{path}/vectors/*/batch={live}")
+    LocalFilesystem().glob_delete(f"{path}/vectors/*/batch={live}")
     out = indexlog.fsck(spark, path)
     assert any("no data directories" in w for w in out["warnings"])
 

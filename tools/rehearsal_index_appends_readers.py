@@ -25,6 +25,7 @@ import time
 
 from pyspark.sql import SparkSession, functions as F
 
+from dsgrid_spark.filesystem import LocalFilesystem
 from dsgrid_spark.pipeline import indexlog
 from dsgrid_spark.pipeline.retrieval import (append_term_index, bm25_search,
                                              write_term_index)
@@ -59,7 +60,7 @@ def main() -> None:
     batches = [cut(6 + i, 7 + i) for i in range(4)]
 
     live = "/tmp/rehearsal_idx/live"
-    indexlog.delete_glob(spark, "/tmp/rehearsal_idx")
+    LocalFilesystem().glob_delete("/tmp/rehearsal_idx")
     t0 = time.time()
     write_term_index(base, live, n_buckets=64)
     t_build = time.time() - t0
@@ -101,7 +102,7 @@ def main() -> None:
             # record — readers must keep seeing the previous state —
             # then retry (cleans + rewrites the orphans, commits)
             assert append_term_index(b, live, batch_id=bid) is True
-            indexlog.delete_glob(spark, f"{live}/batches/batch={bid}")
+            LocalFilesystem().glob_delete(f"{live}/batches/batch={bid}")
             time.sleep(3)  # let readers observe the orphaned window
             assert append_term_index(b, live, batch_id=bid) is True
         else:
@@ -145,7 +146,7 @@ def main() -> None:
         "reader_errors": errors,
     }))
     assert illegal == 0 and regressions == 0 and final_ok and not errors
-    indexlog.delete_glob(spark, "/tmp/rehearsal_idx")
+    LocalFilesystem().glob_delete("/tmp/rehearsal_idx")
     spark.stop()
 
 
