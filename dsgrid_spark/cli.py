@@ -483,36 +483,12 @@ def cmd_index_append(args) -> int:
     spark = get_spark("dsgrid-spark-cli")
     df = spark.read.parquet(args.input)
     kind = _index_kind(spark, args.path)
-    if kind == "term":
-        from dsgrid_spark.pipeline.retrieval import append_term_index
+    from dsgrid_spark.pipeline.stream_index import _appender
 
-        ok = append_term_index(df, args.path, id_column=args.id_column,
-                               text_column=args.text_column,
-                               batch_id=args.batch_id)
-    elif kind == "ivf":
-        from dsgrid_spark.pipeline.similarity import append_ivf_index
-
-        ok = append_ivf_index(df, args.path, id_column=args.id_column,
-                              vector_column=args.vector_column,
-                              batch_id=args.batch_id)
-    elif kind == "binary":
-        from dsgrid_spark.pipeline.similarity import append_binary_index
-
-        ok = append_binary_index(df, args.path, id_column=args.id_column,
-                                 vector_column=args.vector_column,
-                                 batch_id=args.batch_id)
-    elif kind == "sigs":
-        from dsgrid_spark.pipeline.sigstore import append_sig_store
-
-        ok = append_sig_store(df, args.path, text_column=args.text_column,
-                              id_column=args.id_column,
-                              batch_id=args.batch_id)
-    else:
-        from dsgrid_spark.pipeline.pq import append_pq_index
-
-        ok = append_pq_index(df, args.path, id_column=args.id_column,
-                             vector_column=args.vector_column,
-                             batch_id=args.batch_id)
+    column = ({"text_column": args.text_column} if kind in ("term", "sigs")
+              else {"vector_column": args.vector_column})
+    ok = _appender(kind)(df, args.path, id_column=args.id_column,
+                         batch_id=args.batch_id, **column)
     print("ingested" if ok else "replay: batch already committed")
     return 0
 

@@ -1,32 +1,33 @@
-"""Exactly-once batch appends for persisted indexes.
+"""One commit protocol for every persisted index.
 
-The persisted term index (``retrieval.append_term_index``) and IVF index
-(``similarity.append_ivf_index``) grow by parquet appends. A plain
-append is not idempotent: a retried batch (driver crash, orchestrator
-re-run) double-counts its rows silently. This module supplies the same
-exactly-once discipline the registry's streaming-ingest lineage guard
-uses (``pipeline/ingest.py``), adapted to index trees:
+The term index (``retrieval``), the IVF and binary indexes
+(``similarity``), the PQ index (``pq``) and the signature store
+(``sigstore``) all persist as batch-scoped partition directories
+(``<subtree>/<col>=K/batch=<id>/``) plus a tiny ``<index>/batches/``
+parquet log with one row per committed batch, written LAST. Log row
+present == the batch's data and derived tables are complete. Every
+mutation goes through one of three entry points here; the index
+modules supply only a payload callback:
 
-- Every appended batch carries a caller-supplied ``batch_id`` and lands
-  in batch-scoped partition directories
-  (``.../bucket=K/batch=<id>/`` resp. ``.../cluster=K/batch=<id>/``) —
-  the data of one batch is physically addressable.
-- A tiny ``<index>/batches/`` parquet log records one row per committed
-  batch, written LAST. Log entry present == the batch's data, derived
-  tables, and stats are all complete.
-- An append therefore runs: (1) if the batch id is already logged,
-  return without touching anything (replay skip); (2) delete any
-  partition directories left by a previous crashed attempt of the SAME
-  batch (so a retry with drifted content cannot leave orphan rows);
-  (3) write data; (4) log the batch.
+- :func:`build_index` — reset the bookkeeping, write the ``base``
+  payload, log ``base``.
+- :func:`append_batch` — the exactly-once append: a replayed batch id
+  returns False untouched; otherwise the previous crashed attempt's
+  directories are deleted (:func:`clear_attempt`), the payload is
+  written, two pre-commit guards run (append block, centroid
+  generation) and the log row commits.
+- :func:`replace_batches` — the replacement behind :func:`compact` and
+  ``rebalance_index``: claim a ``cmp`` id, record ``(replaced, by)``
+  rows, write the replacing payload, log it with the sources' summed
+  metrics.
 
-Crash anywhere before (4) and the retry redoes (2)-(4) to the identical
-end state; crash after (4) and the retry is a no-op. READERS FILTER TO
-COMMITTED BATCHES (:func:`read_committed`): the ``batch`` partition
-column makes the filter a partition-pruning predicate, so a crashed
-append's orphan directories are invisible to every search and derived
-aggregate until the same batch id is retried — readers see each batch
-atomically at its log commit, never half of one.
+Crash anywhere before the log write and the retry redoes the sequence
+to the identical end state; crash after it and the retry is a no-op.
+READERS FILTER TO COMMITTED BATCHES (:func:`read_committed`): the
+``batch`` partition column makes the filter a partition-pruning
+predicate, so a crashed attempt's orphan directories are invisible to
+every search and derived aggregate — readers see each batch atomically
+at its log commit, never half of one.
 
 Auto batch ids are RESERVED before any data is written via an intent
 marker directory (``<index>/intents/<id>/``): a retry of a crashed
@@ -97,6 +98,11 @@ COMPACT_PREFIX = "cmp"
 #: compaction claim and activate its dormant replacement rows. Shorter
 #: cmp-prefixed names ("cmp-jan", "cmpany2024") stay valid.
 _COMPACT_ID_RE = re.compile(rf"^{COMPACT_PREFIX}\d{{6,}}$")
+
+#: generation-scoped tables, one ``<table>/batch=<establisher>`` dir per
+#: centroid generation: compaction transfers them, and retries, purges
+#: and vacuum treat them as artifacts of their batch
+GEN_TABLES = ("centroids", "codebooks", "drift_baseline")
 
 
 class ConcurrentCompactionError(RuntimeError):
@@ -579,7 +585,7 @@ APPEND_BLOCK_NAME = "append-block"
 
 def block_appends(spark: SparkSession, index_path: str) -> None:
     """Raise the index's append-block marker: every subsequent
-    vector-index append fails with :class:`AppendsBlockedError` at its
+    :func:`append_batch` fails with :class:`AppendsBlockedError` at its
     start AND at its pre-commit check, turning "schedule rebalances
     during quiescence" from an ops convention into an enforced mode
     (``rebalance_index(..., block_appends=True)``). Idempotent; the
@@ -623,8 +629,8 @@ def check_generation_unchanged(spark: SparkSession, index_path: str,
     """Abort an in-flight append whose centroid generation went stale:
     re-resolve the LIVE committed view's generation and raise
     :class:`StaleGenerationError` when it differs from ``gen`` (the
-    generation the append assigned against). Called by every
-    vector-index append immediately before its ``log_batch`` — the
+    generation the append assigned against). Called by
+    :func:`append_batch` immediately before its ``log_batch`` — the
     pre-commit twin of the rebalance's own visible-set re-check, so an
     append racing a rebalance loses LOUDLY no matter which side
     commits first: if the rebalance flips first, the append aborts
@@ -705,7 +711,7 @@ def logged_totals(spark: SparkSession, index_path: str,
 def reset_log(spark: SparkSession, index_path: str) -> None:
     """Delete the exactly-once bookkeeping (batch log, intents, and
     compaction log) ahead of a full index REBUILD — called FIRST by
-    every ``write_*`` so a crash mid-rebuild cannot leave committed ids
+    :func:`build_index` so a crash mid-rebuild cannot leave committed ids
     pointing at vanished data. The compaction log must go too: a stale
     ``(replaced=X, by=Y)`` row would lie dormant until some future
     append commits a NEW batch named ``Y`` and then silently hide a
@@ -1018,14 +1024,14 @@ def payload_subdirs(spark: SparkSession,
 
 def clear_attempt(spark: SparkSession, index_path: str,
                   batch_id: str) -> None:
-    """Delete a previous crashed attempt's artifacts of a replacing
-    batch (compaction or rebalance): payload dirs, its compaction
-    rows, and its centroid and codebook generation dirs."""
+    """Delete a previous crashed attempt's artifacts of one batch id:
+    payload dirs, its compaction rows, and its generation-table dirs
+    (:data:`GEN_TABLES`)."""
     fs = filesystem_for(spark, index_path)
     for pattern in (f"{index_path}/*/*/batch={batch_id}",
                     f"{_compactions_path(index_path)}/by={batch_id}",
-                    f"{_centroids_path(index_path)}/batch={batch_id}",
-                    f"{index_path}/codebooks/batch={batch_id}"):
+                    *(f"{index_path}/{t}/batch={batch_id}"
+                      for t in GEN_TABLES)):
         fs.glob_delete(pattern)
 
 
@@ -1048,6 +1054,87 @@ def summed_metrics(spark: SparkSession, index_path: str,
     return metrics
 
 
+def build_index(spark: SparkSession, index_path: str, write) -> None:
+    """Build (or rebuild) an index: :func:`reset_log` FIRST, so a crash
+    mid-rebuild cannot leave committed ids pointing at vanished data;
+    then ``write(BASE_BATCH)`` lands the payload and returns the
+    ``base`` row's log metrics (or None); the log row commits LAST, so
+    a crashed build leaves no readable index rather than a half-written
+    one. Rebuilding over a live index is not reader-safe: build into a
+    fresh path and swap."""
+    reset_log(spark, index_path)
+    log_batch(spark, index_path, BASE_BATCH, **(write(BASE_BATCH) or {}))
+
+
+def append_batch(spark: SparkSession, index_path: str,
+                 batch_id: str | None, write) -> bool:
+    """Append one batch exactly once; returns False for a replay.
+
+    ``batch_id=None`` claims an auto id under an intent marker
+    (:func:`claim_auto_batch_id`), so a crashed auto-id append retries
+    under its original id. A caller id is validated
+    (:func:`check_batch_id`; ``base`` is the build's). An id already
+    ingested — logged, or absorbed by a compaction — returns False
+    untouched. Otherwise: :func:`check_appends_allowed`, delete the
+    crashed previous attempt (:func:`clear_attempt`), resolve the
+    committed view's centroid generation ``gen`` (None for term and
+    signature indexes), ``write(batch_id, gen)`` — the payload, which
+    returns the log metrics (or None) — then the two pre-commit guards
+    (:func:`check_appends_allowed` again and
+    :func:`check_generation_unchanged`: an append racing a rebalance
+    loses loudly, crash-equivalent and retryable), the log row, and the
+    intent's removal."""
+    committed, ingested = batch_sets(spark, index_path)
+    if batch_id is None:
+        batch_id = claim_auto_batch_id(spark, index_path, ingested)
+    check_batch_id(batch_id)
+    if batch_id == BASE_BATCH:
+        raise ValueError(f"batch_id {BASE_BATCH!r} is reserved for the "
+                         "initial build")
+    if batch_id in ingested:
+        # replayed batch: already fully ingested (possibly since
+        # compacted away -- its rows live on in the compacted batch)
+        return False
+    check_appends_allowed(spark, index_path)
+    clear_attempt(spark, index_path, batch_id)
+    gen = resolve_generation(spark, index_path, committed)
+    metrics = write(batch_id, gen) or {}
+    check_appends_allowed(spark, index_path)
+    check_generation_unchanged(spark, index_path, gen)
+    log_batch(spark, index_path, batch_id, **metrics)
+    clear_intent(spark, index_path, batch_id)
+    return True
+
+
+def replace_batches(spark: SparkSession, index_path: str, sources,
+                    write) -> str:
+    """Replace the ``sources`` batches by ONE new batch; returns its id.
+
+    Claims a ``cmp`` id (:data:`COMPACT_PREFIX`; a crashed attempt's
+    intent is adopted), deletes that attempt (:func:`clear_attempt`),
+    writes the ``(replaced, by)`` rows — inert until the new batch's
+    log row lands, since readers resolve replacements only against
+    logged ``by`` ids — then ``write(batch_id)`` lands the replacing
+    payload. The log row, carrying the sources' summed metrics
+    (:func:`summed_metrics`), is THE COMMIT: the new batch becomes
+    visible and the sources invisible at that one write. A callback
+    that must re-check state right before the commit does so as its
+    last statement."""
+    sources = sorted(sources)
+    batch_id = claim_auto_batch_id(spark, index_path,
+                                   batch_sets(spark, index_path)[1],
+                                   prefix=COMPACT_PREFIX)
+    clear_attempt(spark, index_path, batch_id)
+    filesystem_for(spark, index_path).write_rows(
+        _compactions_path(index_path), [(s,) for s in sources],
+        "replaced string", partition=("by", batch_id))
+    metrics = summed_metrics(spark, index_path, sources)
+    write(batch_id)
+    log_batch(spark, index_path, batch_id, **metrics)
+    clear_intent(spark, index_path, batch_id)
+    return batch_id
+
+
 def compact(spark: SparkSession, index_path: str,
             batches: list[str] | None = None,
             purge: bool = False,
@@ -1064,16 +1151,9 @@ def compact(spark: SparkSession, index_path: str,
     shape as a fresh build), the source batches' log metrics are summed
     onto the new batch's log row (so :func:`logged_totals` is invariant
     under compaction), and the replacement is recorded in
-    ``compactions/`` BEFORE the commit. The sequence:
-
-    1. claim an auto id (intent marker — a crashed compaction retries
-       under the same id and cleans its own orphans);
-    2. delete any previous attempt's data dirs and compaction rows;
-    3. rewrite payloads; 4. write ``(replaced, by)`` rows;
-    5. ``log_batch`` — THE COMMIT: the new batch becomes visible and
-       the sources invisible at this instant, atomically, because
-       readers resolve "replaced" only against logged ``by`` ids;
-    6. clear the intent.
+    ``compactions/`` BEFORE the commit — the sequence is
+    :func:`replace_batches`, so a crashed compaction retries under the
+    same ``cmp`` id and cleans its own orphans first.
 
     Source data/log rows are NOT deleted here unless ``purge=True``
     (safe only when no reader is live); the default leaves them for
@@ -1105,7 +1185,7 @@ def compact(spark: SparkSession, index_path: str,
 def _compact_locked(spark: SparkSession, index_path: str,
                     batches: list[str] | None,
                     purge: bool) -> str | None:
-    visible, ingested = batch_sets(spark, index_path)
+    visible = committed_batches(spark, index_path)
     if batches is None:
         sources = sorted(visible)
     else:
@@ -1117,64 +1197,44 @@ def _compact_locked(spark: SparkSession, index_path: str,
                 " (not committed, or already replaced)")
     if len(sources) < 2:
         return None
-    batch_id = claim_auto_batch_id(spark, index_path, ingested,
-                                   prefix=COMPACT_PREFIX)
-    clear_attempt(spark, index_path, batch_id)
-    metrics = summed_metrics(spark, index_path, sources)
-    fs = filesystem_for(spark, index_path)
     subs = payload_subdirs(spark, index_path)
     if not subs:
         # committing a data-less batch while marking sources replaced
         # would purge real data later — refuse loudly instead
         raise ValueError(f"no <subdir>/<col>=K/batch=B payload found "
                          f"under {index_path!r}; not an index tree?")
-    for sub, col in sorted(subs.items()):
-        df = (spark.read.parquet(f"{index_path}/{sub}")
-              .filter(F.col("batch").isin(sources)))
-        (df.drop("batch").withColumn("batch", F.lit(batch_id))
-           .repartition(F.col(col))
-           .write.mode("append").partitionBy(col, "batch")
-           .parquet(f"{index_path}/{sub}"))
-    # absorbing the batch that ESTABLISHED the current centroid
-    # generation transfers its marker: the compacted batch becomes the
-    # establisher of the SAME generation (identical centroid rows
-    # under the new batch id), so readers' generation resolution —
-    # "the unique gen-marked batch in my view" — keeps working after
-    # the source retires. Tiny payload (K centroid rows).
-    gen_sources = centroid_generations(spark, index_path) & set(sources)
-    for g in sorted(gen_sources):
-        # gen-scoped dirs are read DIRECTLY (pq._read_centroids's
-        # convention): a legacy index with a crashed half-migrated
-        # centroid layout stays compactable
-        (spark.read.parquet(f"{_centroids_path(index_path)}/batch={g}")
-           .withColumn("batch", F.lit(batch_id))
-           .coalesce(1)
-           .write.mode("append").partitionBy("batch")
-           .parquet(_centroids_path(index_path)))
-        # a generation-scoped codebook table (retrained PQ) rides the
-        # same marker transfer — the absorbing batch becomes the
-        # establisher of the SAME generation for both tables
-        cb = f"{index_path}/codebooks/batch={g}"
-        if fs.exists(cb):
-            (spark.read.parquet(cb)
-               .withColumn("batch", F.lit(batch_id))
-               .coalesce(1)
-               .write.mode("append").partitionBy("batch")
-               .parquet(f"{index_path}/codebooks"))
-        # the generation's drift-calibration record rides the same
-        # transfer (missing it is harmless — the auto gate would just
-        # recalibrate — but carrying it keeps the gate armed)
-        db = f"{index_path}/drift_baseline/batch={g}"
-        if fs.exists(db):
-            (spark.read.parquet(db)
-               .withColumn("batch", F.lit(batch_id))
-               .coalesce(1)
-               .write.mode("append").partitionBy("batch")
-               .parquet(f"{index_path}/drift_baseline"))
-    fs.write_rows(_compactions_path(index_path), [(s,) for s in sources],
-                  "replaced string", partition=("by", batch_id))
-    log_batch(spark, index_path, batch_id, **metrics)
-    clear_intent(spark, index_path, batch_id)
+    fs = filesystem_for(spark, index_path)
+
+    def rewrite(batch_id: str) -> None:
+        for sub, col in sorted(subs.items()):
+            df = (spark.read.parquet(f"{index_path}/{sub}")
+                  .filter(F.col("batch").isin(sources)))
+            (df.drop("batch").withColumn("batch", F.lit(batch_id))
+               .repartition(F.col(col))
+               .write.mode("append").partitionBy(col, "batch")
+               .parquet(f"{index_path}/{sub}"))
+        # absorbing the batch that ESTABLISHED the current centroid
+        # generation transfers its generation tables (centroids, a
+        # retrained PQ's codebooks, the drift-calibration record): the
+        # compacted batch becomes the establisher of the SAME generation
+        # (identical rows under the new batch id), so readers'
+        # generation resolution — "the unique gen-marked batch in my
+        # view" — keeps working after the source retires. Gen-scoped
+        # dirs are read DIRECTLY (pq._read_centroids's convention): a
+        # legacy index with a crashed half-migrated centroid layout
+        # stays compactable. Tiny payloads (K or m*k rows).
+        gen_sources = centroid_generations(spark, index_path) & set(sources)
+        for g in sorted(gen_sources):
+            for table in GEN_TABLES:
+                src = f"{index_path}/{table}/batch={g}"
+                if fs.exists(src):
+                    (spark.read.parquet(src)
+                       .withColumn("batch", F.lit(batch_id))
+                       .coalesce(1)
+                       .write.mode("append").partitionBy("batch")
+                       .parquet(f"{index_path}/{table}"))
+
+    batch_id = replace_batches(spark, index_path, sources, rewrite)
     if purge:
         purge_replaced(spark, index_path)
     return batch_id
@@ -1245,9 +1305,9 @@ def purge_replaced(spark: SparkSession, index_path: str,
         # (compact/rebalance already transferred the live generation's
         # marker to the replacing batch); pins into that generation
         # fail loudly at resolve_generation afterwards
-        for sub in ("centroids", "codebooks", "drift_baseline"):
+        for table in GEN_TABLES:
             removed_dirs += fs.glob_delete(
-                f"{index_path}/{sub}/batch={bid}")
+                f"{index_path}/{table}/batch={bid}")
         removed_log_rows += fs.glob_delete(
             f"{_log_path(index_path)}/batch={bid}")
     return {"data_dirs_removed": removed_dirs,
@@ -1310,14 +1370,12 @@ def vacuum(spark: SparkSession, index_path: str,
     fs = filesystem_for(spark, index_path)
 
     def data_statuses(bid):
-        # a crashed rebalance's centroid (and codebook) generation dirs
-        # are artifacts of its (uncommitted) batch like any payload dir
-        # — judged and deleted with the batch as a unit
+        # a crashed rebalance's generation-table dirs are artifacts of
+        # its (uncommitted) batch like any payload dir — judged and
+        # deleted with the batch as a unit
         return [st for pattern in (
                     f"{index_path}/*/*/batch={bid}",
-                    f"{_centroids_path(index_path)}/batch={bid}",
-                    f"{index_path}/codebooks/batch={bid}",
-                    f"{index_path}/drift_baseline/batch={bid}")
+                    *(f"{index_path}/{t}/batch={bid}" for t in GEN_TABLES))
                 for st in fs.glob(pattern)]
 
     intent_sts = fs.glob(f"{_intents_path(index_path)}/*")

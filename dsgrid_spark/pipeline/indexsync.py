@@ -69,8 +69,8 @@ __all__ = ["sync_index"]
 #: 2-level subtrees copied per batch (generation tables, the
 #: generation's drift-calibration record, replacement rows); payloads
 #: are discovered from the tree itself
-_TWO_LEVEL = (("centroids", "batch"), ("codebooks", "batch"),
-              ("drift_baseline", "batch"), ("compactions", "by"))
+_TWO_LEVEL = (*((t, "batch") for t in indexlog.GEN_TABLES),
+              ("compactions", "by"))
 
 
 def _copy_tree(spark, src_path: str, dst_path: str) -> None:

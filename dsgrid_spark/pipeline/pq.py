@@ -975,11 +975,12 @@ def write_pq_index(df: DataFrame, path: str,
     re-ranked scores are then the quantized vectors' exact scores, i.e.
     within per-coordinate rounding (≤ max_abs/254) of the float
     originals; rank flips are possible only between near-ties. Both
-    knobs ride the meta row. Rebuild order follows write_ivf_index:
-    the old log and intents are deleted FIRST so a crash mid-rebuild
-    cannot leave committed ids pointing at vanished data.
+    knobs ride the meta row. The commit sequence is
+    :func:`indexlog.build_index`.
     """
     from dsgrid_spark.pipeline import indexlog
+    from dsgrid_spark.pipeline.similarity import (_check_vector_dim,
+                                                  write_centroid_generation)
 
     if not coarse_centroids:
         raise ValueError("coarse_centroids must be non-empty")
@@ -989,42 +990,38 @@ def write_pq_index(df: DataFrame, path: str,
     if dim != m * dsub:
         raise ValueError(f"coarse centroid dim {dim} != codebook "
                          f"m*dsub {m * dsub}")
-    first = df.select(vector_column).first()
-    if first is not None and first[0] is not None \
-            and len(first[0]) != dim:
-        raise ValueError(f"corpus vector dim {len(first[0])} != coarse "
-                         f"centroid dim {dim}")
+    _check_vector_dim(df, vector_column, dim, build=True)
     spark = df.sparkSession
-    indexlog.reset_log(spark, path)
-    codes, vectors = _assign_encode(df, coarse_centroids, codebooks,
-                                    id_column, vector_column,
-                                    assign_strategy, indexlog.BASE_BATCH,
-                                    residual=residual)
-    (codes.repartition("cluster")
-       .write.mode("overwrite").partitionBy("cluster", "batch")
-       .parquet(f"{path}/codes"))
-    if store_vectors:
-        (_vectors_for_store(vectors, vectors_dtype)
-           .repartition("cluster")
-           .write.mode("overwrite").partitionBy("cluster", "batch")
-           .parquet(f"{path}/vectors"))
-    else:
-        # a rebuild DOWN from store_vectors=True must reclaim the old
-        # full-precision subtree (the dominant payload): meta now says
-        # no vectors, so nothing would ever read OR vacuum it
-        filesystem_for(spark, path).glob_delete(f"{path}/vectors")
-    from dsgrid_spark.pipeline.similarity import write_centroid_generation
-    write_centroid_generation(spark, path, coarse_centroids,
-                              indexlog.BASE_BATCH)
     fs = filesystem_for(spark, path)
-    fs.write_rows(f"{path}/codebooks", _codebooks_to_rows(codebooks),
-                  "j int, i int, centroid array<double>")
-    fs.write_rows(f"{path}/meta",
-                  [(dim, m, k, dsub, bool(store_vectors), bool(residual),
-                    vectors_dtype)],
-                  "dim int, m int, k int, dsub int, store_vectors boolean,"
-                  " residual boolean, vectors_dtype string")
-    indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
+
+    def write(batch_id: str) -> None:
+        codes, vectors = _assign_encode(df, coarse_centroids, codebooks,
+                                        id_column, vector_column,
+                                        assign_strategy, batch_id,
+                                        residual=residual)
+        (codes.repartition("cluster")
+           .write.mode("overwrite").partitionBy("cluster", "batch")
+           .parquet(f"{path}/codes"))
+        if store_vectors:
+            (_vectors_for_store(vectors, vectors_dtype)
+               .repartition("cluster")
+               .write.mode("overwrite").partitionBy("cluster", "batch")
+               .parquet(f"{path}/vectors"))
+        else:
+            # a rebuild DOWN from store_vectors=True must reclaim the old
+            # full-precision subtree (the dominant payload): meta now
+            # says no vectors, so nothing would ever read OR vacuum it
+            fs.glob_delete(f"{path}/vectors")
+        write_centroid_generation(spark, path, coarse_centroids, batch_id)
+        fs.write_rows(f"{path}/codebooks", _codebooks_to_rows(codebooks),
+                      "j int, i int, centroid array<double>")
+        fs.write_rows(f"{path}/meta",
+                      [(dim, m, k, dsub, bool(store_vectors),
+                        bool(residual), vectors_dtype)],
+                      "dim int, m int, k int, dsub int, store_vectors "
+                      "boolean, residual boolean, vectors_dtype string")
+
+    indexlog.build_index(spark, path, write)
 
 
 def append_pq_index(df: DataFrame, path: str,
@@ -1033,66 +1030,38 @@ def append_pq_index(df: DataFrame, path: str,
                     batch_id: str | None = None,
                     assign_strategy: str = "auto") -> bool:
     """Append a vector batch to a persisted PQ index, exactly-once per
-    ``batch_id`` (pipeline/indexlog.py — committed ids no-op, crashed
-    retries clean their own orphans first, auto ids claim intent
-    markers, the log entry commits LAST so readers see the batch
-    atomically). Assignment and encoding use the INDEX'S OWN centroids
-    and codebooks — never caller-supplied, which would desync probes
-    from partitions. Codebooks are not re-trained (the standard PQ
-    maintenance trade; rebuild when the distribution drifts). Equal to
-    a fresh build over the concatenated corpus with the same
-    centroids/codebooks (tested). Returns True when ingested.
+    ``batch_id`` (:func:`indexlog.append_batch`). Assignment and
+    encoding use the INDEX'S OWN centroids and codebooks — never
+    caller-supplied, which would desync probes from partitions.
+    Codebooks are not re-trained (the standard PQ maintenance trade;
+    rebuild when the distribution drifts). Equal to a fresh build over
+    the concatenated corpus with the same centroids/codebooks (tested).
+    Returns True when ingested, False for a replayed id.
     """
     from dsgrid_spark.pipeline import indexlog
+    from dsgrid_spark.pipeline.similarity import _check_vector_dim
 
     spark = df.sparkSession
-    committed, ingested = indexlog.batch_sets(spark, path)
-    if batch_id is None:
-        batch_id = indexlog.claim_auto_batch_id(spark, path, ingested)
-    indexlog.check_batch_id(batch_id)
-    if batch_id == indexlog.BASE_BATCH:
-        raise ValueError(f"batch_id {indexlog.BASE_BATCH!r} is reserved "
-                         "for the initial build")
-    if batch_id in ingested:
-        # replayed batch: already fully ingested (possibly since
-        # compacted away -- its rows live on in the compacted batch)
-        return False
-    meta = _read_meta(spark, path)
-    first = df.select(vector_column).first()
-    if first is not None and first[0] is not None \
-            and len(first[0]) != meta["dim"]:
-        raise ValueError(f"batch vector dim {len(first[0])} != index "
-                         f"dim {meta['dim']}")
-    indexlog.check_appends_allowed(spark, path)
-    fs = filesystem_for(spark, path)
-    fs.glob_delete(f"{path}/codes/cluster=*/batch={batch_id}")
-    fs.glob_delete(f"{path}/vectors/cluster=*/batch={batch_id}")
-    gen = indexlog.resolve_generation(spark, path, committed)
-    centroids = _read_centroids(spark, path, gen)
-    codebooks = _read_codebooks(spark, path, gen)
-    codes, vectors = _assign_encode(df, centroids, codebooks, id_column,
-                                    vector_column, assign_strategy,
-                                    batch_id,
-                                    residual=bool(meta.get("residual",
-                                                           False)))
-    (codes.repartition("cluster")
-       .write.mode("append").partitionBy("cluster", "batch")
-       .parquet(f"{path}/codes"))
-    if meta["store_vectors"]:
-        (_vectors_for_store(vectors,
-                            meta.get("vectors_dtype") or "float64")
-           .repartition("cluster")
+
+    def write(batch_id: str, gen: str | None) -> None:
+        meta = _read_meta(spark, path)
+        _check_vector_dim(df, vector_column, meta["dim"], build=False)
+        codes, vectors = _assign_encode(
+            df, _read_centroids(spark, path, gen),
+            _read_codebooks(spark, path, gen), id_column, vector_column,
+            assign_strategy, batch_id,
+            residual=bool(meta.get("residual", False)))
+        (codes.repartition("cluster")
            .write.mode("append").partitionBy("cluster", "batch")
-           .parquet(f"{path}/vectors"))
-    # pre-commit guards: a rebalance racing this append must not see
-    # old-generation cluster numbers or codes (encoded with the old
-    # codebooks) survive its flip — abort loudly before the commit,
-    # crash-equivalent, retryable (mirrors the IVF/binary appends)
-    indexlog.check_appends_allowed(spark, path)
-    indexlog.check_generation_unchanged(spark, path, gen)
-    indexlog.log_batch(spark, path, batch_id)
-    indexlog.clear_intent(spark, path, batch_id)
-    return True
+           .parquet(f"{path}/codes"))
+        if meta["store_vectors"]:
+            (_vectors_for_store(vectors,
+                                meta.get("vectors_dtype") or "float64")
+               .repartition("cluster")
+               .write.mode("append").partitionBy("cluster", "batch")
+               .parquet(f"{path}/vectors"))
+
+    return indexlog.append_batch(spark, path, batch_id, write)
 
 
 def pq_search(spark, path: str, queries, k: int = 10,

@@ -141,8 +141,8 @@ def rebalance_index(spark: SparkSession, path: str,
     ``block_appends=True`` turns "schedule during quiescence" into an
     ENFORCED mode on a busy index (where every attempt would otherwise
     abort on the visible-set re-check): the run raises the well-known
-    append-block marker for its duration, and every vector-index
-    append fails loudly with :class:`indexlog.AppendsBlockedError` —
+    append-block marker for its duration, and every append to the
+    index fails loudly with :class:`indexlog.AppendsBlockedError` —
     checked at the append's start AND immediately before its commit,
     one FS probe each — instead of racing the flip. The marker is
     removed on completion and expires under the lock ttl if the
@@ -317,14 +317,14 @@ def _rebalance_locked(spark, path, kind, n_clusters, iterations, seed,
                       retrain_codebooks, _pre_commit_hook) -> str:
     from dsgrid_spark.pipeline.pq import (
         _read_centroids, _read_codebooks, _read_meta, _rerank_embedding,
-        _subtract_coarse, codebook_generations, pq_encode, pq_fit,
+        _subtract_coarse, pq_encode, pq_fit,
     )
     from dsgrid_spark.pipeline.similarity import (
         assign_nearest_centroid, kmeans_centroids,
         write_centroid_generation,
     )
 
-    visible, ingested = indexlog.batch_sets(spark, path)
+    visible = indexlog.committed_batches(spark, path)
     if not visible:
         raise ValueError(f"no committed batches at {path!r}; nothing "
                          "to rebalance")
@@ -352,138 +352,144 @@ def _rebalance_locked(spark, path, kind, n_clusters, iterations, seed,
                                  assign_strategy=assign_strategy,
                                  init=init)
 
-    # 2. claim the replacement id and clean any previous attempt
-    batch_id = indexlog.claim_auto_batch_id(
-        spark, path, ingested, prefix=indexlog.COMPACT_PREFIX)
-    indexlog.clear_attempt(spark, path, batch_id)
+    # 2-5 run inside indexlog.replace_batches, which claims the
+    #    replacement id, cleans any previous attempt, writes the
+    #    (replaced, by) rows and commits with the sources' summed metrics
+    def rewrite_all(batch_id: str) -> None:
+        # 2. one assignment pass; the (id, cluster) map is the ONLY
+        #    corpus-scale state carried across the subtree writes
+        newmap = (assign_nearest_centroid(emb, centroids, "embedding",
+                                          strategy=assign_strategy)
+                  .select("id", F.col("__cluster").alias("cluster"))
+                  .localCheckpoint())
 
-    # 3. one assignment pass; the (id, cluster) map is the ONLY
-    #    corpus-scale state carried across the subtree writes
-    newmap = (assign_nearest_centroid(emb, centroids, "embedding",
-                                      strategy=assign_strategy)
-              .select("id", F.col("__cluster").alias("cluster"))
-              .localCheckpoint())
+        def _rewrite(sub: str, df: DataFrame) -> None:
+            (df.join(newmap, "id")
+               .withColumn("batch", F.lit(batch_id))
+               .repartition(F.col("cluster"))
+               .write.mode("append").partitionBy("cluster", "batch")
+               .parquet(f"{path}/{sub}"))
 
-    def _rewrite(sub: str, df: DataFrame) -> None:
-        (df.join(newmap, "id")
-           .withColumn("batch", F.lit(batch_id))
-           .repartition(F.col("cluster"))
-           .write.mode("append").partitionBy("cluster", "batch")
-           .parquet(f"{path}/{sub}"))
-
-    # 4. rewrite payloads: stored values preserved; only residual PQ
-    #    codes are value-dependent on the centroids and re-encode —
-    #    unless retrain_codebooks, which re-encodes EVERYTHING against
-    #    freshly trained codebooks (plain codes included: their values
-    #    depend on the books)
-    _rewrite("vectors", stored.drop("cluster", "batch"))
-    new_books = None
-    if kind == "binary":
-        bits = indexlog.read_committed(spark, path, "bits", ids=visible)
-        _rewrite("bits", bits.drop("cluster", "batch"))
-    elif kind == "pq":
-        meta = _read_meta(spark, path)
-        residual = bool(meta.get("residual", False))
-        if retrain_codebooks:
-            assigned = emb.join(newmap, "id")
-            if residual:
+        # 3. rewrite payloads: stored values preserved; only residual
+        #    PQ codes are value-dependent on the centroids and
+        #    re-encode — unless retrain_codebooks, which re-encodes
+        #    EVERYTHING against freshly trained codebooks (plain codes
+        #    included: their values depend on the books)
+        _rewrite("vectors", stored.drop("cluster", "batch"))
+        new_books = None
+        if kind == "binary":
+            bits = indexlog.read_committed(spark, path, "bits", ids=visible)
+            _rewrite("bits", bits.drop("cluster", "batch"))
+        elif kind == "pq":
+            meta = _read_meta(spark, path)
+            residual = bool(meta.get("residual", False))
+            if retrain_codebooks:
+                assigned = emb.join(newmap, "id")
+                if residual:
+                    enc_in = (_subtract_coarse(assigned, centroids,
+                                               "cluster", "embedding",
+                                               "__r")
+                              .select("id",
+                                      F.col("__r").alias("embedding")))
+                else:
+                    enc_in = assigned.select("id", "embedding")
+                new_books = pq_fit(enc_in, int(meta["dim"]),
+                                   int(meta["m"]), int(meta["k"]),
+                                   vector_column="embedding",
+                                   iterations=iterations, seed=seed,
+                                   fit_sample_cap=fit_sample_cap)
+                codes = pq_encode(enc_in, new_books, id_column="id",
+                                  vector_column="embedding")
+                _rewrite("codes", codes)
+            elif residual:
+                codebooks = _read_codebooks(spark, path, gen)
+                assigned = emb.join(newmap, "id")
                 enc_in = (_subtract_coarse(assigned, centroids, "cluster",
                                            "embedding", "__r")
                           .select("id", F.col("__r").alias("embedding")))
+                codes = pq_encode(enc_in, codebooks, id_column="id",
+                                  vector_column="embedding")
+                _rewrite("codes", codes)
             else:
-                enc_in = assigned.select("id", "embedding")
-            new_books = pq_fit(enc_in, int(meta["dim"]), int(meta["m"]),
-                               int(meta["k"]), vector_column="embedding",
-                               iterations=iterations, seed=seed,
-                               fit_sample_cap=fit_sample_cap)
-            codes = pq_encode(enc_in, new_books, id_column="id",
-                              vector_column="embedding")
-            _rewrite("codes", codes)
-        elif residual:
-            codebooks = _read_codebooks(spark, path, gen)
-            assigned = emb.join(newmap, "id")
-            enc_in = (_subtract_coarse(assigned, centroids, "cluster",
-                                       "embedding", "__r")
-                      .select("id", F.col("__r").alias("embedding")))
-            codes = pq_encode(enc_in, codebooks, id_column="id",
-                              vector_column="embedding")
-            _rewrite("codes", codes)
-        else:
-            codes = indexlog.read_committed(spark, path, "codes",
-                                            ids=visible)
-            _rewrite("codes", codes.drop("cluster", "batch"))
+                codes = indexlog.read_committed(spark, path, "codes",
+                                                ids=visible)
+                _rewrite("codes", codes.drop("cluster", "batch"))
 
-    # 5. the new generation's centroid table + replacement rows; for
-    #    PQ, the codebook table rides the SAME generation flip
-    write_centroid_generation(spark, path, centroids, batch_id,
-                              mode="append")
-    if kind == "pq":
-        from dsgrid_spark.pipeline.pq import _flat_codebook_files
+        # 4. the new generation's centroid table; for PQ, the codebook
+        #    table rides the SAME generation flip
+        write_centroid_generation(spark, path, centroids, batch_id,
+                                  mode="append")
+        if kind == "pq":
+            _land_codebooks(spark, path, meta, gen, batch_id, new_books)
 
-        marked = codebook_generations(spark, path)
-        if new_books is not None:  # retrain_codebooks
-            flat_data = _flat_codebook_files(spark, path)
-            if flat_data:
-                # first retrain of a flat-codebook index — or the
-                # RETRY of one that crashed mid-migration: (re)write
-                # the OLD generation's copy UNCONDITIONALLY from the
-                # still-present flat files (_read_codebooks reads flat
-                # first; _write_codebooks_gen is an idempotent
-                # side-dir+rename). Directory EXISTENCE is not a
-                # completion marker: a crashed partial batch=<gen>
-                # dir must never cause this copy to be skipped and
-                # the flat files then deleted — that would lose the
-                # books pinned readers decode with, permanently (gen
-                # is committed, so vacuum never reclaims the mistake).
-                _write_codebooks_gen(
-                    spark, path, _read_codebooks(spark, path, gen), gen)
-            _write_codebooks_gen(spark, path, new_books, batch_id)
-            if flat_data:
-                # flat files go only after BOTH gen-scoped tables
-                # verifiably hold the full m*k rows
-                expect = int(meta["m"]) * int(meta["k"])
-                for bid in (gen, batch_id):
-                    n = spark.read.parquet(
-                        f"{path}/codebooks/batch={bid}").count()
-                    if n != expect:
-                        raise IOError(
-                            f"codebooks/batch={bid} holds {n} rows, "
-                            f"expected m*k={expect}; keeping the flat "
-                            f"codebook files (retry the rebalance)")
-                fs = filesystem_for(spark, path)
-                for st in _flat_entries(spark, f"{path}/codebooks"):
-                    fs.rm_tree(st.path)
-        elif marked:
-            # gen-scoped layout without retrain: the new generation
-            # reuses the same books — copy them under its id so its
-            # readers resolve them (tiny payload, m*k rows)
+        if _pre_commit_hook is not None:
+            _pre_commit_hook()
+        # 5. abort if any batch committed since the snapshot: it was
+        #    assigned against the OLD generation and would survive the
+        #    flip mis-clustered (module docstring, CONCURRENCY). Last
+        #    statement before the commit: the log write follows it.
+        now_visible = indexlog.batch_sets(spark, path)[0]
+        if now_visible != visible:
+            raise RebalanceAborted(
+                f"batches committed during the rebalance "
+                f"({sorted(now_visible ^ visible)}); nothing was made "
+                f"visible — quiesce appends and re-run (the retry "
+                f"reuses intent {batch_id!r} and cleans this attempt "
+                f"up)")
+
+    # 6. THE COMMIT: new batch + new generation become visible, the
+    #    sources invisible, at one log write
+    return indexlog.replace_batches(spark, path, visible, rewrite_all)
+
+
+def _land_codebooks(spark, path: str, meta: dict, gen: str, batch_id: str,
+                    new_books) -> None:
+    """The new generation's codebook table: the retrained books
+    (``new_books``, migrating a flat table to the generation layout on
+    the way), or — for a gen-scoped layout without retrain — a copy of
+    the live generation's books under ``batch_id``."""
+    from dsgrid_spark.pipeline.pq import (
+        _flat_codebook_files, _read_codebooks, codebook_generations,
+    )
+
+    marked = codebook_generations(spark, path)
+    if new_books is not None:  # retrain_codebooks
+        flat_data = _flat_codebook_files(spark, path)
+        if flat_data:
+            # first retrain of a flat-codebook index — or the RETRY of
+            # one that crashed mid-migration: (re)write the OLD
+            # generation's copy UNCONDITIONALLY from the still-present
+            # flat files (_read_codebooks reads flat first;
+            # _write_codebooks_gen is an idempotent side-dir+rename).
+            # Directory EXISTENCE is not a completion marker: a crashed
+            # partial batch=<gen> dir must never cause this copy to be
+            # skipped and the flat files then deleted — that would lose
+            # the books pinned readers decode with, permanently (gen is
+            # committed, so vacuum never reclaims the mistake).
             _write_codebooks_gen(
-                spark, path, _read_codebooks(spark, path, gen), batch_id)
-    sources = sorted(visible)
-    filesystem_for(spark, path).write_rows(
-        f"{path}/compactions", [(s,) for s in sources], "replaced string",
-        partition=("by", batch_id))
-
-    # 6. summed log metrics (indexlog.compact's convention)
-    metrics = indexlog.summed_metrics(spark, path, sources)
-
-    if _pre_commit_hook is not None:
-        _pre_commit_hook()
-    # 7. abort if any batch committed since the snapshot: it was
-    #    assigned against the OLD generation and would survive the
-    #    flip mis-clustered (module docstring, CONCURRENCY)
-    now_visible = indexlog.batch_sets(spark, path)[0]
-    if now_visible != visible:
-        raise RebalanceAborted(
-            f"batches committed during the rebalance "
-            f"({sorted(now_visible ^ visible)}); nothing was made "
-            f"visible — quiesce appends and re-run (the retry reuses "
-            f"intent {batch_id!r} and cleans this attempt up)")
-    # 8. THE COMMIT: new batch + new generation become visible, the
-    #    sources invisible, at this one log write
-    indexlog.log_batch(spark, path, batch_id, **metrics)
-    indexlog.clear_intent(spark, path, batch_id)
-    return batch_id
+                spark, path, _read_codebooks(spark, path, gen), gen)
+        _write_codebooks_gen(spark, path, new_books, batch_id)
+        if flat_data:
+            # flat files go only after BOTH gen-scoped tables
+            # verifiably hold the full m*k rows
+            expect = int(meta["m"]) * int(meta["k"])
+            for bid in (gen, batch_id):
+                n = spark.read.parquet(
+                    f"{path}/codebooks/batch={bid}").count()
+                if n != expect:
+                    raise IOError(
+                        f"codebooks/batch={bid} holds {n} rows, "
+                        f"expected m*k={expect}; keeping the flat "
+                        f"codebook files (retry the rebalance)")
+            fs = filesystem_for(spark, path)
+            for st in _flat_entries(spark, f"{path}/codebooks"):
+                fs.rm_tree(st.path)
+    elif marked:
+        # gen-scoped layout without retrain: the new generation reuses
+        # the same books — copy them under its id so its readers
+        # resolve them (tiny payload, m*k rows)
+        _write_codebooks_gen(
+            spark, path, _read_codebooks(spark, path, gen), batch_id)
 
 
 #: payload subtree whose row counts define skew, per index kind (the

@@ -239,48 +239,43 @@ def write_term_index(df: DataFrame, path: str,
                      id_column: str = "doc_id", text_column: str = "text",
                      n_buckets: int = 64, positions: bool = False,
                      analyzer: str = "simple") -> None:
-    """Build and persist the inverted index (see module docstring).
-
-    Write order: the old batch LOG (and any intent markers) is deleted
-    FIRST — a crash mid-rebuild must not leave committed ids pointing at
-    vanished data, where a later append with a previously-committed id
-    would silently no-op and drop the batch. Then postings and the
-    config row, then the base-batch log entry LAST: readers filter to
-    logged batches, so a crashed build leaves no readable index rather
-    than a half-written one. Rebuilding over a live index is still not
-    reader-safe (the postings overwrite races a concurrent lister) —
-    build into a fresh path and swap (the ``compact_parquet`` rename
-    convention)."""
+    """Build and persist the inverted index (see module docstring):
+    postings and the config row, committed as the ``base`` batch by
+    :func:`indexlog.build_index` (log reset first, log row last).
+    Rebuilding over a live index is not reader-safe (the postings
+    overwrite races a concurrent lister) — build into a fresh path and
+    swap (the ``compact_parquet`` rename convention)."""
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
     _analyzer_fn(analyzer)  # fail before touching disk on a bad name
     spark = df.sparkSession
-    indexlog.reset_log(spark, path)
     from pyspark.sql import Observation
 
-    obs = Observation()
-    base, tf = _postings(df, id_column, text_column, n_buckets, positions,
-                         analyzer, observation=obs)
-    _write_postings(tf, path, "overwrite", indexlog.BASE_BATCH)
-    # totals observed during the postings write itself — no second
-    # tokenize pass (see _postings); get() returns instantly since the
-    # write action above already ran
-    totals = obs.get
-    # n_buckets and the analyzer name ride the index: probing with a
-    # different bucket count silently prunes to the WRONG buckets, and
-    # analyzing queries differently than the writer silently misses
-    # postings. The n_docs/total_tokens here are informational
-    # as-of-build; query totals come from the batch log, which appends
-    # keep current.
-    filesystem_for(spark, path).write_rows(
-        f"{path}/stats",
-        [(int(totals["n_docs"]), int(totals["total_tokens"]), n_buckets,
-          bool(positions), analyzer)],
-        "n_docs long, total_tokens long, n_buckets int,"
-        " has_positions boolean, analyzer string")
-    indexlog.log_batch(spark, path, indexlog.BASE_BATCH,
-                       n_docs=int(totals["n_docs"]),
-                       total_tokens=int(totals["total_tokens"]))
+    def write(batch_id: str) -> dict:
+        obs = Observation()
+        base, tf = _postings(df, id_column, text_column, n_buckets,
+                             positions, analyzer, observation=obs)
+        _write_postings(tf, path, "overwrite", batch_id)
+        # totals observed during the postings write itself — no second
+        # tokenize pass (see _postings); get() returns instantly since
+        # the write action above already ran
+        got = obs.get
+        totals = {c: int(got[c]) for c in ("n_docs", "total_tokens")}
+        # n_buckets and the analyzer name ride the index: probing with
+        # a different bucket count silently prunes to the WRONG
+        # buckets, and analyzing queries differently than the writer
+        # silently misses postings. The n_docs/total_tokens here are
+        # informational as-of-build; query totals come from the batch
+        # log, which appends keep current.
+        filesystem_for(spark, path).write_rows(
+            f"{path}/stats",
+            [(totals["n_docs"], totals["total_tokens"], n_buckets,
+              bool(positions), analyzer)],
+            "n_docs long, total_tokens long, n_buckets int,"
+            " has_positions boolean, analyzer string")
+        return totals
+
+    indexlog.build_index(spark, path, write)
 
 
 # Pure-Python XXH64 (Collet's public xxHash algorithm), bit-identical
@@ -541,51 +536,32 @@ def append_term_index(df: DataFrame, path: str,
     log commit, and concurrent searches see the old index until that
     commit lands (reader isolation, module docstring).
 
-    The append is EXACTLY-ONCE per ``batch_id`` (pipeline/indexlog.py):
-    an already-committed id returns False without touching the index; a
-    retry of a crashed attempt first deletes that batch's partition
-    directories, then rewrites them and commits the log entry LAST.
-    Omitting ``batch_id`` claims a persisted intent marker
-    (:func:`indexlog.claim_auto_batch_id`), so a crashed auto-id append
-    is retried under its ORIGINAL id even when other batches committed
-    in between. Returns True when the batch was ingested.
+    The append is exactly-once per ``batch_id``
+    (:func:`indexlog.append_batch`). Returns True when the batch was
+    ingested, False for a replayed id.
 
     Results provably equal a fresh build over the concatenated corpus
     (tested), searches included.
     """
     spark = df.sparkSession
     stats = _read_stats(spark, path)
-    n_buckets = int(stats["n_buckets"])
-    committed, ingested = indexlog.batch_sets(spark, path)
-    if batch_id is None:
-        batch_id = indexlog.claim_auto_batch_id(spark, path, ingested)
-    indexlog.check_batch_id(batch_id)
-    if batch_id == indexlog.BASE_BATCH:
-        raise ValueError(
-            f"batch_id {indexlog.BASE_BATCH!r} is reserved for the "
-            "initial build")
-    if batch_id in ingested:
-        # replayed batch: already fully ingested (possibly since
-        # compacted away -- its rows live on in the compacted batch)
-        return False
-    filesystem_for(spark, path).glob_delete(
-        f"{path}/postings/bucket=*/batch={batch_id}")
     from pyspark.sql import Observation
 
-    obs = Observation()
-    base, tf = _postings(df, id_column, text_column, n_buckets,
-                         bool(stats.get("has_positions", False)),
-                         stats.get("analyzer", "simple"),
-                         observation=obs)
-    _write_postings(tf, path, "append", batch_id)
-    # batch totals observed during the postings write — the append used
-    # to re-tokenize its batch for two longs (r12, see _postings)
-    delta = obs.get
-    indexlog.log_batch(spark, path, batch_id,
-                       n_docs=int(delta["n_docs"]),
-                       total_tokens=int(delta["total_tokens"]))
-    indexlog.clear_intent(spark, path, batch_id)
-    return True
+    def write(batch_id: str, gen: str | None) -> dict:
+        obs = Observation()
+        base, tf = _postings(df, id_column, text_column,
+                             int(stats["n_buckets"]),
+                             bool(stats.get("has_positions", False)),
+                             stats.get("analyzer", "simple"),
+                             observation=obs)
+        _write_postings(tf, path, "append", batch_id)
+        # batch totals observed during the postings write — the append
+        # used to re-tokenize its batch for two longs (r12, see
+        # _postings)
+        got = obs.get
+        return {c: int(got[c]) for c in ("n_docs", "total_tokens")}
+
+    return indexlog.append_batch(spark, path, batch_id, write)
 
 
 def rrf_fuse(ranked: list[DataFrame], id_column: str = "id",

@@ -186,32 +186,31 @@ def write_sig_store(df: DataFrame, path: str, text_column: str = "text",
                     signatures: DataFrame | None = None,
                     corpus_path: str | None = None) -> None:
     """Build the store from an initial corpus: sign every row ONCE and
-    persist (id, minhash) sharded by content hash. Rebuild order
-    follows the other indexes: the old log and intents are deleted
-    FIRST so a crash mid-rebuild cannot leave committed ids pointing at
-    vanished data. ``corpus_path`` additionally seeds the accumulated-
-    corpus table (the seed rows under ``batch=base``) so later
-    :func:`ingest_dedup_batch` calls can manage reference text
-    automatically (see its ``corpus_path``)."""
+    persist (id, minhash) sharded by content hash, committed as the
+    ``base`` batch (:func:`indexlog.build_index`). ``corpus_path``
+    additionally seeds the accumulated-corpus table (the seed rows
+    under ``batch=base``) so later :func:`ingest_dedup_batch` calls can
+    manage reference text automatically (see its ``corpus_path``)."""
     if num_hashes <= 0 or shingle_k <= 0 or n_shards <= 0:
         raise ValueError("num_hashes, shingle_k, and n_shards must be "
                          "positive")
     spark = df.sparkSession
-    indexlog.reset_log(spark, path)
     params = {"num_hashes": num_hashes, "shingle_k": shingle_k,
               "seed": seed, "n_shards": n_shards}
-    rows = _sig_rows(df, text_column, id_column, params,
-                     indexlog.BASE_BATCH, signatures)
-    (rows.repartition("shard")
-       .write.mode("overwrite").partitionBy("shard", "batch")
-       .parquet(f"{path}/sigs"))
-    if corpus_path is not None:
-        _write_corpus_batch(df, corpus_path, indexlog.BASE_BATCH,
-                            mode="overwrite")
-    filesystem_for(spark, path).write_rows(
-        f"{path}/meta", [(num_hashes, shingle_k, seed, n_shards)],
-        "num_hashes int, shingle_k int, seed int, n_shards int")
-    indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
+
+    def write(batch_id: str) -> None:
+        rows = _sig_rows(df, text_column, id_column, params, batch_id,
+                         signatures)
+        (rows.repartition("shard")
+           .write.mode("overwrite").partitionBy("shard", "batch")
+           .parquet(f"{path}/sigs"))
+        if corpus_path is not None:
+            _write_corpus_batch(df, corpus_path, batch_id, mode="overwrite")
+        filesystem_for(spark, path).write_rows(
+            f"{path}/meta", [(num_hashes, shingle_k, seed, n_shards)],
+            "num_hashes int, shingle_k int, seed int, n_shards int")
+
+    indexlog.build_index(spark, path, write)
 
 
 def append_sig_store(df: DataFrame, path: str,
@@ -220,33 +219,18 @@ def append_sig_store(df: DataFrame, path: str,
                      batch_id: str | None = None,
                      signatures: DataFrame | None = None) -> bool:
     """Register one batch's signatures, exactly-once per ``batch_id``
-    (pipeline/indexlog.py — committed ids no-op, crashed retries clean
-    their own orphans first, auto ids claim intent markers, the log
-    entry commits LAST so readers see the batch atomically). Signing
-    uses the STORE'S OWN params. Returns True when ingested."""
+    (:func:`indexlog.append_batch`). Signing uses the STORE'S OWN
+    params. Returns True when ingested, False for a replayed id."""
     spark = df.sparkSession
-    committed, ingested = indexlog.batch_sets(spark, path)
-    if batch_id is None:
-        batch_id = indexlog.claim_auto_batch_id(spark, path, ingested)
-    indexlog.check_batch_id(batch_id)
-    if batch_id == indexlog.BASE_BATCH:
-        raise ValueError(f"batch_id {indexlog.BASE_BATCH!r} is reserved "
-                         "for the initial build")
-    if batch_id in ingested:
-        # replayed batch: already fully ingested (possibly since
-        # compacted away -- its rows live on in the compacted batch)
-        return False
-    params = _read_params(spark, path)
-    filesystem_for(spark, path).glob_delete(
-        f"{path}/sigs/shard=*/batch={batch_id}")
-    rows = _sig_rows(df, text_column, id_column, params, batch_id,
-                     signatures)
-    (rows.repartition("shard")
-       .write.mode("append").partitionBy("shard", "batch")
-       .parquet(f"{path}/sigs"))
-    indexlog.log_batch(spark, path, batch_id)
-    indexlog.clear_intent(spark, path, batch_id)
-    return True
+
+    def write(batch_id: str, gen: str | None) -> None:
+        rows = _sig_rows(df, text_column, id_column,
+                         _read_params(spark, path), batch_id, signatures)
+        (rows.repartition("shard")
+           .write.mode("append").partitionBy("shard", "batch")
+           .parquet(f"{path}/sigs"))
+
+    return indexlog.append_batch(spark, path, batch_id, write)
 
 
 def read_sig_store(spark: SparkSession, path: str,

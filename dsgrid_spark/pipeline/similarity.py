@@ -1257,26 +1257,18 @@ def write_ivf_index(df: DataFrame, path: str,
     """
     if not centroids:
         raise ValueError("centroids must be non-empty")
-    # old log (and intents) go FIRST: a crash mid-rebuild must not leave
-    # committed ids pointing at vanished data, where a later append
-    # replaying one of those ids would silently no-op and drop the batch
+    _check_vector_dim(df, vector_column, len(centroids[0]), build=True)
     spark = df.sparkSession
-    indexlog.reset_log(spark, path)
-    # canonical column names inside the index (id, embedding, cluster) —
-    # readers don't need to know the source frame's naming
-    assigned = (
-        assign_nearest_centroid(df, centroids, vector_column)
-        .withColumnRenamed("__cluster", "cluster")
-        .select(F.col(id_column).alias("id"),
-                F.col(vector_column).alias("embedding"), "cluster")
-    )
-    (assigned.withColumn("batch", F.lit(indexlog.BASE_BATCH))
-       .repartition("cluster")
-       .write.mode("overwrite").partitionBy("cluster", "batch")
-       .parquet(f"{path}/vectors"))
-    write_centroid_generation(spark, path, centroids,
-                              indexlog.BASE_BATCH)
-    indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
+
+    def write(batch_id: str) -> None:
+        (_assign_canonical(df, centroids, id_column, vector_column, "auto")
+           .withColumn("batch", F.lit(batch_id))
+           .repartition("cluster")
+           .write.mode("overwrite").partitionBy("cluster", "batch")
+           .parquet(f"{path}/vectors"))
+        write_centroid_generation(spark, path, centroids, batch_id)
+
+    indexlog.build_index(spark, path, write)
 
 
 def ivf_search(spark, path: str, queries,
@@ -1391,52 +1383,26 @@ def append_ivf_index(df: DataFrame, path: str,
     searches remain exact-within-probed-clusters). Equal to a fresh
     build over the concatenated corpus with the same centroids (tested).
 
-    EXACTLY-ONCE per ``batch_id`` (pipeline/indexlog.py): a committed
-    id returns False untouched; a retry of a crashed attempt deletes
-    that batch's directories before rewriting, and the log entry
-    commits LAST. Omitting ``batch_id`` claims a persisted intent
-    marker, so a crashed auto-id append retries under its original id
-    even after other batches commit. ``ivf_search`` filters to
-    committed batches, so readers see each batch atomically at its
-    commit. Returns True when the batch was ingested.
+    Exactly-once per ``batch_id`` (:func:`indexlog.append_batch`):
+    ``ivf_search`` filters to committed batches, so readers see each
+    batch atomically at its commit. Returns True when the batch was
+    ingested, False for a replayed id.
     """
-    spark = df.sparkSession
-    committed, ingested = indexlog.batch_sets(spark, path)
-    if batch_id is None:
-        batch_id = indexlog.claim_auto_batch_id(spark, path, ingested)
-    indexlog.check_batch_id(batch_id)
-    if batch_id == indexlog.BASE_BATCH:
-        raise ValueError(
-            f"batch_id {indexlog.BASE_BATCH!r} is reserved for the "
-            "initial build")
-    if batch_id in ingested:
-        # replayed batch: already fully ingested (possibly since
-        # compacted away -- its rows live on in the compacted batch)
-        return False
-    indexlog.check_appends_allowed(spark, path)
-    filesystem_for(spark, path).glob_delete(
-        f"{path}/vectors/cluster=*/batch={batch_id}")
     from dsgrid_spark.pipeline.pq import _read_centroids
-    gen = indexlog.resolve_generation(spark, path, committed)
-    centroids = _read_centroids(spark, path, gen)
-    assigned = (
-        assign_nearest_centroid(df, centroids, vector_column)
-        .withColumnRenamed("__cluster", "cluster")
-        .select(F.col(id_column).alias("id"),
-                F.col(vector_column).alias("embedding"), "cluster")
-    )
-    (assigned.withColumn("batch", F.lit(batch_id))
-       .repartition("cluster")
-       .write.mode("append").partitionBy("cluster", "batch")
-       .parquet(f"{path}/vectors"))
-    # pre-commit guards: a rebalance racing this append must not see
-    # old-generation cluster numbers survive its flip (indexlog
-    # docstrings) — abort loudly, crash-equivalent, retryable
-    indexlog.check_appends_allowed(spark, path)
-    indexlog.check_generation_unchanged(spark, path, gen)
-    indexlog.log_batch(spark, path, batch_id)
-    indexlog.clear_intent(spark, path, batch_id)
-    return True
+
+    spark = df.sparkSession
+
+    def write(batch_id: str, gen: str | None) -> None:
+        centroids = _read_centroids(spark, path, gen)
+        _check_vector_dim(df, vector_column, len(centroids[0]),
+                          build=False)
+        (_assign_canonical(df, centroids, id_column, vector_column, "auto")
+           .withColumn("batch", F.lit(batch_id))
+           .repartition("cluster")
+           .write.mode("append").partitionBy("cluster", "batch")
+           .parquet(f"{path}/vectors"))
+
+    return indexlog.append_batch(spark, path, batch_id, write)
 
 
 # ---------------------------------------------------------------------------
@@ -1480,6 +1446,22 @@ def pack_sign_bits(vector) -> list[int]:
     return words
 
 
+def _check_vector_dim(df: DataFrame, vector_column: str, dim: int,
+                      build: bool) -> None:
+    """Refuse vectors whose length is not ``dim`` (the centroid or
+    index dim) before anything is written: a wrong-dim row would be
+    assigned no cluster and land where no search probes. Checks the
+    first row (one ``first()`` job); a NULL first embedding skips the
+    check."""
+    first = df.select(vector_column).first()
+    if first is not None and first[0] is not None \
+            and len(first[0]) != dim:
+        what, ref = (("corpus", "coarse centroid") if build
+                     else ("batch", "index"))
+        raise ValueError(f"{what} vector dim {len(first[0])} != {ref} "
+                         f"dim {dim}")
+
+
 def _assign_canonical(df: DataFrame, centroids: list[list[float]],
                       id_column: str, vector_column: str,
                       assign_strategy: str) -> DataFrame:
@@ -1517,54 +1499,49 @@ def write_binary_index(df: DataFrame, path: str,
     which is invariant to the per-vector scale, the int8 re-rank is
     exactly the cosine of the rounded vector: error bounded by
     per-coordinate rounding (≤ max_abs/254), rank flips only between
-    near-ties. Rebuild order follows write_ivf_index/write_pq_index:
-    the old log and intents are deleted FIRST so a crash mid-rebuild
-    cannot leave committed ids pointing at vanished data.
+    near-ties. The commit sequence is :func:`indexlog.build_index`.
     """
-    from dsgrid_spark.pipeline import indexlog
-    from dsgrid_spark.pipeline.pq import _check_vectors_dtype
+    from dsgrid_spark.pipeline.pq import (_check_vectors_dtype,
+                                          _vectors_for_store)
 
     if not coarse_centroids:
         raise ValueError("coarse_centroids must be non-empty")
     _check_vectors_dtype(vectors_dtype, store_vectors)
     dim = len(coarse_centroids[0])
-    first = df.select(vector_column).first()
-    if first is not None and first[0] is not None \
-            and len(first[0]) != dim:
-        raise ValueError(f"corpus vector dim {len(first[0])} != coarse "
-                         f"centroid dim {dim}")
+    _check_vector_dim(df, vector_column, dim, build=True)
     spark = df.sparkSession
-    indexlog.reset_log(spark, path)
-    assigned = _assign_canonical(df, coarse_centroids, id_column,
-                                 vector_column,
-                                 assign_strategy).localCheckpoint()
-    bits = (binary_quantize(assigned, "embedding", "bits")
-            .select("id", "bits", "cluster")
-            .withColumn("batch", F.lit(indexlog.BASE_BATCH)))
-    (bits.repartition("cluster")
-       .write.mode("overwrite").partitionBy("cluster", "batch")
-       .parquet(f"{path}/bits"))
-    if store_vectors:
-        from dsgrid_spark.pipeline.pq import _vectors_for_store
-        (_vectors_for_store(
-            assigned.withColumn("batch", F.lit(indexlog.BASE_BATCH)),
-            vectors_dtype)
-           .repartition("cluster")
+    fs = filesystem_for(spark, path)
+
+    def write(batch_id: str) -> None:
+        assigned = _assign_canonical(df, coarse_centroids, id_column,
+                                     vector_column,
+                                     assign_strategy).localCheckpoint()
+        bits = (binary_quantize(assigned, "embedding", "bits")
+                .select("id", "bits", "cluster")
+                .withColumn("batch", F.lit(batch_id)))
+        (bits.repartition("cluster")
            .write.mode("overwrite").partitionBy("cluster", "batch")
-           .parquet(f"{path}/vectors"))
-    else:
-        # a rebuild DOWN from store_vectors=True must reclaim the old
-        # full-precision subtree (the dominant payload): meta now says
-        # no vectors, so nothing would ever read OR vacuum it
-        filesystem_for(spark, path).glob_delete(f"{path}/vectors")
-    write_centroid_generation(spark, path, coarse_centroids,
-                              indexlog.BASE_BATCH)
-    filesystem_for(spark, path).write_rows(
-        f"{path}/meta",
-        [(dim, BINARY_WORD_BITS, bool(store_vectors), vectors_dtype)],
-        "dim int, word_bits int, store_vectors boolean, "
-        "vectors_dtype string")
-    indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
+           .parquet(f"{path}/bits"))
+        if store_vectors:
+            (_vectors_for_store(assigned.withColumn("batch",
+                                                    F.lit(batch_id)),
+                                vectors_dtype)
+               .repartition("cluster")
+               .write.mode("overwrite").partitionBy("cluster", "batch")
+               .parquet(f"{path}/vectors"))
+        else:
+            # a rebuild DOWN from store_vectors=True must reclaim the old
+            # full-precision subtree (the dominant payload): meta now
+            # says no vectors, so nothing would ever read OR vacuum it
+            fs.glob_delete(f"{path}/vectors")
+        write_centroid_generation(spark, path, coarse_centroids, batch_id)
+        fs.write_rows(
+            f"{path}/meta",
+            [(dim, BINARY_WORD_BITS, bool(store_vectors), vectors_dtype)],
+            "dim int, word_bits int, store_vectors boolean, "
+            "vectors_dtype string")
+
+    indexlog.build_index(spark, path, write)
 
 
 def append_binary_index(df: DataFrame, path: str,
@@ -1573,63 +1550,39 @@ def append_binary_index(df: DataFrame, path: str,
                         batch_id: str | None = None,
                         assign_strategy: str = "auto") -> bool:
     """Append a vector batch to a persisted binary index, exactly-once
-    per ``batch_id`` (pipeline/indexlog.py — committed ids no-op,
-    crashed retries clean their own orphans first, auto ids claim
-    intent markers, the log entry commits LAST so readers see the
-    batch atomically). Assignment uses the INDEX'S OWN centroids —
-    never caller-supplied, which would desync probes from partitions.
-    Equal to a fresh build over the concatenated corpus with the same
-    centroids (tested). Returns True when ingested.
+    per ``batch_id`` (:func:`indexlog.append_batch`). Assignment uses
+    the INDEX'S OWN centroids — never caller-supplied, which would
+    desync probes from partitions. Equal to a fresh build over the
+    concatenated corpus with the same centroids (tested). Returns True
+    when ingested, False for a replayed id.
     """
-    from dsgrid_spark.pipeline import indexlog
-    from dsgrid_spark.pipeline.pq import _read_centroids, _read_meta
+    from dsgrid_spark.pipeline.pq import (_read_centroids, _read_meta,
+                                          _vectors_for_store)
 
     spark = df.sparkSession
-    committed, ingested = indexlog.batch_sets(spark, path)
-    if batch_id is None:
-        batch_id = indexlog.claim_auto_batch_id(spark, path, ingested)
-    indexlog.check_batch_id(batch_id)
-    if batch_id == indexlog.BASE_BATCH:
-        raise ValueError(f"batch_id {indexlog.BASE_BATCH!r} is reserved "
-                         "for the initial build")
-    if batch_id in ingested:
-        # replayed batch: already fully ingested (possibly since
-        # compacted away -- its rows live on in the compacted batch)
-        return False
-    meta = _read_meta(spark, path)
-    first = df.select(vector_column).first()
-    if first is not None and first[0] is not None \
-            and len(first[0]) != meta["dim"]:
-        raise ValueError(f"batch vector dim {len(first[0])} != index "
-                         f"dim {meta['dim']}")
-    indexlog.check_appends_allowed(spark, path)
-    fs = filesystem_for(spark, path)
-    fs.glob_delete(f"{path}/bits/cluster=*/batch={batch_id}")
-    fs.glob_delete(f"{path}/vectors/cluster=*/batch={batch_id}")
-    gen = indexlog.resolve_generation(spark, path, committed)
-    centroids = _read_centroids(spark, path, gen)
-    assigned = _assign_canonical(df, centroids, id_column, vector_column,
-                                 assign_strategy).localCheckpoint()
-    bits = (binary_quantize(assigned, "embedding", "bits")
-            .select("id", "bits", "cluster")
-            .withColumn("batch", F.lit(batch_id)))
-    (bits.repartition("cluster")
-       .write.mode("append").partitionBy("cluster", "batch")
-       .parquet(f"{path}/bits"))
-    if meta["store_vectors"]:
-        from dsgrid_spark.pipeline.pq import _vectors_for_store
-        (_vectors_for_store(assigned.withColumn("batch", F.lit(batch_id)),
-                            meta.get("vectors_dtype") or "float64")
-           .repartition("cluster")
+
+    def write(batch_id: str, gen: str | None) -> None:
+        meta = _read_meta(spark, path)
+        _check_vector_dim(df, vector_column, meta["dim"], build=False)
+        centroids = _read_centroids(spark, path, gen)
+        assigned = _assign_canonical(df, centroids, id_column,
+                                     vector_column,
+                                     assign_strategy).localCheckpoint()
+        bits = (binary_quantize(assigned, "embedding", "bits")
+                .select("id", "bits", "cluster")
+                .withColumn("batch", F.lit(batch_id)))
+        (bits.repartition("cluster")
            .write.mode("append").partitionBy("cluster", "batch")
-           .parquet(f"{path}/vectors"))
-    # pre-commit guards (see append_ivf_index): lose loudly to a
-    # racing blocking-rebalance / generation flip, never silently
-    indexlog.check_appends_allowed(spark, path)
-    indexlog.check_generation_unchanged(spark, path, gen)
-    indexlog.log_batch(spark, path, batch_id)
-    indexlog.clear_intent(spark, path, batch_id)
-    return True
+           .parquet(f"{path}/bits"))
+        if meta["store_vectors"]:
+            (_vectors_for_store(assigned.withColumn("batch",
+                                                    F.lit(batch_id)),
+                                meta.get("vectors_dtype") or "float64")
+               .repartition("cluster")
+               .write.mode("append").partitionBy("cluster", "batch")
+               .parquet(f"{path}/vectors"))
+
+    return indexlog.append_batch(spark, path, batch_id, write)
 
 
 def hamming_search(spark, path: str, queries, k: int = 10,

@@ -45,6 +45,7 @@ retrieval families (SURVEY.md pipeline scope).
 
 from __future__ import annotations
 
+import importlib
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,10 +56,16 @@ from dsgrid_spark.pipeline.ingest import _stream_id
 __all__ = ["index_kind", "stream_batch_id", "streaming_index_append",
            "streaming_dedup_index"]
 
-#: index kind -> exactly-once appender (resolved lazily to keep module
-#: import light); every appender shares the (df, path, batch_id=...)
-#: shape with kind-specific column kwargs
-_KINDS = ("term", "ivf", "pq", "binary", "sigs")
+#: index kind -> (module, exactly-once appender), resolved lazily to
+#: keep module import light; every appender shares the
+#: (df, path, id_column=..., batch_id=...) shape plus ``text_column``
+#: (term, sigs) or ``vector_column`` (ivf, pq, binary)
+_APPENDERS = {"term": ("retrieval", "append_term_index"),
+              "ivf": ("similarity", "append_ivf_index"),
+              "pq": ("pq", "append_pq_index"),
+              "binary": ("similarity", "append_binary_index"),
+              "sigs": ("sigstore", "append_sig_store")}
+_KINDS = tuple(_APPENDERS)
 
 
 def index_kind(spark: SparkSession, path: str) -> str:
@@ -95,20 +102,9 @@ def index_kind(spark: SparkSession, path: str) -> str:
 
 
 def _appender(kind: str) -> Callable[..., bool]:
-    if kind == "term":
-        from dsgrid_spark.pipeline.retrieval import append_term_index
-        return append_term_index
-    if kind == "ivf":
-        from dsgrid_spark.pipeline.similarity import append_ivf_index
-        return append_ivf_index
-    if kind == "binary":
-        from dsgrid_spark.pipeline.similarity import append_binary_index
-        return append_binary_index
-    if kind == "sigs":
-        from dsgrid_spark.pipeline.sigstore import append_sig_store
-        return append_sig_store
-    from dsgrid_spark.pipeline.pq import append_pq_index
-    return append_pq_index
+    module, name = _APPENDERS[kind]
+    return getattr(importlib.import_module(
+        f"dsgrid_spark.pipeline.{module}"), name)
 
 
 def stream_batch_id(checkpoint_dir: str, batch_id: int) -> str:

@@ -566,3 +566,22 @@ def test_layering_guard_no_raw_filesystem_calls():
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if _RAW_FS.search(line)]
     assert offenders == []
+
+
+_COMMIT_POINTS = re.compile(
+    r"\b(log_batch|clear_intent|reset_log|clear_attempt|summed_metrics|"
+    r"check_appends_allowed|check_generation_unchanged)\(")
+
+
+def test_layering_guard_commit_points_only_in_indexlog():
+    """Every index build, append and replacement commits through
+    indexlog.build_index / append_batch / replace_batches, so the
+    commit points themselves are called nowhere else in the package."""
+    pkg = Path(__file__).resolve().parent.parent / "dsgrid_spark"
+    offenders = [
+        f"{p.relative_to(pkg.parent)}:{i}: {line.strip()}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "pipeline" / "indexlog.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if _COMMIT_POINTS.search(line)]
+    assert offenders == []
