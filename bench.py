@@ -535,6 +535,9 @@ def main():
     compact["queries"] = chosen["queries"]
     compact["contaminated"] = chosen["env"]["contaminated"]
     compact["n_attempts"] = len(attempts)
+    # attempts after the first run on a warm JVM and page cache: compare
+    # two boards like-for-like only at the same chosen_attempt
+    compact["chosen_attempt"] = full["chosen_attempt"]
     compact["full_json"] = full_path
     print(json.dumps(compact))
 

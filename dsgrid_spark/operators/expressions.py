@@ -346,6 +346,16 @@ def evaluate_expression(expression: str, datasets: dict[str, DataFrame],
     return ev(tree)[0]
 
 
+def is_union(expression: str) -> bool:
+    """True when ``expression`` only stacks dataset names with ``|``."""
+    try:
+        tree = ast.parse(expression, mode="eval")
+    except SyntaxError:
+        return False
+    return all(isinstance(n, (ast.Name, ast.Load, ast.BinOp, ast.BitOr))
+               for n in ast.walk(tree.body))
+
+
 def default_expression(dataset_ids: list[str]) -> str:
     """Union of all datasets (reference dsgrid/query/models.py:391-399)."""
     return " | ".join(dataset_ids)

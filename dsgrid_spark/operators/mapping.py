@@ -7,8 +7,11 @@ expressed Spark-first:
 - mapping tables are tiny → we hint ``F.broadcast`` so the map join is a
   broadcast hash join (no shuffle of the fact table);
 - fraction accumulation is a plain column product, applied lazily and
-  collapsed with ONE hash aggregation after all dimensions are mapped,
-  instead of one agg per mapping step;
+  collapsed once after all dimensions are mapped, instead of one agg per
+  mapping step: by ONE hash aggregation (:func:`apply_fraction`), or, when
+  the first consumer of the mapped rows is a sum of ``value``, by folding
+  ``value *= fraction`` per row so that sum's shuffle is the only one
+  (:func:`fold_fraction`);
 - skewed disaggregation fan-out is left to AQE skew-join handling, with an
   optional salting escape hatch (``salt_partitions``).
 """
@@ -87,7 +90,8 @@ def map_stacked_dimension(
     column with ``to_id``, and accumulate ``fraction *= from_fraction``.
 
     The fact table is NOT re-aggregated here; call :func:`apply_fraction`
-    once after all dimensions are mapped. Mapping tables are broadcast —
+    (or :func:`fold_fraction` ahead of a sum) once after all dimensions
+    are mapped. Mapping tables are broadcast —
     at 100 TB the fact table never shuffles for a map join.
 
     ``salt_partitions``: escape hatch for extreme ONE_TO_MANY fan-out skew
@@ -127,9 +131,12 @@ def apply_fraction(df: DataFrame, value_columns: list[str] | None = None) -> Dat
     """Collapse accumulated mapping fractions with one hash aggregation.
 
     Group by every non-value column and sum ``value * fraction``
-    (reference dataset_schema_handler_base.py:809-832). Spark performs
-    map-side partial aggregation automatically, so the shuffle carries
-    only partial sums.
+    (reference dataset_schema_handler_base.py:809-832), leaving one row
+    per dimension key — what arithmetic, projections, non-sum functions
+    and value filters need. Spark performs map-side partial aggregation
+    automatically, so the shuffle carries only partial sums. When the
+    next step is itself a sum of ``value``, :func:`fold_fraction` does
+    the same work without this aggregation.
     """
     if FRACTION_COLUMN not in df.columns:
         return df
@@ -139,6 +146,22 @@ def apply_fraction(df: DataFrame, value_columns: list[str] | None = None) -> Dat
         F.sum(F.col(v) * F.col(FRACTION_COLUMN)).alias(v) for v in value_columns
     ]
     return df.groupBy(*group_cols).agg(*aggs)
+
+
+def fold_fraction(df: DataFrame) -> DataFrame:
+    """``value *= fraction`` per row, without aggregating.
+
+    Only for rows whose next collapsing step sums ``value`` over
+    dimension columns: sum is linear, so that sum yields what
+    :func:`apply_fraction` followed by it would (up to the order of the
+    floating-point additions), with one shuffle instead of two. The rows
+    stay many per dimension key until then.
+    """
+    if FRACTION_COLUMN not in df.columns:
+        return df
+    return df.withColumn(
+        VALUE_COLUMN, F.col(VALUE_COLUMN) * F.col(FRACTION_COLUMN)
+    ).drop(FRACTION_COLUMN)
 
 
 def apply_scaling_factor(df: DataFrame, value_column: str = VALUE_COLUMN) -> DataFrame:

@@ -130,8 +130,8 @@ class AppendsBlockedError(RuntimeError):
 
 
 def check_batch_id(batch_id: str) -> str:
-    """Validate a CALLER-SUPPLIED batch id for use as a
-    partition-directory component.
+    """Validate a CALLER-SUPPLIED append batch id for use as a
+    partition-directory component. ``base`` is the build's.
 
     Restricting to ``[A-Za-z0-9._-]`` keeps the id round-trippable
     through ``batch=<id>`` partition paths on every filesystem (no
@@ -152,6 +152,9 @@ def check_batch_id(batch_id: str) -> str:
         raise ValueError(
             f"batch ids of the form {COMPACT_PREFIX}<6+ digits> are "
             f"reserved for compaction, got {batch_id!r}")
+    if batch_id == BASE_BATCH:
+        raise ValueError(f"batch_id {BASE_BATCH!r} is reserved for the "
+                         "initial build")
     return batch_id
 
 
@@ -1088,9 +1091,6 @@ def append_batch(spark: SparkSession, index_path: str,
     if batch_id is None:
         batch_id = claim_auto_batch_id(spark, index_path, ingested)
     check_batch_id(batch_id)
-    if batch_id == BASE_BATCH:
-        raise ValueError(f"batch_id {BASE_BATCH!r} is reserved for the "
-                         "initial build")
     if batch_id in ingested:
         # replayed batch: already fully ingested (possibly since
         # compacted away -- its rows live on in the compacted batch)

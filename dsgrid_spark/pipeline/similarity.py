@@ -12,7 +12,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from dsgrid_spark.filesystem import filesystem_for
@@ -1450,16 +1450,22 @@ def _check_vector_dim(df: DataFrame, vector_column: str, dim: int,
                       build: bool) -> None:
     """Refuse vectors whose length is not ``dim`` (the centroid or
     index dim) before anything is written: a wrong-dim row would be
-    assigned no cluster and land where no search probes. Checks the
-    first row (one ``first()`` job); a NULL first embedding skips the
-    check."""
-    first = df.select(vector_column).first()
-    if first is not None and first[0] is not None \
-            and len(first[0]) != dim:
+    assigned no cluster and land where no search probes. Checks every
+    non-NULL row with one aggregate, the min and max vector length,
+    observed on a no-op write: one job with no shuffle (a plain ``agg``
+    adds a shuffle stage that adaptive execution runs as a second
+    job)."""
+    size = F.size(vector_column)
+    obs = Observation()
+    (df.where(F.col(vector_column).isNotNull())
+       .observe(obs, F.min(size).alias("lo"), F.max(size).alias("hi"))
+       .write.format("noop").mode("overwrite").save())
+    lo, hi = obs.get["lo"], obs.get["hi"]
+    bad = lo if lo != dim else hi
+    if bad is not None and bad != dim:
         what, ref = (("corpus", "coarse centroid") if build
                      else ("batch", "index"))
-        raise ValueError(f"{what} vector dim {len(first[0])} != {ref} "
-                         f"dim {dim}")
+        raise ValueError(f"{what} vector dim {bad} != {ref} dim {dim}")
 
 
 def _assign_canonical(df: DataFrame, centroids: list[list[float]],

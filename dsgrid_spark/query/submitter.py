@@ -4,6 +4,13 @@ Reference dsgrid/query/query_submitter.py (lifecycle §3.1 of SURVEY.md).
 One long-lived SparkSession end-to-end; intermediate datasets stay as
 DataFrame lineage (Catalyst sees the WHOLE query and can push filters
 through the mapping joins); parquet only for the content-hash cache.
+
+Mapping fractions are collapsed at the first consumer that needs one row
+per dimension key, not unconditionally after mapping. When the mapped
+rows reach a sum of ``value`` through nothing but dimension filters and a
+``|`` union, each row's fraction folds into its value and that sum is the
+query's only aggregation (:func:`folds_into_sum`); everything else gets
+the collapse-first aggregation of :func:`apply_fraction`.
 """
 
 from __future__ import annotations
@@ -14,13 +21,19 @@ from pathlib import Path
 from pyspark.sql import DataFrame, functions as F
 
 from dsgrid_spark.common import VALUE_COLUMN
-from dsgrid_spark.operators.expressions import default_expression, evaluate_expression
-from dsgrid_spark.operators.filters import SupplementalMappingFilter
+from dsgrid_spark.operators.expressions import (
+    default_expression, evaluate_expression, is_union,
+)
+from dsgrid_spark.operators.filters import (
+    NamedDimensionFilter, RawExpressionFilter, SupplementalMappingFilter,
+)
 from dsgrid_spark.operators.growth import (
     apply_annual_multiplier,
     apply_exponential_growth,
 )
-from dsgrid_spark.operators.mapping import apply_fraction, map_stacked_dimension
+from dsgrid_spark.operators.mapping import (
+    apply_fraction, fold_fraction, map_stacked_dimension,
+)
 from dsgrid_spark.operators.reshape import pivot
 from dsgrid_spark.datasets.handlers import OneTableHandler, TwoTableHandler
 from dsgrid_spark.query.context import QueryContext, ResultCache, content_hash
@@ -31,6 +44,32 @@ from dsgrid_spark.query.models import (
 )
 from dsgrid_spark.sources.catalog import Catalog
 from dsgrid_spark.sources.writers import write_parquet
+
+
+def folds_into_sum(aggregations, filters=(), expression: str | None = None
+                   ) -> bool:
+    """Whether mapped rows may fold their fractions into a later sum.
+
+    True when the first aggregation sums ``value`` and only ``filters``
+    on dimension columns and the combine ``expression`` (None: each
+    dataset alone) run before it, and that expression only stacks
+    datasets with ``|``. Sum is linear, so ``sum(value * fraction)`` over
+    the uncollapsed rows equals the sum over :func:`apply_fraction`'s
+    collapsed ones (up to the order of the floating-point additions),
+    with one shuffle instead of two. Anything else needs
+    collapsed rows first: arithmetic and ``in`` join on 1:1 keys, and
+    value filters, SQL filters, non-sum functions and results without an
+    aggregation see values per row.
+    """
+    if not aggregations:
+        return False
+    first = aggregations[0]
+    return (first.aggregation_function == "sum"
+            and first.value_column == VALUE_COLUMN
+            and all(isinstance(f, NamedDimensionFilter)
+                    or (not isinstance(f, RawExpressionFilter)
+                        and f.column != VALUE_COLUMN) for f in filters)
+            and (expression is None or is_union(expression)))
 
 
 class QuerySubmitter:
@@ -51,7 +90,10 @@ class QuerySubmitter:
             return TwoTableHandler(df, lookup, config).to_stacked()
         return OneTableHandler(df, config).df
 
-    def _map_dataset(self, model: DatasetModel) -> DataFrame:
+    def _map_dataset(self, model: DatasetModel, fold: bool = False) -> DataFrame:
+        """Map one dataset onto the project dimensions. ``fold``: the
+        caller's first consumer sums ``value`` (:func:`folds_into_sum`),
+        so fractions fold per row; otherwise they are collapsed here."""
         # per-dataset content-hash cache (reference project.py:418-451):
         # re-used across queries that map the same dataset the same way
         key = None
@@ -77,7 +119,7 @@ class QuerySubmitter:
             df = map_stacked_dimension(
                 df, records, spec.dimension, salt_partitions=spec.salt_partitions
             )
-        df = apply_fraction(df)
+        df = fold_fraction(df) if fold else apply_fraction(df)
         if self.cache and key is not None and model.mappings:
             from dsgrid_spark.session import scoped_conf
 
@@ -114,12 +156,17 @@ class QuerySubmitter:
             if hit:
                 return spark.read.parquet(str(hit))
 
+        # the per-dataset cache stores collapsed rows for any later query;
+        # with aggregate_each_dataset the sum runs before the combine
+        fold = self.cache is None and folds_into_sum(
+            query.result.aggregations, query.result.filters,
+            None if query.aggregate_each_dataset else query.expression)
         mapped: dict[str, DataFrame] = {}
         for ds in query.source_datasets:
             if isinstance(ds, ProjectionDatasetModel):
                 mapped[ds.dataset_id] = self._map_projection(ds)
             else:
-                mapped[ds.dataset_id] = self._map_dataset(ds)
+                mapped[ds.dataset_id] = self._map_dataset(ds, fold)
 
         # optional per-dataset filter+aggregation (reference
         # aggregate_each_dataset, query_submitter.py:508-516); the result
@@ -162,8 +209,6 @@ class QuerySubmitter:
         return df
 
     def _apply_filter(self, df: DataFrame, flt) -> DataFrame:
-        from dsgrid_spark.operators.filters import NamedDimensionFilter
-
         if isinstance(flt, NamedDimensionFilter):
             return self._apply_named_filter(df, flt)
         if isinstance(flt, SupplementalMappingFilter):
@@ -223,9 +268,7 @@ class QuerySubmitter:
         the current grain — before the stage's function runs."""
         if self.project is None:
             return df
-        from dsgrid_spark.common import FRACTION_COLUMN
-        from dsgrid_spark.operators.mapping import apply_fraction
-
+        fold = folds_into_sum([agg])
         for colm in agg.group_by_columns:
             supp = self.project.supplemental(colm.dimension_name)
             if (supp is None or colm.dimension_name in df.columns
@@ -234,14 +277,7 @@ class QuerySubmitter:
             records = self.catalog.mapping(supp.mapping)
             df = map_stacked_dimension(df, records, supp.dimension_type)
             df = df.withColumnRenamed(supp.dimension_type, supp.name)
-            if FRACTION_COLUMN in df.columns:
-                if agg.aggregation_function == "sum":
-                    df = df.withColumn(
-                        VALUE_COLUMN,
-                        F.col(VALUE_COLUMN) * F.col(FRACTION_COLUMN),
-                    ).drop(FRACTION_COLUMN)
-                else:
-                    df = apply_fraction(df)
+            df = fold_fraction(df) if fold else apply_fraction(df)
         return df
 
     # ---- composite / derived datasets (lifecycle §3.3) ----------------
@@ -285,7 +321,9 @@ class QuerySubmitter:
         df = self._load_stacked(dataset_id)
         for name in path:
             df = map_stacked_dimension(df, self.catalog.mapping(name), column)
-        df = apply_fraction(df)
+        fold = result is not None and folds_into_sum(result.aggregations,
+                                                     result.filters)
+        df = fold_fraction(df) if fold else apply_fraction(df)
         if result is not None:
             df = self._result_phase(df, result)
         return df

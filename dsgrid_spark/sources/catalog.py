@@ -3,8 +3,15 @@
 The reference keeps a versioned registry over SQLAlchemy + a data store
 (dsgrid/registry/*); queries only need the lookup surface: dataset_id →
 (DataFrame, config), dimension name → records DF, mapping name → records
-DF. Paths are read lazily so a catalog can describe 100 TB without
-touching it.
+DF. Nothing is read at registration, so a catalog can describe 100 TB
+without touching it. A path source is read once, at its first use, and
+the DataFrame is kept on its registration entry: every later query
+reuses that relation instead of re-listing the files and re-inferring
+the schema, which in Spark is a job per read. A registered path is
+therefore immutable for that registration. To rewrite it in place,
+register it again afterwards (which drops the kept DataFrame), as Spark
+needs ``REFRESH TABLE`` after rewriting a table's files. ``DataFrame``
+sources are used as given and callable sources are called on every use.
 
 Every entry carries a version (reference registry_database.py:431
 get_latest_version): result-cache keys hash ALL versions, so a
@@ -28,7 +35,14 @@ Source = Union[DataFrame, str, Path, Callable[[SparkSession], DataFrame]]
 
 
 @dataclass
-class _DatasetEntry:
+class _Entry:
+    #: DataFrames read from this entry's path sources, by field name
+    read: dict[str, DataFrame] = field(default_factory=dict, init=False,
+                                       repr=False, compare=False)
+
+
+@dataclass
+class _DatasetEntry(_Entry):
     source: Source
     config: DatasetConfig
     lookup_source: Optional[Source] = None  # two-table datasets
@@ -36,13 +50,13 @@ class _DatasetEntry:
 
 
 @dataclass
-class _DimensionEntry:
+class _DimensionEntry(_Entry):
     source: Source
     version: str = "1.0.0"
 
 
 @dataclass
-class _MappingEntry:
+class _MappingEntry(_Entry):
     source: Source
     from_dimension: Optional[str] = None
     to_dimension: Optional[str] = None
@@ -59,12 +73,15 @@ class Catalog:
     #: (from_dimension, to_dimension) -> mapping name, for pathfinding
     mapping_edges: dict[tuple[str, str], str] = field(default_factory=dict)
 
-    def _load(self, src: Source) -> DataFrame:
+    def _load(self, entry: _Entry, attr: str = "source") -> DataFrame:
+        src = getattr(entry, attr)
         if isinstance(src, DataFrame):
             return src
         if callable(src):
             return src(self.spark)
-        return self.spark.read.parquet(str(src))
+        if attr not in entry.read:
+            entry.read[attr] = self.spark.read.parquet(str(src))
+        return entry.read[attr]
 
     def register_dataset(self, dataset_id: str, source: Source,
                          config: DatasetConfig | None = None,
@@ -92,17 +109,17 @@ class Catalog:
 
     def dataset(self, dataset_id: str) -> tuple[DataFrame, DatasetConfig]:
         e = self.datasets[dataset_id]
-        return self._load(e.source), e.config
+        return self._load(e), e.config
 
     def dataset_lookup(self, dataset_id: str) -> DataFrame | None:
         e = self.datasets[dataset_id]
-        return self._load(e.lookup_source) if e.lookup_source is not None else None
+        return self._load(e, "lookup_source") if e.lookup_source is not None else None
 
     def dimension(self, name: str) -> DataFrame:
-        return self._load(self.dimensions[name].source)
+        return self._load(self.dimensions[name])
 
     def mapping(self, name: str) -> DataFrame:
-        return self._load(self.mappings[name].source)
+        return self._load(self.mappings[name])
 
     def versions(self) -> dict[str, str]:
         """Every registered entity's version, keyed ``kind/id`` — the

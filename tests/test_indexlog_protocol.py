@@ -147,3 +147,21 @@ def test_compact_retry_single_drift_baseline_row(spark, tmp_path,
     fs = filesystem_for(spark, path)
     assert len(fs.read_rows(f"{path}/drift_baseline/batch={cmp_id}")) == 1
     assert len(fs.read_rows(f"{path}/centroids/batch={cmp_id}")) == 2
+
+
+def test_ivf_append_rejects_wrong_dim_after_first_row(spark, tmp_path):
+    """The dim guard reads every row, not only the first: a batch whose
+    first vector has the index dim and a later one does not is refused
+    before anything is written."""
+    from dsgrid_spark.pipeline.similarity import (append_ivf_index,
+                                                  write_ivf_index)
+
+    rows = _clustered_vectors(12, dim=8)
+    path = str(tmp_path / "ivf")
+    write_ivf_index(_vectors(spark, rows), path, [rows[0][1], rows[1][1]])
+    mixed = _vectors(spark, [(100, rows[0][1]), (101, rows[1][1][:4])])
+    with pytest.raises(ValueError, match="batch vector dim 4 != index "
+                                         "dim 8"):
+        append_ivf_index(mixed, path, batch_id="mixed1")
+    assert indexlog.batch_sets(spark, path)[1] == {indexlog.BASE_BATCH}
+    assert glob.glob(f"{path}/vectors/*/batch=mixed1") == []

@@ -397,3 +397,32 @@ def test_bm25_batch_one_pruned_read_and_broadcast_fanout(spark, tmp_path):
     assert "SortMergeJoin" not in plan
     # per-query top-k is a rank-window reduction, not a global sort
     assert "row_number" in plan.lower() or "RunningWindowFunction" in plan
+
+
+def test_mapped_sum_query_shuffles_once(spark, fact_parquet):
+    """A mapped dataset summed by the result phase shuffles exactly once:
+    the mapping fractions fold into that sum instead of being collapsed
+    by an aggregation of their own first."""
+    import re
+
+    from dsgrid_spark.operators.aggregation import AggregationModel, ColumnModel
+    from dsgrid_spark.query.models import (DatasetModel, MappingSpec,
+                                           ProjectQueryModel, ResultModel)
+    from dsgrid_spark.query.submitter import QuerySubmitter
+    from dsgrid_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark)
+    cat.register_dataset("f", fact_parquet)
+    cat.register_mapping("g2s", spark.createDataFrame(
+        [(f"c{i}", "CA" if i < 4 else "CO", 1.0) for i in range(7)],
+        "from_id string, to_id string, from_fraction double"))
+    out = QuerySubmitter(cat).submit(ProjectQueryModel(
+        name="q", source_datasets=[DatasetModel(
+            dataset_id="f",
+            mappings=[MappingSpec(dimension="geography", mapping="g2s")])],
+        result=ResultModel(aggregations=[AggregationModel(
+            group_by_columns=[ColumnModel(dimension_name="geography")],
+            aggregation_function="sum")])))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # "BroadcastExchange" is the mapping table's, not a shuffle
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", plan)) == 1, plan

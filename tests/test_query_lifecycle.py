@@ -570,3 +570,273 @@ def test_result_phase_time_zone_geography(catalog):
                  r["timestamp"] - dt.timedelta(hours=offset[r["geography"]]))
                 for r in utc}
     assert got == expected
+
+
+# ---- mapping fractions: fold into the result's sum, or collapse first ----
+
+_COUNTIES = ("c1", "c2", "c3", "c4")
+
+
+def _fold_facts(spark, offset):
+    """Integer loads and dyadic fractions: every sum is exact, so the
+    fold and the collapse-first path agree bit for bit."""
+    return spark.createDataFrame(
+        [(c, m, f"h{h}", float((i * 7 + j * 3 + h + offset) % 13 + 1))
+         for i, c in enumerate(_COUNTIES) for j, m in enumerate(("m1", "m2"))
+         for h in range(6)],
+        "geography string, metric string, hour string, value double")
+
+
+@pytest.fixture()
+def fold_catalog(spark):
+    cat = Catalog(spark)
+    cat.register_dataset("a", _fold_facts(spark, 0))
+    cat.register_dataset("b", _fold_facts(spark, 5))
+    # many-to-one, with c2 split between both states
+    cat.register_mapping("c2s", spark.createDataFrame(
+        [("c1", "s1", 1.0), ("c2", "s1", 0.5), ("c2", "s2", 0.5),
+         ("c3", "s2", 1.0), ("c4", "s2", 1.0)],
+        "from_id string, to_id string, from_fraction double"))
+    # one-to-many disaggregation back to counties
+    cat.register_mapping("s2c", spark.createDataFrame(
+        [("s1", "c1", 0.75), ("s1", "c2", 0.25), ("s2", "c3", 0.5),
+         ("s2", "c4", 0.25), ("s2", "c2", 0.25)],
+        "from_id string, to_id string, from_fraction double"))
+    return cat
+
+
+def _collapsed(cat, ds_id, *maps):
+    """The collapse-first path, spelled out: map, then apply_fraction."""
+    from dsgrid_spark.operators.mapping import apply_fraction, map_stacked_dimension
+
+    df, _ = cat.dataset(ds_id)
+    for m in maps:
+        df = map_stacked_dimension(df, cat.mapping(m), "geography")
+    return apply_fraction(df)
+
+
+def _agg(fn, *cols):
+    return [AggregationModel(
+        group_by_columns=[ColumnModel(dimension_name=c) for c in cols],
+        aggregation_function=fn)]
+
+
+def _mapped(ds_id, *maps):
+    return DatasetModel(dataset_id=ds_id, mappings=[
+        MappingSpec(dimension="geography", mapping=m) for m in maps])
+
+
+def _rows(df, cols):
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+def _fold_cases():
+    """name -> (query kwargs, expected result from collapsed frames,
+    whether the fractions fold into the sum)."""
+    def summed(df, *cols):
+        return df.groupBy(*cols).agg(F.sum("value").alias("value"))
+
+    def minus(cat):
+        a = _collapsed(cat, "a", "c2s")
+        b = _collapsed(cat, "b", "c2s").withColumnRenamed("value", "vb")
+        return (a.join(b, ["geography", "metric", "hour"])
+                .withColumn("value", F.col("value") - F.col("vb")))
+
+    def product(cat):
+        a = _collapsed(cat, "a", "c2s")
+        b = _collapsed(cat, "b", "c2s").withColumnRenamed("value", "r")
+        return (a.join(b, ["geography", "metric", "hour"])
+                .withColumn("value", F.col("value") * F.col("r")))
+
+    return {
+        "many_to_one_sum": (
+            dict(source_datasets=[_mapped("a", "c2s")],
+                 result=ResultModel(aggregations=_agg("sum", "geography",
+                                                      "metric"))),
+            lambda cat: summed(_collapsed(cat, "a", "c2s"),
+                               "geography", "metric"), True),
+        "disaggregation_chain_sum": (
+            dict(source_datasets=[_mapped("a", "c2s", "s2c")],
+                 result=ResultModel(aggregations=_agg("sum", "geography",
+                                                      "hour"))),
+            lambda cat: summed(_collapsed(cat, "a", "c2s", "s2c"),
+                               "geography", "hour"), True),
+        "union_sum": (
+            dict(source_datasets=[_mapped("a", "c2s"), _mapped("b", "c2s")],
+                 expression="a | b",
+                 result=ResultModel(
+                     filters=[ExpressionFilter(column="metric", operator="==",
+                                               value="m1")],
+                     aggregations=_agg("sum", "geography"))),
+            lambda cat: summed(
+                _collapsed(cat, "a", "c2s").unionByName(
+                    _collapsed(cat, "b", "c2s")).filter("metric = 'm1'"),
+                "geography"), True),
+        "mean": (
+            dict(source_datasets=[_mapped("a", "c2s")],
+                 result=ResultModel(aggregations=_agg("mean", "geography"))),
+            lambda cat: _collapsed(cat, "a", "c2s").groupBy("geography")
+            .agg(F.mean("value").alias("value")), False),
+        "max": (
+            dict(source_datasets=[_mapped("a", "c2s")],
+                 result=ResultModel(aggregations=_agg("max", "geography"))),
+            lambda cat: _collapsed(cat, "a", "c2s").groupBy("geography")
+            .agg(F.max("value").alias("value")), False),
+        "value_filter_sum": (
+            dict(source_datasets=[_mapped("a", "c2s")],
+                 result=ResultModel(
+                     filters=[ExpressionFilter(column="value", operator=">",
+                                               value=7.0)],
+                     aggregations=_agg("sum", "geography"))),
+            lambda cat: summed(_collapsed(cat, "a", "c2s")
+                               .filter("value > 7.0"), "geography"), False),
+        "difference_sum": (
+            dict(source_datasets=[_mapped("a", "c2s"), _mapped("b", "c2s")],
+                 expression="a - b",
+                 result=ResultModel(aggregations=_agg("sum", "geography"))),
+            lambda cat: summed(minus(cat), "geography"), False),
+        "projection_sum": (
+            dict(source_datasets=[ProjectionDatasetModel(
+                dataset_id="p", initial_value_dataset="a",
+                growth_rate_dataset="b",
+                construction_method="annual_multiplier",
+                mappings=[MappingSpec(dimension="geography",
+                                      mapping="c2s")])],
+                 result=ResultModel(aggregations=_agg("sum", "geography"))),
+            lambda cat: summed(product(cat), "geography"), False),
+        "no_aggregation": (
+            dict(source_datasets=[_mapped("a", "c2s")]),
+            lambda cat: _collapsed(cat, "a", "c2s"), False),
+    }
+
+
+@pytest.fixture()
+def folded(monkeypatch):
+    """One entry per submitter fold: whether it had fractions to fold."""
+    from dsgrid_spark.common import FRACTION_COLUMN
+    from dsgrid_spark.operators import mapping
+    from dsgrid_spark.query import submitter
+
+    calls = []
+
+    def spy(df):
+        calls.append(FRACTION_COLUMN in df.columns)
+        return mapping.fold_fraction(df)
+
+    monkeypatch.setattr(submitter, "fold_fraction", spy)
+    return calls
+
+
+@pytest.mark.parametrize("case", list(_fold_cases()))
+def test_fraction_fold_matches_collapse_first(fold_catalog, folded, case):
+    """A sum reached through dimension filters or a ``|`` union folds the
+    mapping fractions into itself; every other first consumer still gets
+    collapsed rows. Either way the result equals the collapse-first path
+    exactly (dyadic fractions, integer loads)."""
+    kwargs, expected, folds = _fold_cases()[case]
+    got = QuerySubmitter(fold_catalog).submit(
+        ProjectQueryModel(name=case, **kwargs))
+    want = expected(fold_catalog)
+    cols = sorted(want.columns)
+    assert sorted(got.columns) == cols
+    assert _rows(got, cols) == _rows(want, cols)
+    assert any(folded) == folds
+
+
+def test_dataset_query_sum_folds_fractions(fold_catalog, folded):
+    """Entry point B folds into its result's sum too, with the same
+    answer as collapsing first."""
+    fold_catalog.register_mapping("c2s_edge", fold_catalog.mapping("c2s"),
+                                  from_dimension="county",
+                                  to_dimension="state")
+    got = QuerySubmitter(fold_catalog).submit_dataset_query(
+        "a", "county", "state", dimension_column="geography",
+        result=ResultModel(aggregations=_agg("sum", "geography")))
+    want = (_collapsed(fold_catalog, "a", "c2s").groupBy("geography")
+            .agg(F.sum("value").alias("value")))
+    assert _rows(got, ["geography", "value"]) == _rows(want, ["geography",
+                                                              "value"])
+    assert folded == [True]
+
+
+# ---- catalog: each path source is read once per registration ------------
+
+def _plan_jobs(spark, build) -> int:
+    """Spark jobs launched while ``build()`` constructs a plan."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan construction")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def path_catalog(spark, tmp_path):
+    cat = Catalog(spark)
+    for name, df in (("a", _fold_facts(spark, 0)),
+                     ("b", _fold_facts(spark, 5))):
+        df.write.parquet(str(tmp_path / name))
+        cat.register_dataset(name, str(tmp_path / name))
+    spark.createDataFrame(
+        [("c1", "c2", 1.0), ("c2", "c1", 1.0), ("c3", "c4", 1.0),
+         ("c4", "c3", 1.0)],
+        "from_id string, to_id string, from_fraction double",
+    ).write.parquet(str(tmp_path / "swap"))
+    cat.register_mapping("swap", str(tmp_path / "swap"))
+    return cat
+
+
+def test_catalog_second_submit_reads_nothing(spark, path_catalog):
+    """The first submit reads each path source (a schema-inference job
+    per read); a second submit reuses the kept relations and builds its
+    plan without a single Spark job."""
+    query = ProjectQueryModel(
+        name="q", source_datasets=[_mapped("a", "swap"), _mapped("b")],
+        result=ResultModel(aggregations=_agg("sum", "geography")))
+    sub = QuerySubmitter(path_catalog)
+    assert _plan_jobs(spark, lambda: sub.submit(query)) > 0
+    assert _plan_jobs(spark, lambda: sub.submit(query)) == 0
+
+
+def test_catalog_source_used_twice_in_one_query(spark, path_catalog):
+    """One memoized relation on both sides of a join still resolves: a
+    mapping applied twice, and one dataset as both the initial value and
+    the growth rate of a projection."""
+    a = _fold_facts(spark, 0)
+    twice = QuerySubmitter(path_catalog).submit(ProjectQueryModel(
+        name="twice", source_datasets=[_mapped("a", "swap", "swap")],
+        result=ResultModel(aggregations=_agg("sum", "geography", "metric"))))
+    want = a.groupBy("geography", "metric").agg(F.sum("value").alias("value"))
+    cols = ["geography", "metric", "value"]
+    assert _rows(twice, cols) == _rows(want, cols)
+
+    squared = QuerySubmitter(path_catalog).submit(ProjectQueryModel(
+        name="squared", source_datasets=[ProjectionDatasetModel(
+            dataset_id="sq", initial_value_dataset="a",
+            growth_rate_dataset="a",
+            construction_method="annual_multiplier")]))
+    cols = ["geography", "metric", "hour", "value"]
+    assert _rows(squared, cols) == _rows(
+        a.withColumn("value", F.col("value") * F.col("value")), cols)
+
+
+def test_catalog_reregister_after_rewrite_reads_new_rows(spark, tmp_path):
+    """A registered path is immutable for its registration; rewriting it
+    in place and registering it again serves the new rows."""
+    path = str(tmp_path / "d")
+    cat = Catalog(spark)
+    spark.createDataFrame([("c1", 1.0)], "geography string, value double"
+                          ).write.parquet(path)
+    cat.register_dataset("d", path)
+    assert [r["value"] for r in cat.dataset("d")[0].collect()] == [1.0]
+    spark.createDataFrame([("c1", 2.0), ("c2", 3.0)],
+                          "geography string, value double"
+                          ).write.mode("overwrite").parquet(path)
+    cat.register_dataset("d", path)
+    assert sorted(r["value"] for r in cat.dataset("d")[0].collect()) == [2.0, 3.0]

@@ -171,3 +171,17 @@ def test_ingest_dedup_batch_job_count(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("sigstore-ingest-jobs")
     assert sorted(r["doc_id"] for r in kept.collect()) == [201]
     assert len(jobs) <= 22, len(jobs)
+
+
+def test_ingest_dedup_batch_refuses_base_batch_id(spark, tmp_path):
+    """``base`` is the build's batch id: an ingest under it is refused
+    like any other append, instead of replaying the seed batch and
+    silently dropping the new rows."""
+    from dsgrid_spark.pipeline import indexlog
+    from dsgrid_spark.pipeline.sigstore import ingest_dedup_batch
+
+    store, corpus = _store_with_corpus(spark, tmp_path)
+    with pytest.raises(ValueError, match="reserved for the initial build"):
+        ingest_dedup_batch(_fresh_batch(spark, 10, n=2), store,
+                           batch_id="base", corpus_path=corpus)
+    assert indexlog.batch_sets(spark, store)[1] == {indexlog.BASE_BATCH}
