@@ -147,6 +147,15 @@ class FilesystemInterface(ABC):
         ...
 
     @abstractmethod
+    def parquet_data_schema(self, dirpath: str):
+        """The data schema (``StructType``, no partition columns) Spark
+        wrote into the footer of one data file under ``dirpath`` — the
+        ``org.apache.spark.sql.parquet.row.metadata`` key its own schema
+        inference prefers — or None (no data file, no Spark metadata, no
+        driver-side footer read), where the caller lets Spark infer."""
+        ...
+
+    @abstractmethod
     def write_rows(self, dirpath: str, rows, ddl: str,
                    partition: tuple[str, str] | None = None) -> None:
         """Write a SMALL row set (tuples in ``ddl`` field order) as
@@ -294,13 +303,41 @@ class LocalFilesystem(FilesystemInterface):
                 r[k] = None
         return rows
 
+    def parquet_data_schema(self, dirpath: str):
+        import json
+
+        import pyarrow as pa
+        import pyarrow.parquet as _pq
+        from pyspark.sql.types import StructType
+
+        def first_file(d: str) -> str | None:
+            # depth-first, skipping what Spark's file listing skips
+            # (markers, staging dirs, checksum sidecars)
+            for name in sorted(os.listdir(d)):
+                if name.startswith((".", "_")):
+                    continue
+                p = os.path.join(d, name)
+                found = first_file(p) if os.path.isdir(p) else p
+                if found:
+                    return found
+            return None
+
+        loc = str(self._p(dirpath))
+        try:
+            path = first_file(loc) if os.path.isdir(loc) else None
+            meta = _pq.read_metadata(path).metadata if path else None
+        except (OSError, pa.ArrowException):
+            return None
+        raw = (meta or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        return StructType.fromJson(json.loads(raw)) if raw else None
+
     def write_rows(self, dirpath: str, rows, ddl: str,
                    partition: tuple[str, str] | None = None) -> None:
         import pyarrow as pa
         import pyarrow.parquet as _pq
 
         loc = str(self._p(dirpath))
-        schema = _pa_schema(ddl)
+        schema = arrow_schema(ddl)
         if schema is None:
             raise ValueError(f"no pyarrow mapping for DDL {ddl!r}")
         rows = [tuple(r) for r in rows]
@@ -341,16 +378,18 @@ def _partition_value(raw: str):
         return raw
 
 
-def _pa_schema(schema_ddl: str):
-    """pyarrow schema for a DDL of scalar (or array-of-scalar) fields,
-    or None when a type has no mapping."""
+def arrow_schema(schema):
+    """pyarrow schema for a DDL string or ``StructType`` of scalar (or
+    possibly nested array-of-scalar) fields, or None when a type has no
+    mapping."""
     import pyarrow as pa
     from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
                                    ByteType, DoubleType, FloatType,
                                    IntegerType, LongType, ShortType,
                                    StringType, StructType)
     try:
-        st = StructType.fromDDL(schema_ddl)
+        st = (StructType.fromDDL(schema) if isinstance(schema, str)
+              else schema)
     except Exception:
         return None
     mapping = {LongType: pa.int64(), IntegerType: pa.int32(),
@@ -358,14 +397,16 @@ def _pa_schema(schema_ddl: str):
                DoubleType: pa.float64(), FloatType: pa.float32(),
                StringType: pa.string(), BooleanType: pa.bool_(),
                BinaryType: pa.binary()}
+
+    def pa_type(dt):
+        if isinstance(dt, ArrayType):
+            inner = pa_type(dt.elementType)
+            return pa.list_(inner) if inner is not None else None
+        return mapping.get(type(dt))
+
     fields = []
     for f in st.fields:
-        dt = f.dataType
-        if isinstance(dt, ArrayType):
-            inner = mapping.get(type(dt.elementType))
-            t = pa.list_(inner) if inner is not None else None
-        else:
-            t = mapping.get(type(dt))
+        t = pa_type(f.dataType)
         if t is None:
             return None
         fields.append(pa.field(f.name, t))
@@ -484,6 +525,11 @@ class HadoopFilesystem(FilesystemInterface):
         df = self._spark.read.option("mergeSchema", "true").parquet(
             str(dirpath))
         return [r.asDict() for r in df.collect()]
+
+    def parquet_data_schema(self, dirpath: str):
+        # a footer read here is a remote open per call; Spark's own
+        # inference job reads the same footer on the executors
+        return None
 
     def write_rows(self, dirpath: str, rows, ddl: str,
                    partition: tuple[str, str] | None = None) -> None:

@@ -21,14 +21,23 @@ Semantics (dsgrid/dataset/dataset_expression_handler.py:17-68):
 from __future__ import annotations
 
 import ast
+import operator
+from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from dsgrid_spark.common import VALUE_COLUMN
 
 
 class DatasetExpressionError(ValueError):
     pass
+
+
+def _null_key(dim_cols) -> Column:
+    """True for a dimension key with a NULL in any column: the audits'
+    group-by keeps such a key, but the inner equi-join never matches
+    it, so it counts as missing."""
+    return reduce(operator.or_, [F.col(c).isNull() for c in dim_cols])
 
 
 def _combine_arith(left: DataFrame, right: DataFrame, op: str,
@@ -64,8 +73,8 @@ def _combine_arith(left: DataFrame, right: DataFrame, op: str,
         audit = tag.agg(
             F.sum("__nl").alias("n_left"),
             F.sum("__nr").alias("n_right"),
-            F.sum(((F.col("__nl") != 1) | (F.col("__nr") != 1))
-                  .cast("int")).alias("bad_keys"),
+            F.sum(((F.col("__nl") != 1) | (F.col("__nr") != 1)
+                   | _null_key(dim_cols)).cast("int")).alias("bad_keys"),
         ).collect()[0]
         if audit["n_left"] != audit["n_right"]:
             raise DatasetExpressionError(
@@ -75,7 +84,7 @@ def _combine_arith(left: DataFrame, right: DataFrame, op: str,
         if audit["bad_keys"]:
             raise DatasetExpressionError(
                 f"{op!r} join changed row count: {audit['bad_keys']} dimension "
-                "keys are missing or duplicated on one side "
+                "keys are missing, NULL or duplicated on one side "
                 "(misaligned or duplicated dimension keys)"
             )
     for v in value_columns:
@@ -215,13 +224,13 @@ def _audit_components(components: list[dict[str, DataFrame]],
             F.sum((F.col("__src") == i).cast("int")).alias(f"__n{i}")
             for i in range(kmax)
         ])
-        bad = None
-        for i in range(kmax):
-            # sources >= a component's size contribute 0 rows everywhere,
-            # so flag only duplicates here; per-source zero counts (keys
-            # missing from a live source) are read separately below.
-            cond = F.col(f"__n{i}") > 1
-            bad = cond if bad is None else (bad | cond)
+        # sources >= a component's size contribute 0 rows everywhere,
+        # so flag only duplicates and NULL keys here; per-source zero
+        # counts (keys missing from a live source) are read separately
+        # below.
+        bad = reduce(operator.or_,
+                     [F.col(f"__n{i}") > 1 for i in range(kmax)],
+                     _null_key(dim_cols))
         audit_rows = per_key.groupBy("__comp").agg(
             *[F.sum(f"__n{i}").alias(f"__t{i}") for i in range(kmax)],
             *[F.sum((F.col(f"__n{i}") == 0).cast("int")).alias(f"__z{i}")
@@ -246,8 +255,8 @@ def _audit_components(components: list[dict[str, DataFrame]],
             if row["__dup"] or missing:
                 raise DatasetExpressionError(
                     "expression join changed row count: "
-                    f"{row['__dup'] + missing} dimension keys are missing or "
-                    f"duplicated across datasets {names} "
+                    f"{row['__dup'] + missing} dimension keys are missing, "
+                    f"NULL or duplicated across datasets {names} "
                     "(misaligned or duplicated dimension keys)"
                 )
             verified |= set(names)

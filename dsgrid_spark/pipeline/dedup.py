@@ -889,16 +889,12 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             StructField("id", id_field.dataType, True),
             StructField("component", id_field.dataType, True),
         ])
-        # JVM-literal plan for small label sets (r12): downstream joins
-        # scan this frame per action, and the literal form skips the
-        # pickled-RDD Python tasks each scan pays; larger label sets
-        # keep the parallel createDataFrame path
-        from dsgrid_spark.session import _literal_rows_df
+        # a LocalRelation (bounded by small_graph_edges): downstream
+        # joins scan this frame per action without the pickled-RDD
+        # Python task each scan of a createDataFrame(list) pays
+        from dsgrid_spark.session import one_slice_df
 
-        lit = _literal_rows_df(pairs.sparkSession, out, schema)
-        if lit is not None:
-            return lit
-        return pairs.sparkSession.createDataFrame(out, schema=schema)
+        return one_slice_df(pairs.sparkSession, out, schema)
     # large graph: the take() above already materialized the persisted
     # edges, so this count is a cache scan, not a recompute
     n_edges = edges.count()

@@ -663,12 +663,19 @@ def read_committed(spark: SparkSession, index_path: str, subdir: str,
     its log commit. Pass ``ids`` (from :func:`log_snapshot`) when the
     caller also reads log metrics, so filter and totals come from the
     same snapshot.
+
+    The data schema is read from one data file's footer on the driver
+    (``FilesystemInterface.parquet_data_schema``), so planning launches
+    no schema-inference job; partition columns still come from the
+    directory names. Where that returns None, Spark infers the schema.
     """
     if ids is None:
         ids = committed_batches(spark, index_path)
     batch_ids = sorted(ids | set(include))
-    return (spark.read.parquet(f"{index_path}/{subdir}")
-            .filter(F.col("batch").isin(batch_ids)))
+    src = f"{index_path}/{subdir}"
+    schema = filesystem_for(spark, index_path).parquet_data_schema(src)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(src).filter(F.col("batch").isin(batch_ids))
 
 
 def log_batch(spark: SparkSession, index_path: str, batch_id: str,

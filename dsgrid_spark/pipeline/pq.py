@@ -578,7 +578,7 @@ def _subtract_coarse(assigned: DataFrame, centroids: list[list[float]],
     """vector − assigned coarse centroid, via ONE broadcast centroid
     join + zip_with — the shared residual step of coarse_residuals,
     the residual encode path, and residual IVF-PQ."""
-    cent_df = F.broadcast(assigned.sparkSession.createDataFrame(
+    cent_df = F.broadcast(_osdf(assigned.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         f"{cluster_column} int, __cent array<double>"))
     return (assigned.join(cent_df, cluster_column)

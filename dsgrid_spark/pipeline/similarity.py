@@ -1879,8 +1879,8 @@ def semantic_dedup(df: DataFrame,
     # materialized footprint is the same (id, unit-vector) rows the old
     # persist held.
     normed = normed.localCheckpoint()
-    # one_slice_df: plans as a JVM literal for bounded codebooks (r12)
-    # — the broadcast build otherwise pays a pickled-RDD Python scan
+    # one_slice_df: a LocalRelation — the broadcast build otherwise
+    # pays a pickled-RDD Python scan
     cent_df = _osdf(df.sparkSession,
                     [(i, c) for i, c in enumerate(unit_cents)],
                     "cluster int, __cent array<double>")

@@ -132,148 +132,82 @@ def ensure_min_partitions(df, min_partitions: int | None = None):
 
 
 def one_slice_df(spark: SparkSession, rows, schema):
-    """``createDataFrame`` for SMALL driver-side row lists destined for
-    a single-file write (meta rows, batch-log rows, centroid tables).
+    """One-partition DataFrame of a SMALL driver-side row list (probe and
+    query frames, centroid and codebook broadcasts, meta and batch-log
+    rows) — bounded by k, batch count or vocabulary, never by data.
 
-    Plain ``createDataFrame(list)`` parallelizes into
-    ``defaultParallelism`` Python slices; a downstream ``coalesce(1)``
-    then evaluates ALL of them sequentially inside one task — 32
-    Python-worker round-trips, measured ~3 s PER TINY WRITE on
-    local[32] (a PQ index build pays it four times: centroids,
-    codebooks, meta, log). One explicit slice makes it one round-trip
-    (~0.3 s). Only for driver-bounded lists — anything scale-bearing
-    wants the parallel default.
+    The rows travel as one Arrow table (``createDataFrame(pyarrow.Table,
+    schema)``), which Spark plans as a ``LocalRelation``: no Spark job
+    to build it, no Python worker to scan it, no SQL literal tree for
+    Catalyst to re-analyse on every action, and no size cap. The
+    ``coalesce(1)`` keeps the single slice a single-file write wants
+    (a LocalRelation otherwise scans as up to ``defaultParallelism``
+    partitions).
 
-    r12 optimization (guide §4: eliminate the JVM↔Python boundary):
-    rows of plain scalars/arrays are planned as a JVM LITERAL relation
-    (``range(1, numPartitions=1).select(inline(array(structs)))``) —
-    ZERO Python-worker launches, so every action that scans the frame
-    (a log write, a meta write, a broadcast qterms fan-out re-read per
-    job) skips the pickled-RDD round-trip entirely (measured ~0.21 s →
-    ~0.04 s per tiny write; an index build pays it 2-4 times). Rows
-    whose literal tree would be large (> ~4096 scalar cells, e.g. a
-    4096×64 centroid table) or whose values aren't plain
-    scalars/lists keep the one-slice pickled-RDD path — Catalyst
-    analysis of a huge literal tree costs more than one Python task.
+    Returns the rows and schema (nullability included) that
+    ``createDataFrame`` over one RDD slice returns, and accepts what it
+    accepts plus ``int`` values in float fields. Rows Arrow cannot
+    convert exactly take that one-slice RDD path instead, and fail or
+    succeed there: a value whose Python type is not the field's (a
+    ``str`` or ``bool`` into an int), an integer overflowing its field,
+    a NULL in a non-nullable field, and types Arrow localizes
+    differently (timestamps, dates) or that have no mapping here
+    (decimal, map, struct).
     """
+    from pyspark.sql.types import StructType
+
     rows = list(rows)
-    sch = schema
-    if isinstance(sch, str):
-        from pyspark.sql.types import StructType
-        try:
-            sch = StructType.fromDDL(sch)
-        except Exception:
-            sch = None
-    lit_df = (_literal_rows_df(spark, rows, sch)
-              if sch is not None else None)
-    if lit_df is not None:
-        return lit_df
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = (_arrow_table(rows, schema) if isinstance(schema, StructType)
+             else None)
+    if table is None:
+        return spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 1), schema)
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
-_ONE_SLICE_LITERAL_CELL_CAP = 4096
-
-
-def _literal_rows_df(spark: SparkSession, rows, schema):
-    """JVM-literal plan for :func:`one_slice_df`, or None when the rows
-    don't fit the literal fast path (empty, too many cells, or values
-    that aren't plain scalars / nested lists of scalars).
-
-    The relation is built as ONE SQL string handed to a single
-    ``F.expr`` — building the same tree through the Column API costs
-    ~3 ms of py4j round trips PER CELL (measured 15 s for a 512-row
-    label table), which is slower than the pickled-RDD path it
-    replaces. Literal forms are chosen so the parsed value is exactly
-    the Python value: ``CAST('<repr>' AS DOUBLE)`` round-trips every
-    finite double, ints are bounds-checked against their target width
-    (a silent non-ANSI overflow-to-NULL would diverge from
-    createDataFrame, which raises), strings are backslash-escaped,
-    bytes ride as ``X'hex'``."""
-    from pyspark.sql import functions as F
+def _arrow_table(rows: list, schema):
+    """``rows`` as a pyarrow table of ``schema``, or None when a value
+    has no exact Arrow form (see :func:`one_slice_df`)."""
+    import pyarrow as pa
     from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
                                    ByteType, DoubleType, FloatType,
                                    IntegerType, LongType, ShortType,
                                    StringType)
 
-    rows = list(rows)
-    if not rows:
+    from dsgrid_spark.filesystem import arrow_schema
+
+    pa_schema = arrow_schema(schema)
+    if pa_schema is None:
         return None
-
-    import math
-
-    int_bounds = {ByteType: 7, ShortType: 15, IntegerType: 31,
-                  LongType: 63}
-    # literal path only for values whose PYTHON type already matches the
-    # declared field type — a blanket cast would silently parse e.g. a
-    # str into a timestamp where createDataFrame raises, and this fast
-    # path must be semantics-identical to the pickled-RDD one
-    type_ok = {BooleanType: bool, ByteType: int, ShortType: int,
+    # the Python types createDataFrame's verifier takes per field type
+    # (plus ints into floats); bool, an int subclass, only into booleans
+    accepts = {BooleanType: bool, ByteType: int, ShortType: int,
                IntegerType: int, LongType: int,
                FloatType: (int, float), DoubleType: (int, float),
                StringType: str, BinaryType: (bytes, bytearray)}
 
-    cells = 0
-
-    def sql_cell(val, dt):
-        nonlocal cells
-        cells += 1
-        if cells > _ONE_SLICE_LITERAL_CELL_CAP:
-            raise TypeError("literal tree too large")
-        ddl = dt.simpleString()
-        if val is None:
-            return f"CAST(NULL AS {ddl})"
+    def exact(v, dt, nullable: bool) -> bool:
+        if v is None:
+            return nullable
         if isinstance(dt, ArrayType):
-            if not isinstance(val, (list, tuple)):
-                raise TypeError("array field expects a list")
-            if not val:
-                return f"CAST(array() AS {ddl})"
-            inner = ", ".join(sql_cell(v, dt.elementType) for v in val)
-            return f"CAST(array({inner}) AS {ddl})"
-        ok = type_ok.get(type(dt))
-        if (ok is None or not isinstance(val, ok)
-                or (isinstance(val, bool)
-                    and not isinstance(dt, BooleanType))):
-            raise TypeError(f"no literal form for {type(val).__name__}")
-        if isinstance(dt, BooleanType):
-            return "TRUE" if val else "FALSE"
-        if isinstance(dt, (FloatType, DoubleType)):
-            v = float(val)
-            if not math.isfinite(v):
-                raise TypeError("non-finite float")
-            return f"CAST('{v!r}' AS {ddl})"
-        if isinstance(dt, StringType):
-            s = val.replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{s}'"
-        if isinstance(dt, BinaryType):
-            return f"X'{bytes(val).hex()}'"
-        b = int_bounds[type(dt)]
-        if not -(1 << b) <= val < (1 << b):
-            raise TypeError("int out of range for declared type")
-        return f"CAST({int(val)} AS {ddl})"
+            return isinstance(v, (list, tuple)) and all(
+                exact(x, dt.elementType, dt.containsNull) for x in v)
+        return isinstance(v, accepts[type(dt)]) and (
+            isinstance(dt, BooleanType) or not isinstance(v, bool))
 
-    try:
-        structs = []
-        for row in rows:
-            if len(row) != len(schema.fields):
-                raise TypeError("row width != schema width")
-            fields = ", ".join(
-                "'%s', %s" % (f.name.replace("\\", "\\\\")
-                              .replace("'", "\\'"),
-                              sql_cell(v, f.dataType))
-                for v, f in zip(row, schema.fields))
-            structs.append(f"named_struct({fields})")
-    except TypeError:
+    fields = schema.fields
+    if not all(isinstance(r, (tuple, list)) and len(r) == len(fields)
+               and all(exact(v, f.dataType, f.nullable)
+                       for v, f in zip(r, fields)) for r in rows):
         return None
-    lit_df = spark.range(0, 1, 1, 1).select(
-        F.expr("inline(array(%s))" % ", ".join(structs)))
-    # union with an empty all-NULL relation widens every field to
-    # nullable, matching the pickled-RDD path's schema exactly (literal
-    # structs infer non-nullable fields, and Spark 4 folds the
-    # when(true, ...) trick away during analysis)
-    empty = spark.range(0, 0, 1, 1).select(*[
-        F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
-    return lit_df.unionByName(empty)
+    try:
+        return pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], type=t)
+             for i, t in enumerate(pa_schema.types)], schema=pa_schema)
+    except (pa.ArrowException, OverflowError):  # an int overflowing its field
+        return None
 
 
 @contextmanager

@@ -6,7 +6,8 @@ both implementations — ``LocalFilesystem()`` and
 implementation against identical trees, and asserts equal results (the
 spark-rapids ``assert_gpu_and_cpu_are_equal_collect`` shape). Where the
 two really differ, the difference itself is asserted, so callers can
-rely on it. Also here: the two lock races the shared atomic-marker
+rely on it. Also here: ``read_committed``'s footer schema against
+Spark's own inference, the two lock races the shared atomic-marker
 primitive closes, the default-filesystem resolution of
 ``filesystem_for``, and the layering guard that keeps raw Hadoop
 FileSystem calls out of the rest of the package.
@@ -189,6 +190,70 @@ def test_write_rows_unmappable_type(spark, tmp_path):
     HadoopFilesystem(spark, "file:///").write_rows(
         f"{tmp_path}/ts", [(None,)], "v timestamp")
     assert spark.read.parquet(f"{tmp_path}/ts").count() == 1
+
+
+# ---------------------------------------------------------------------------
+# parquet_data_schema / read_committed
+# ---------------------------------------------------------------------------
+
+def _committed_read(spark, monkeypatch, fs, path, ids):
+    """read_committed of ``path``'s vectors through ``fs``, with the
+    Spark jobs its planning launched."""
+    monkeypatch.setattr(indexlog, "filesystem_for", lambda spark, p: fs)
+    sc = spark.sparkContext
+    sc.setJobGroup("read-committed-plan", "plan one committed read")
+    try:
+        df = indexlog.read_committed(spark, path, "vectors", ids=ids)
+    finally:
+        sc.setJobGroup(None, None)
+    return df, sc.statusTracker().getJobIdsForGroup("read-committed-plan")
+
+
+def test_read_committed_schema_matches_inference(spark, tmp_path,
+                                                 monkeypatch, fs):
+    """On a Spark-written ``cluster=*/batch=*`` tree, read_committed has
+    the schema (nullability and partition columns included) and the rows
+    of the Spark-inferred read. Locally the schema comes from one
+    footer, so planning launches no job; Hadoop leaves it to Spark."""
+    from pyspark.sql import functions as F
+
+    path = f"{tmp_path}/idx"
+    for b in ("base", "b1", "orphan"):
+        (spark.range(12)
+         .select("id", (F.col("id") % 3).cast("int").alias("cluster"),
+                 F.array(F.col("id").cast("double"), F.lit(1.0))
+                 .alias("embedding"), F.lit(b).alias("batch"))
+         .write.mode("append").partitionBy("cluster", "batch")
+         .parquet(f"{path}/vectors"))
+    ids = {"base", "b1"}
+    got, jobs = _committed_read(spark, monkeypatch, fs, path, ids)
+    want = (spark.read.parquet(f"{path}/vectors")
+            .filter(F.col("batch").isin(sorted(ids))))
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 24
+    spark_schema = fs.parquet_data_schema(f"{path}/vectors")
+    if isinstance(fs, LocalFilesystem):
+        assert spark_schema.fieldNames() == ["id", "embedding"]
+        assert jobs == []
+    else:
+        assert spark_schema is None
+
+
+def test_read_committed_infers_without_spark_metadata(spark, tmp_path,
+                                                      monkeypatch, fs):
+    """A pyarrow-written tree carries no Spark footer metadata: the
+    schema read returns None and Spark infers the schema as before."""
+    path = f"{tmp_path}/idx"
+    for b in ("base", "b1"):
+        LocalFilesystem().write_rows(f"{path}/vectors", [(1, 2.5), (2, None)],
+                                     "id long, score double",
+                                     partition=("batch", b))
+    assert fs.parquet_data_schema(f"{path}/vectors") is None
+    got, _ = _committed_read(spark, monkeypatch, fs, path, {"b1"})
+    assert got.schema == spark.read.parquet(f"{path}/vectors").schema
+    assert sorted((r["id"], r["score"], r["batch"]) for r in got.collect()) \
+        == [(1, 2.5, "b1"), (2, None, "b1")]
 
 
 # ---------------------------------------------------------------------------
@@ -551,13 +616,14 @@ def test_log_batch_preserves_log_contract(spark, tmp_path, monkeypatch,
 
 _RAW_FS = re.compile(r"org\.apache\.hadoop\.fs|getFileSystem|"
                      r"hadoopConfiguration\(|createNewFile|read_meta_rows|"
-                     r"write_meta_rows|_meta_local_dir")
+                     r"write_meta_rows|_meta_local_dir|"
+                     r"read_metadata|read_schema")
 
 
 def test_layering_guard_no_raw_filesystem_calls():
     """filesystem.py is the only module that may touch the Hadoop
-    FileSystem API or pick a metadata IO path; everything else goes
-    through filesystem_for."""
+    FileSystem API, read a parquet footer or pick a metadata IO path;
+    everything else goes through filesystem_for."""
     pkg = Path(__file__).resolve().parent.parent / "dsgrid_spark"
     offenders = [
         f"{p.relative_to(pkg.parent)}:{i}: {line.strip()}"

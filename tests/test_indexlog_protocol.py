@@ -1,8 +1,9 @@
 """The shared index commit protocol (``indexlog.build_index`` /
 ``append_batch`` / ``replace_batches``) as seen through its callers:
 the vector-dimension guard every vector build and append runs before
-writing, the binary append's two pre-commit guards, and a compaction
-retry's cleanup of the generation tables it transfers."""
+writing, the binary append's two pre-commit guards, a compaction
+retry's cleanup of the generation tables it transfers, and the Spark
+jobs one search of the committed batches launches."""
 
 from __future__ import annotations
 
@@ -165,3 +166,36 @@ def test_ivf_append_rejects_wrong_dim_after_first_row(spark, tmp_path):
         append_ivf_index(mixed, path, batch_id="mixed1")
     assert indexlog.batch_sets(spark, path)[1] == {indexlog.BASE_BATCH}
     assert glob.glob(f"{path}/vectors/*/batch=mixed1") == []
+
+
+def test_ivf_search_job_count(spark, tmp_path):
+    """A list-form search of a 2-batch IVF index, forced with a noop
+    write, runs at most 3 Spark jobs, and none of them is a parquet
+    schema-inference job: the committed-vector read takes its schema
+    from a data file's footer and the probe frame is a LocalRelation."""
+    from dsgrid_spark.pipeline.similarity import (append_ivf_index,
+                                                  ivf_search,
+                                                  write_ivf_index)
+
+    rows = _clustered_vectors(40, dim=8)
+    path = str(tmp_path / "ivf")
+    write_ivf_index(_vectors(spark, rows[:30]), path,
+                    [rows[0][1], rows[1][1]])
+    assert append_ivf_index(_vectors(spark, rows[30:]), path,
+                            batch_id="b1")
+    queries = [(q, rows[q][1]) for q in range(4)]
+    ivf_search(spark, path, queries, k=5, n_probe=1).collect()  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-search-jobs", "one list-form search")
+    try:
+        (ivf_search(spark, path, queries, k=5, n_probe=1)
+         .write.format("noop").mode("overwrite").save())
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("ivf-search-jobs")
+    stages = [tracker.getStageInfo(s)
+              for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert len(jobs) <= 3, len(jobs)
+    # a schema-inference job is named after its call, DataFrameReader.parquet
+    assert not [s.name for s in stages if s and s.name.startswith("parquet")]

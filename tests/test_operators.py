@@ -368,6 +368,30 @@ def test_expression_count_guards(spark):
     assert [(r["k"], r["value"]) for r in got.collect()] == [("x", 9.0)]
 
 
+def test_expression_guards_count_null_keys_as_missing(spark):
+    """A NULL dimension key (as restore_expected_missing leaves) groups
+    as one key in the audits but never matches in the inner join, so
+    both the up-front component audit and the per-node guard raise
+    instead of dropping the row."""
+    a = spark.createDataFrame([("x", 10.0), (None, 20.0)],
+                              "k string, value double")
+    b = spark.createDataFrame([("x", 1.0), (None, 2.0)],
+                              "k string, value double")
+    # audited once up front (a and b form one arithmetic region)
+    with pytest.raises(DatasetExpressionError, match="changed row count"):
+        evaluate_expression("a - b", {"a": a, "b": b})
+    # re-guarded at the node: union operands are not pre-audited
+    c = spark.createDataFrame([("y", 3.0)], "k string, value double")
+    d = spark.createDataFrame([("y", 4.0)], "k string, value double")
+    with pytest.raises(DatasetExpressionError, match="changed row count"):
+        evaluate_expression("(a | c) - (b | d)",
+                            {"a": a, "b": b, "c": c, "d": d})
+    two = spark.createDataFrame([("x", "p", 1.0), ("x", None, 2.0)],
+                                "k string, j string, value double")
+    with pytest.raises(DatasetExpressionError, match="changed row count"):
+        evaluate_expression("two * two", {"two": two})
+
+
 def test_expression_union_of_independent_arith_branches(spark):
     """ADVICE r4 (high): ``(a-b)|(c-d)`` unions two independently-aligned
     arithmetic branches with DISJOINT key sets (stacking sectors). Each

@@ -1,87 +1,9 @@
 """Round-12 OPTIMIZATION tests: each one pins the behavior an
-optimization changed — the literal one_slice_df fast path (guide §4:
-eliminate the JVM↔Python boundary for tiny driver-side frames) must be
-bit- and schema-identical to the pickled-RDD path it replaces, and must
-actually plan as a pure-JVM relation."""
+optimization changed — SQL-string expression twins bit-identical to the
+Column-API builds they replaced, single-action analysis phases, and
+shuffles removed from near-dup and multi-probe plans."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql.types import StructType
-
-
-def _plan(df, mode="simple"):
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode)
-
-
-LITERAL_CASES = [
-    ([(1, "a", 2.5), (2, None, None)], "id int, name string, v double"),
-    ([(0, [1.0, 2.0, 3.0]), (1, [])], "cluster int, centroid array<double>"),
-    ([(b"\x00\x01", True)], "blob binary, flag boolean"),
-    ([(None, [None, 2.0])], "s string, arr array<double>"),
-    ([("t1", 7), ("t2", 8)], "term string, df bigint"),
-]
-
-
-@pytest.mark.parametrize("rows,ddl", LITERAL_CASES)
-def test_one_slice_literal_matches_rdd_path(spark, rows, ddl):
-    """The JVM-literal plan returns the same rows AND the same schema
-    (nullability included) as createDataFrame(parallelize(rows, 1))."""
-    from dsgrid_spark.session import _literal_rows_df
-
-    sch = StructType.fromDDL(ddl)
-    lit = _literal_rows_df(spark, rows, sch)
-    assert lit is not None
-    old = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), sch)
-    assert lit.schema == old.schema
-    assert [tuple(r) for r in lit.collect()] == \
-        [tuple(r) for r in old.collect()]
-    plan = _plan(lit)
-    # pure JVM: no pickled-RDD scan, no Python evaluation node
-    assert "Scan ExistingRDD" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_one_slice_literal_fallbacks(spark):
-    """Values without a safe literal form (type mismatch vs the declared
-    schema, non-scalar objects, oversized trees) keep the old path —
-    the fast path must never widen what one_slice_df accepts."""
-    import datetime
-
-    from dsgrid_spark.session import _literal_rows_df, one_slice_df
-
-    # datetime has no literal fast-path form
-    assert _literal_rows_df(
-        spark, [(datetime.datetime(2020, 1, 1),)],
-        StructType.fromDDL("t timestamp")) is None
-    # str into int would CAST under lit(); createDataFrame raises, so
-    # the literal path must decline rather than silently parse
-    assert _literal_rows_df(
-        spark, [("5",)], StructType.fromDDL("n int")) is None
-    # oversized literal trees decline (Catalyst analysis cost)
-    big = [(i, [float(j) for j in range(64)]) for i in range(200)]
-    assert _literal_rows_df(
-        spark, big,
-        StructType.fromDDL("c int, v array<double>")) is None
-    # generator input still works end-to-end (fallback materializes)
-    df = one_slice_df(spark, ((i, "s") for i in range(3)), "a int, b string")
-    assert df.count() == 3
-
-
-def test_one_slice_df_used_by_index_meta_writes(spark, tmp_path):
-    """An index meta write through one_slice_df round-trips through
-    parquet identically on the literal path."""
-    from dsgrid_spark.session import one_slice_df
-
-    p = str(tmp_path / "meta")
-    one_slice_df(
-        spark, [(4, 2, 123, 8)],
-        "num_hashes int, shingle_k int, seed int, n_shards int",
-    ).coalesce(1).write.mode("overwrite").parquet(p)
-    back = spark.read.parquet(p).collect()
-    assert [tuple(r) for r in back] == [(4, 2, 123, 8)]
 
 
 def test_incremental_dedup_shared_batch_side_parity(spark):
