@@ -249,7 +249,7 @@ def bloom_prefilter(df: DataFrame, bloom: BloomFilter,
 # picks the shard — so each shard stays in the single-filter comfort
 # range, and ship the bitsets as broadcast DATA (one (shard, words) row
 # per shard), never as plan literals: the same plan-size lesson as
-# assign_nearest_centroid's data strategy. Membership is a broadcast
+# assign_nearest_centroid's broadcast centroid row. Membership is a broadcast
 # hash join on the shard id plus the usual k probes against the joined
 # words column — zero shuffle of the probed batch beyond the map-side
 # broadcast, plan size O(1) in B and m.

@@ -17,9 +17,9 @@ Spark-first design decisions:
 - **Codebooks are DATA, never plan literals** — the full nested
   codebook rides ONE broadcast row of ``array<array<array<double>>>``
   (m x k x dsub), consumed by nested HOF lambdas. Same lesson as
-  ``assign_nearest_centroid``'s ``data`` strategy
-  (tools/scale_centroid_assign.py: Catalyst analysis is superlinear in
-  literal count; data-path analysis is flat): a production m=16, k=256,
+  ``assign_nearest_centroid``'s broadcast centroid row (SCALE_R7.md:
+  Catalyst analysis is superlinear in literal count; a broadcast row's
+  analysis is flat): a production m=16, k=256,
   dsub=48 codebook is 196k doubles — inlining it would be an
   analysis-time scale-killer on every downstream job.
 - **Encoding is one narrow projection** — no join, no shuffle: each row
@@ -31,7 +31,7 @@ Spark-first design decisions:
   and applied with ``aggregate(transform(code, (c, j) -> lut[j][c]))``.
   Scoring never touches the original vectors.
 - **IVF-PQ composes** existing pieces: coarse-assign with
-  ``assign_nearest_centroid`` (auto literal/data strategy), PQ-encode
+  ``assign_nearest_centroid`` (broadcast centroid row), PQ-encode
   once, probe clusters per query, ADC-score only the probed candidates.
 
 Exactness escape hatch for cross-engine audits: when every corpus
@@ -651,7 +651,7 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame,
                 method: str = "hof",
                 residual: bool = False) -> DataFrame:
     """IVF-PQ: coarse-quantize the corpus into inverted lists
-    (``assign_nearest_centroid``, auto literal/data strategy), PQ-encode
+    (``assign_nearest_centroid``, broadcast centroid row), PQ-encode
     once, then each query ADC-scores ONLY its ``n_probe`` nearest
     lists. The billion-scale recipe: candidate pruning from IVF,
     candidate cost m lookups from PQ — a full scan touches neither all

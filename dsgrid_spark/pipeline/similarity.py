@@ -84,8 +84,8 @@ def quantize_embeddings(df: DataFrame, vector_column: str = "embedding",
 
 
 #: above this many literal ids, candidate lists ship as broadcast data
-#: (semi-join) instead of an In() plan literal — same rationale as
-#: LITERAL_CENTROID_BUDGET (Catalyst analysis superlinear in literals)
+#: (semi-join) instead of an In() plan literal (Catalyst analysis is
+#: superlinear in literals; SCALE_R7.md)
 LITERAL_CANDIDATE_BUDGET = 10_000
 
 
@@ -149,20 +149,21 @@ def candidate_filter(df: DataFrame, candidates,
         # a 1M-literal In() bloats the plan tree and its analysis the
         # same way inline centroids did (ROADMAP 8): ship big sets as
         # DATA — one broadcast semi-join — instead of plan literals
-        ids_df = df.sparkSession.createDataFrame(
-            [(i,) for i in ids], [id_column])
+        ids_df = _osdf(df.sparkSession, [(i,) for i in ids],
+                       StructType([StructField(id_column, dtype)]))
         return df.join(F.broadcast(ids_df), id_column, "left_semi")
     return df.filter(F.col(id_column).isin(ids))
 
 
 def _matrix_row(spark, matrix: list[list[float]], col_name: str):
     """A float matrix as ONE broadcast DataFrame row of
-    ``array<array<double>>`` — data, not plan literals. The shared
-    escape hatch for every operator that consults a fixed small matrix
-    per row (centroids, projection signs, LSH hyperplanes): above
-    ``LITERAL_CENTROID_BUDGET`` inlined doubles, Catalyst analysis of
-    the literal plan is superlinear in the literal count
-    (tools/scale_centroid_assign.py) while a broadcast row is flat."""
+    ``array<array<double>>`` — data, not plan literals. The one JVM
+    form of every fixed matrix a kernel consults per row (centroids,
+    projection signs, LSH hyperplanes, k-means‖ candidates), at every
+    size: the plan stays constant in k×dim (Catalyst analysis of
+    inlined literals is superlinear in their count, SCALE_R7.md), and
+    the matrix ships once per executor instead of inside every task's
+    serialized plan. Cost: one broadcast job per action."""
     payload = [[float(x) for x in row] for row in matrix]
     return F.broadcast(_osdf(spark, 
         [(payload,)], f"{col_name}: array<array<double>>"))
@@ -185,8 +186,7 @@ def projection_signs(dim: int, out_dim: int, seed: str = "rp") -> list[list[floa
 def random_projection(df: DataFrame, dim: int, out_dim: int,
                       vector_column: str = "embedding",
                       output_column: str = "projected",
-                      seed: str = "rp",
-                      strategy: str = "auto") -> DataFrame:
+                      seed: str = "rp") -> DataFrame:
     """Johnson–Lindenstrauss sign random projection: ``y_j = Σ_i x_i ·
     R[j][i]`` with R ∈ {±1}^(out_dim×dim) (Achlioptas 2003's database-
     friendly projection — beyond the reference, which has no embedding
@@ -198,32 +198,12 @@ def random_projection(df: DataFrame, dim: int, out_dim: int,
     cutting the shuffled bytes and the per-pair re-rank arithmetic by
     dim/out_dim. Per-row column expressions only — zero shuffle, no UDF.
 
-    Like :func:`assign_nearest_centroid`, the sign matrix has two
-    physical homes with bit-identical results (same per-element fold
-    order): ``literal`` inlines out_dim×dim array literals (fine small;
-    a 1536→64 projection is 98k literals — Catalyst-analysis
-    superlinear), ``data`` ships the matrix as ONE broadcast row and
-    projects via ``transform(sequence(...))``. ``auto`` switches to
-    ``data`` above ``LITERAL_CENTROID_BUDGET`` doubles.
+    The sign matrix ships as ONE broadcast row (:func:`_matrix_row`)
+    and each output is a left-to-right fold over
+    ``zip_with(v, R[j])``, so the plan size is constant in out_dim×dim.
     """
-    if strategy not in ("auto", "literal", "data"):
-        raise ValueError(f"strategy must be auto|literal|data, got {strategy!r}")
-    if strategy == "auto":
-        strategy = "data" if dim * out_dim > LITERAL_CENTROID_BUDGET \
-            else "literal"
     signs = projection_signs(dim, out_dim, seed)
     v = F.col(vector_column)
-    if strategy == "literal":
-        rows = [F.array(*[F.lit(s) for s in signs[j]])
-                for j in range(out_dim)]
-        proj = F.array(*[
-            F.aggregate(
-                F.zip_with(v, rows[j], lambda x, r: x * r),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )
-            for j in range(out_dim)
-        ])
-        return df.withColumn(output_column, proj)
     mat = _matrix_row(df.sparkSession, signs, "__rp_mat")
     proj = F.transform(
         F.sequence(F.lit(0), F.lit(out_dim - 1)),
@@ -423,41 +403,27 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return [[rnd.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _plane_strategy(strategy: str, n_doubles: int) -> str:
-    if strategy not in ("auto", "literal", "data"):
-        raise ValueError(f"strategy must be auto|literal|data, got {strategy!r}")
-    if strategy == "auto":
-        return "data" if n_doubles > LITERAL_CENTROID_BUDGET else "literal"
-    return strategy
-
-
 def add_lsh_bucket(df: DataFrame, dim: int, vector_column: str = "embedding",
                    n_planes: int = 8, seed: int = 7,
-                   bucket_column: str = "bucket",
-                   strategy: str = "auto") -> DataFrame:
-    """Random-hyperplane signature → integer bucket id.
+                   bucket_column: str = "bucket") -> DataFrame:
+    """Random-hyperplane signature → integer bucket id: bit i is set
+    when ``dot(v, plane_i) > 0``.
 
     Same hyperplanes (same seed) must be used for corpus and queries.
-    Hyperplanes are plan literals below ``LITERAL_CENTROID_BUDGET``
-    doubles and ONE broadcast data row above it (``strategy="auto"``;
-    a 16-plane × 1536-dim signature is 25k literals otherwise — the
-    measured Catalyst-analysis blowup). Bucket ids are bit-identical
-    between strategies: per-plane dots share the same fold order and
-    the bit sum is integer.
+    The hyperplanes ship as ONE broadcast row (:func:`_matrix_row`), so
+    the plan size is constant in n_planes×dim.
     """
-    strategy = _plane_strategy(strategy, dim * n_planes)
-    planes = _hyperplanes(dim, n_planes, seed)
-    v = F.col(vector_column)
-    if strategy == "literal":
-        bucket = F.lit(0).cast("long")
-        for i, p in enumerate(planes):
-            plane = F.array(*[F.lit(x) for x in p])
-            bit = F.when(dot(v, plane) > 0,
-                         F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0))
-            bucket = bucket + bit
-        return df.withColumn(bucket_column, bucket)
-    mat = _matrix_row(df.sparkSession, planes, "__lsh_mat")
-    bucket = F.aggregate(
+    mat = _matrix_row(df.sparkSession, _hyperplanes(dim, n_planes, seed),
+                      "__lsh_mat")
+    return (df.crossJoin(mat)
+            .withColumn(bucket_column, _lsh_bits(F.col(vector_column),
+                                                 n_planes))
+            .drop("__lsh_mat"))
+
+
+def _lsh_bits(v: Column, n_planes: int) -> Column:
+    """The bucket id of ``v`` against the ``__lsh_mat`` planes row."""
+    return F.aggregate(
         F.transform(
             F.sequence(F.lit(0), F.lit(n_planes - 1)),
             lambda i: F.when(
@@ -470,17 +436,13 @@ def add_lsh_bucket(df: DataFrame, dim: int, vector_column: str = "embedding",
         ),
         F.lit(0).cast("long"), lambda acc, x: acc + x,
     )
-    return (df.crossJoin(mat)
-            .withColumn(bucket_column, bucket)
-            .drop("__lsh_mat"))
 
 
 def lsh_probe_buckets(df: DataFrame, dim: int,
                       vector_column: str = "embedding",
                       n_planes: int = 8, seed: int = 7,
                       n_probes: int = 1,
-                      bucket_column: str = "bucket",
-                      strategy: str = "auto") -> DataFrame:
+                      bucket_column: str = "bucket") -> DataFrame:
     """Multi-probe bucket expansion: one row per (input row, probe).
 
     Probe 0 is the row's own bucket; probes 1..n_probes-1 flip the sign
@@ -489,49 +451,32 @@ def lsh_probe_buckets(df: DataFrame, dim: int,
     lost its true neighbors across THAT plane). Pure column expressions —
     the margin ranking is an array_sort over (|dot|, plane index) structs,
     no UDF, no shuffle; rows fan out n_probes x, which on the query side
-    of an ANN join is a handful of extra broadcast rows.
+    of an ANN join is a handful of extra broadcast rows. The bucket bits
+    and the margins read the same ONE broadcast planes row as
+    :func:`add_lsh_bucket`.
     """
-    strategy = _plane_strategy(strategy, dim * n_planes)
-    planes = _hyperplanes(dim, n_planes, seed)
-    if strategy == "literal":
-        margins = F.array(*[
-            F.struct(
-                F.abs(dot(F.col(vector_column),
-                          F.array(*[F.lit(x) for x in p]))).alias("m"),
-                F.lit(i).alias("i"),
-            )
-            for i, p in enumerate(planes)
-        ])
-    else:
-        # same planes as ONE broadcast row (the add_lsh_bucket data
-        # path reuses the identical __lsh_mat column name downstream,
-        # so alias this one)
-        margins = F.transform(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
-            lambda i: F.struct(
-                F.abs(dot(F.col(vector_column),
-                          F.get(F.col("__probe_mat"), i))).alias("m"),
-                i.cast("int").alias("i"),
-            ),
-        )
+    v = F.col(vector_column)
+    mat = _matrix_row(df.sparkSession, _hyperplanes(dim, n_planes, seed),
+                      "__lsh_mat")
+    margins = F.transform(
+        F.sequence(F.lit(0), F.lit(n_planes - 1)),
+        lambda i: F.struct(
+            F.abs(dot(v, F.get(F.col("__lsh_mat"), i))).alias("m"),
+            i.cast("int").alias("i"),
+        ),
+    )
     flips = F.slice(
         F.transform(F.array_sort(margins), lambda s: s.i),
         1, max(n_probes - 1, 0))
-    base = add_lsh_bucket(df, dim, vector_column, n_planes, seed,
-                          bucket_column="__b0", strategy=strategy)
-    if strategy == "data":
-        base = base.crossJoin(
-            _matrix_row(df.sparkSession, planes, "__probe_mat"))
+    base = df.crossJoin(mat).withColumn("__b0", _lsh_bits(v, n_planes))
     probes = F.concat(
         F.array(F.col("__b0")),
         F.transform(flips, lambda i: F.col("__b0").bitwiseXOR(
             F.call_function("shiftleft", F.lit(1).cast("long"),
                             i.cast("int")))),
     )
-    # __probe_mat only exists on the data path; dropping a missing
-    # column is a no-op
     return (base.withColumn(bucket_column, F.explode(probes))
-            .drop("__b0", "__probe_mat"))
+            .drop("__b0", "__lsh_mat"))
 
 
 def lsh_topk(
@@ -708,7 +653,7 @@ def _kmeans_parallel_seeds(fit_df: DataFrame, k: int, vector_column: str,
     sampled with near-certainty by round 2–3 (the paper's argument:
     each round halves the remaining potential in expectation).
 
-    Per round: ONE broadcast candidate table (the data-path idiom —
+    Per round: ONE broadcast candidate row (:func:`_matrix_row` —
     candidates are data, not plan literals), one agg for the potential
     φ = Σd², one filter-collect of the newly sampled rows (expected
     ``oversample`` rows, default 2k — driver-bounded). The Bernoulli
@@ -752,14 +697,11 @@ def _kmeans_parallel_seeds(fit_df: DataFrame, k: int, vector_column: str,
                 centers, "__v", "__best").withColumn(
                 "__d2", F.pow(F.lit(1.0) - F.col("__best"), F.lit(2.0)))
         else:
-            cent_one = (
-                fit_df.sparkSession.createDataFrame(
-                    [(c,) for c in centers], "__c array<double>")
-                .agg(F.collect_list("__c").alias("__cands")))
+            cands = _matrix_row(fit_df.sparkSession, centers, "__cands")
             best = F.array_max(F.transform(F.col("__cands"),
                                            lambda c: cosine(v, c)))
             d2c = F.pow(F.lit(1.0) - best, F.lit(2.0))
-            frame = (fit_df.crossJoin(F.broadcast(cent_one))
+            frame = (fit_df.crossJoin(cands)
                      .select(v.alias("__v"), d2c.alias("__d2"),
                              u.alias("__u")))
         phi = frame.agg(F.sum("__d2")).collect()[0][0] or 0.0
@@ -799,6 +741,11 @@ def kmeans_centroids(df: DataFrame, n_clusters: int, dim: int,
                      assign_strategy: str = "auto",
                      init: str = "sample") -> list[list[float]]:
     """Plain k-means via DataFrame aggregations (no MLlib dependency).
+
+    Every non-NULL vector must have ``dim`` elements: a wrong-dim row
+    raises ``ValueError`` before fitting (its cosine to every centroid
+    is NULL, and the fit would depend on where the argmax puts it). The
+    check shares the corpus count's job.
 
     ``assign_strategy`` flows to :func:`assign_nearest_centroid`; pass
     ``"arrow"`` for the numpy kernel when the fit need not be
@@ -847,7 +794,13 @@ def kmeans_centroids(df: DataFrame, n_clusters: int, dim: int,
     import random
 
     rnd = random.Random(seed)
-    total = df.count()
+    v = F.col(vector_column)
+    size = F.when(v.isNotNull(), F.size(v))
+    total, lo, hi = df.agg(F.count(F.lit(1)), F.min(size),
+                           F.max(size)).first()
+    bad = lo if lo != dim else hi
+    if bad is not None and bad != dim:
+        raise ValueError(f"vector dim {bad} != dim {dim}")
     fit_df = df
     cap_binds = fit_sample_cap is not None and total > fit_sample_cap
     if cap_binds:
@@ -900,132 +853,73 @@ def kmeans_centroids(df: DataFrame, n_clusters: int, dim: int,
     return centroids
 
 
-# Above this many inlined doubles the centroid matrix switches from plan
-# literals to broadcast DATA (see assign_nearest_centroid). Measured
-# (tools/scale_centroid_assign.py, 2k rows x dim=512/64): Catalyst
-# analysis of the literal plan is 1.6 s at 2k literals, 5.4 s at 8k,
-# 20.5 s at 32k, 304 s at 512k, while the data path stays 0.1-0.5 s flat
-# in k with equal-or-better runtime. Literal's only edge is avoiding a
-# ~0.3 s driver-side centroid-table build on tiny codebooks.
-LITERAL_CENTROID_BUDGET = 2048
-
-
-def _sql_score(vc: str, centroid, assume_normalized: bool) -> str:
-    """The SQL-string twin of ``dot(col, lit-array)`` /
-    ``cosine(col, lit-array)`` — same functions, same fold order, same
-    literal doubles (``CAST('<repr>' AS DOUBLE)`` round-trips every
-    finite double exactly through Double.parseDouble), so the analyzed
-    expression is identical to the Column-API build."""
-    arr = "array(%s)" % ", ".join(
-        f"CAST('{float(x)!r}' AS DOUBLE)" for x in centroid)
-    d = (f"aggregate(zip_with({vc}, {arr}, (x, y) -> x * y), "
-         f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
-    if assume_normalized:
-        return d
-
-    def nrm(a):
-        return (f"sqrt(aggregate(transform({a}, x -> x * x), "
-                f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))")
-
-    dn = f"({nrm(vc)} * {nrm(arr)})"
-    return (f"CASE WHEN {dn} > 0 THEN ({d} / {dn}) "
-            f"ELSE CAST(0.0 AS DOUBLE) END")
-
-
 def assign_nearest_centroid(df: DataFrame, centroids: list[list[float]],
                             vector_column: str = "embedding",
                             assume_normalized: bool = False,
                             strategy: str = "auto") -> DataFrame:
     """Nearest centroid by cosine; ties break to the lowest cluster index.
 
-    Two physical strategies, identical results (same fold order, so the
-    doubles are bit-identical — tested):
-
-    - ``literal`` — the k cosine folds land in ONE array column built
-      from literal centroid arrays and the argmax is
-      ``array_position(scores, array_max(scores))``. Zero joins, but the
-      centroid matrix is inlined into the PLAN: O(k*dim) Literal nodes
-      that Catalyst re-analyzes on every downstream job. Fine for small
-      codebooks; at SemDeDup's derived k=4096 with 768-dim production
-      embeddings that is ~3M expression nodes — an analysis-time
-      scale-killer, not a row-work one.
-    - ``data`` — the centroid matrix is DATA, not plan: the (cluster,
-      centroid) table collapses to a single row holding
-      ``array<struct<cluster,centroid>>``, broadcast-cross-joined onto
-      the corpus (1-row build side), and the argmax is one
-      ``array_max(transform(...))`` over (score, -cluster) structs.
-      Plan size O(1) in k, zero shuffle, zero join-back, JVM HOFs
-      end-to-end; per-row arithmetic identical to the literal path. The
-      broadcast payload is k*dim doubles (k=4096 x dim=1024 = 32 MB)
-      shipped once per executor instead of once per task deserialization
-      of the plan.
-
-    ``strategy="auto"`` (default) picks ``data`` when k*dim exceeds
-    ``LITERAL_CENTROID_BUDGET``. All consumers (kmeans_centroids,
-    semantic_dedup, ivf_* build/append) inherit auto.
+    The centroid matrix is DATA, not plan: ONE broadcast row
+    (:func:`_matrix_row`) cross-joined onto the corpus, so the plan has
+    the same constant size for any k×dim. Each row projects
+    ``__scores = transform(__cents, c -> cosine(v, c))`` once, and its
+    cluster is ``array_position(__scores, array_max(__scores)) - 1``,
+    the first maximum: ties go to the lowest index, a row whose scores
+    are all NULL (a vector of the wrong length, or a NULL vector under
+    ``assume_normalized``) gets a NULL cluster, and an all-zero vector
+    (cosine 0.0 everywhere) gets cluster 0. The cosine folds each
+    centroid's norm once on the broadcast row and the row's norm once
+    per row, so a score costs one dot fold, with the doubles of
+    :func:`cosine`. The broadcast is k*dim doubles (k=4096 x dim=1024 =
+    32 MB) shipped once per executor, where literal centroids would
+    ride in every task's serialized plan.
 
     ``assume_normalized=True`` replaces each cosine with a plain dot —
     valid ONLY when the caller guarantees unit-norm rows AND centroids;
-    it cuts the per-centroid fold count 3x (no norm recomputation).
+    it skips the norm folds.
 
-    A third, OPT-IN strategy ``arrow`` runs the argmax as a numpy
+    ``strategy="auto"`` (default) is that JVM path, which every
+    consumer (kmeans_centroids, semantic_dedup, ivf_* build/append)
+    inherits. The OPT-IN ``arrow`` runs the argmax as a numpy
     `mapInPandas` matmul kernel (ROADMAP 14: the JVM HOF fold is
     interpreted per element — the sf10 PQ rehearsal measured the k=64
     corpus assignment at ~60 s where the kernel is ~2 s). It is never
     auto-selected: numpy's summation order differs from the JVM fold
     by last-ULP rounding, so near-tied centroids can flip — fine for
     fits and rehearsals, not for bit-exact oracled paths. Exact ties
-    break to the lowest index on every strategy.
+    break to the lowest index on both.
     """
-    if strategy not in ("auto", "literal", "data", "arrow"):
-        raise ValueError(
-            f"strategy must be auto|literal|data|arrow, got {strategy!r}")
+    if strategy not in ("auto", "arrow"):
+        raise ValueError(f"strategy must be auto|arrow, got {strategy!r}")
     if strategy == "arrow":
         return _assign_arrow(df, centroids, vector_column,
                              assume_normalized)
     if not centroids:
         raise ValueError("centroids must be non-empty")
-    if strategy == "auto":
-        strategy = ("data" if len(centroids) * len(centroids[0])
-                    > LITERAL_CENTROID_BUDGET else "literal")
-    score_of = dot if assume_normalized else cosine
-    if strategy == "literal":
-        # ONE parsed SQL expression instead of ~45 py4j round trips per
-        # centroid (r12, guide §1.2 driver-side cost): building the
-        # k-wide fold ladder through the Column API measured 1.3 s of
-        # pure expression construction at k=16, dim=32 — the JVM parses
-        # the equivalent string in milliseconds. The string mirrors
-        # dot()/cosine() token for token (same fold order, same
-        # duplicated subtrees where the Column API reuses a Column
-        # object), so the analyzed plan and every double are identical
-        # (pinned by test_assign_literal_sql_matches_column_api).
-        vc = f"`{vector_column}`"
-        folds = [_sql_score(vc, c, assume_normalized) for c in centroids]
-        scores_sql = "array(%s)" % ", ".join(folds)
-        cluster = F.expr(
-            f"CAST(array_position({scores_sql}, "
-            f"array_max({scores_sql})) - 1 AS INT)")
-        return df.withColumn("__cluster", cluster)
-    spark = df.sparkSession
-    cent_one = (
-        _osdf(spark, 
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cluster int, centroid array<double>")
-        .agg(F.array_sort(
-            F.collect_list(F.struct("cluster", "centroid"))).alias("__cents"))
-    )
     v = F.col(vector_column)
-    # max of (score, -cluster) structs = highest score, tie -> lowest
-    # cluster — same tie-break as array_position-of-first-max above
-    best = F.array_max(F.transform(
-        F.col("__cents"),
-        lambda c: F.struct(score_of(v, c["centroid"]).alias("s"),
-                           (-c["cluster"]).alias("nc")),
-    ))
+    cents = _matrix_row(df.sparkSession, centroids, "__cents")
+    if assume_normalized:
+        scores = F.transform("__cents", lambda c: dot(v, c))
+    else:
+        # cosine(v, c) with each norm folded once: the centroid norms on
+        # the broadcast row, the row norm once per row (the same folds
+        # and the same norm(v) * norm(c) product, so the same doubles)
+        cents = cents.withColumn("__cn", F.transform("__cents", norm))
+        df = df.withColumn("__vn", norm(v))
+
+        def cos(c, i):
+            d = F.col("__vn") * F.col("__cn")[i]
+            return F.when(d > 0, dot(v, c) / d).otherwise(F.lit(0.0))
+
+        scores = F.transform("__cents", cos)
+    best = F.col("__scores")
     return (
-        df.crossJoin(F.broadcast(cent_one))
-        .withColumn("__cluster", (-best["nc"]).cast("int"))
-        .drop("__cents")
+        df.crossJoin(cents)
+        .withColumn("__scores", scores)
+        .withColumn("__cluster",
+                    (F.array_position(best, F.array_max(best)) - 1)
+                    .cast("int"))
+        .drop("__cents", "__cn", "__vn", "__scores")
     )
 
 

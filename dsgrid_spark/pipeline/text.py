@@ -13,6 +13,8 @@ from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from dsgrid_spark.session import one_slice_df
+
 # small per-language stopword marker sets for the n-gram heuristic lang-id
 _LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "is", "in", "that", "it"],
@@ -1079,8 +1081,8 @@ def sparse_logistic_regression(df: DataFrame, label_column: str = "label",
         if method == "arrow":
             scored = _sparse_err_arrow(data, bias, w)
         else:
-            w_row = F.broadcast(spark.createDataFrame(
-                [(w,)], "__w: array<double>"))
+            w_row = F.broadcast(one_slice_df(
+                spark, [(w,)], "__w: array<double>"))
             p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_sparse_z(bias, "__f")))
             # __e must be a RESOLVED column BELOW the explode: selecting
             # the raw expression next to explode() would place its
@@ -1159,8 +1161,9 @@ def sparse_predict_proba(df: DataFrame, bias: float, weights: list[float],
     """P(label=1) for each row under a ``sparse_logistic_regression``
     model: weights broadcast as one data row, score = m lookups — the
     zero-Python inference path over any corpus size."""
-    w_row = F.broadcast(df.sparkSession.createDataFrame(
-        [([float(x) for x in weights],)], "__w: array<double>"))
+    w_row = F.broadcast(one_slice_df(
+        df.sparkSession, [([float(x) for x in weights],)],
+        "__w: array<double>"))
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_sparse_z(bias, feature_column)))
     return (df.crossJoin(w_row)
             .withColumn(output_column, p)

@@ -1,5 +1,5 @@
 """Round-12 OPTIMIZATION tests: each one pins the behavior an
-optimization changed — SQL-string expression twins bit-identical to the
+optimization changed — expression twins bit-identical to the
 Column-API builds they replaced, single-action analysis phases, and
 shuffles removed from near-dup and multi-probe plans."""
 
@@ -64,16 +64,16 @@ def test_incremental_dedup_shared_batch_side_parity(spark):
                           within_drop=wb_drop)
 
 
-def test_assign_literal_sql_matches_column_api(spark):
-    """The r12 SQL-string build of the literal assignment strategy is
-    BIT-identical to the Column-API build it replaced: same fold order,
-    same literal doubles, so every score double and every argmax pick
-    matches exactly (both dot and cosine forms)."""
+def test_assign_scores_match_column_api_literal(spark):
+    """The broadcast-row assignment scores every centroid with the same
+    fold as a Column-API expression over literal centroid arrays, so
+    every score double and every argmax pick match exactly (both dot
+    and cosine forms)."""
     import random
 
     from pyspark.sql import functions as F
 
-    from dsgrid_spark.pipeline.similarity import (_sql_score,
+    from dsgrid_spark.pipeline.similarity import (_matrix_row,
                                                   assign_nearest_centroid,
                                                   cosine, dot)
 
@@ -84,26 +84,22 @@ def test_assign_literal_sql_matches_column_api(spark):
     cents = [[random.uniform(-1, 1) for _ in range(16)] for _ in range(8)]
     for normalized in (True, False):
         score_of = dot if normalized else cosine
-        new_scores = df.select(
-            "id", *[F.expr(_sql_score("`v`", c, normalized)).alias(f"s{i}")
-                    for i, c in enumerate(cents)])
-        old_scores = df.select(
-            "id", *[score_of(F.col("v"),
-                             F.array(*[F.lit(x) for x in c])).alias(f"s{i}")
-                    for i, c in enumerate(cents)])
-        a = sorted(tuple(r) for r in new_scores.collect())
-        b = sorted(tuple(r) for r in old_scores.collect())
-        # exact float equality — bit-identical, not approximately equal
-        assert a == b
-        got = assign_nearest_centroid(df, cents, "v",
-                                      assume_normalized=normalized,
-                                      strategy="literal")
-        scores = F.array(*[
+        lit_scores = F.array(*[
             score_of(F.col("v"), F.array(*[F.lit(x) for x in c]))
             for c in cents])
+        row_scores = F.transform("__cents", lambda c: score_of(F.col("v"), c))
+        a = df.crossJoin(_matrix_row(spark, cents, "__cents")).select(
+            "id", row_scores.alias("s"))
+        b = df.select("id", lit_scores.alias("s"))
+        # exact float equality — bit-identical, not approximately equal
+        assert sorted((r["id"], list(r["s"])) for r in a.collect()) == \
+            sorted((r["id"], list(r["s"])) for r in b.collect())
+        got = assign_nearest_centroid(df, cents, "v",
+                                      assume_normalized=normalized)
         want = df.withColumn(
             "__cluster",
-            (F.array_position(scores, F.array_max(scores)) - 1).cast("int"))
+            (F.array_position(lit_scores, F.array_max(lit_scores)) - 1)
+            .cast("int"))
         assert sorted((r["id"], r["__cluster"]) for r in got.collect()) == \
             sorted((r["id"], r["__cluster"]) for r in want.collect())
 

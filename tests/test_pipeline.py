@@ -480,36 +480,100 @@ def test_kmeans_seeds_span_partitions(spark):
     assert any(c[1] > c[0] for c in cents), cents
 
 
-def test_assign_nearest_centroid_data_path_bit_exact(spark):
-    """The broadcast-data argmax must equal the literal-expression argmax
-    bit-for-bit: same fold order, same tie-break (lowest cluster index).
-    This is the scale-safe path auto-selected above
-    LITERAL_CENTROID_BUDGET, so equality is the whole correctness story."""
+def test_kmeans_rejects_wrong_dim_rows(spark):
+    """A row whose length is not ``dim`` is refused before fitting; it
+    used to score NULL against every centroid and move the fit by
+    wherever the argmax put it."""
     import random
 
-    from dsgrid_spark.pipeline.similarity import assign_nearest_centroid
+    rnd = random.Random(5)
+    rows = [(i, [rnd.gauss(0, 1) for _ in range(4)]) for i in range(300)]
+    df = spark.createDataFrame(rows + [(300, [50.0, 50.0])],
+                               "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="vector dim 2 != dim 4"):
+        kmeans_centroids(df, 3, 4, iterations=2, seed=5)
+    with pytest.raises(ValueError, match="vector dim 4 != dim 5"):
+        kmeans_centroids(df.filter("vec_id < 300"), 3, 5, iterations=2)
+
+
+@pytest.mark.parametrize("dtype", ["long", "string"])
+def test_candidate_filter_over_budget_ships_typed_ids(spark, monkeypatch,
+                                                      dtype):
+    """Above LITERAL_CANDIDATE_BUDGET the ids ship as a broadcast
+    semi-join of an Arrow LocalRelation typed like the scanned id
+    column (no Python worker scan), and select exactly the rows the
+    ``isin`` form selects."""
+    from dsgrid_spark.pipeline import similarity as sim
+
+    df = spark.range(20).select(F.col("id").cast(dtype).alias("id"))
+    cands = [3, "5", 7, 19, 99]
+    small = sorted(r["id"] for r in sim.candidate_filter(df, cands).collect())
+    monkeypatch.setattr(sim, "LITERAL_CANDIDATE_BUDGET", 2)
+    out = sim.candidate_filter(df, cands)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert sorted(r["id"] for r in out.collect()) == small
+    assert len(small) == 4
+
+
+def test_assign_nearest_centroid_data_path_bit_exact(spark):
+    """The broadcast-row argmax equals driver-side references bit for
+    bit: ``rank_probes`` (same left-to-right folds, so the same cosine
+    doubles) for cosine, and a Python dot argmax for the normalized
+    form. Ties go to the lowest cluster index on every reference."""
+    import random
+
+    from dsgrid_spark.pipeline.similarity import (assign_nearest_centroid,
+                                                  rank_probes)
 
     rnd = random.Random(5)
     rows = [(i, [rnd.gauss(0, 1) for _ in range(16)]) for i in range(300)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = [[rnd.gauss(0, 1) for _ in range(16)] for _ in range(7)]
-    lit = assign_nearest_centroid(df, cents, strategy="literal") \
-        .select("vec_id", "__cluster").collect()
-    dat = assign_nearest_centroid(df, cents, strategy="data") \
-        .select("vec_id", "__cluster").collect()
-    assert sorted(map(tuple, lit)) == sorted(map(tuple, dat))
-    # normalized variant too (plain dot scoring)
-    litn = assign_nearest_centroid(df, cents, assume_normalized=True,
-                                   strategy="literal") \
-        .select("vec_id", "__cluster").collect()
-    datn = assign_nearest_centroid(df, cents, assume_normalized=True,
-                                   strategy="data") \
-        .select("vec_id", "__cluster").collect()
-    assert sorted(map(tuple, litn)) == sorted(map(tuple, datn))
+    got = dict(map(tuple, assign_nearest_centroid(df, cents)
+                   .select("vec_id", "__cluster").collect()))
+    assert got == {i: rank_probes(cents, v, 1)[0] for i, v in rows}
+    # normalized variant (plain dot scoring)
+    gotn = dict(map(tuple, assign_nearest_centroid(
+        df, cents, assume_normalized=True)
+        .select("vec_id", "__cluster").collect()))
+
+    def dot_argmax(v):
+        s = [sum(x * y for x, y in zip(v, c)) for c in cents]
+        return s.index(max(s))
+
+    assert gotn == {i: dot_argmax(v) for i, v in rows}
+
+
+@pytest.mark.parametrize("extra", [0, 697], ids=["3x3", "700x3"])
+def test_assign_nearest_centroid_edge_rows_independent_of_k(spark, extra):
+    """A vector of the wrong length (and, under ``assume_normalized``, a
+    NULL vector) scores NULL against every centroid and gets a NULL
+    cluster; an all-zero vector scores cosine 0.0 everywhere and gets
+    cluster 0. The answer does not depend on the codebook's size."""
+    import random
+
+    from dsgrid_spark.pipeline.similarity import assign_nearest_centroid
+
+    rnd = random.Random(3)
+    cents = ([[0.0, 0.0, 1.0], [1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+             + [[rnd.gauss(0, 1) for _ in range(3)] for _ in range(extra)])
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, None), (3, [0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>")
+
+    def clusters(normalized):
+        out = assign_nearest_centroid(df, cents,
+                                      assume_normalized=normalized)
+        assert out.columns == ["vec_id", "embedding", "__cluster"]
+        return dict(map(tuple, out.select("vec_id", "__cluster").collect()))
+
+    assert clusters(False) == {1: None, 2: 0, 3: 0}
+    assert clusters(True) == {1: None, 2: None, 3: 0}
 
 
 def test_assign_nearest_centroid_arrow_strategy_matches(spark):
-    """The opt-in numpy kernel agrees with the JVM strategies away from
+    """The opt-in numpy kernel agrees with the JVM path away from
     float ties, keeps the zero-vector cosine-0 convention, preserves
     passthrough columns, and is never auto-selected (oracled paths must
     stay on the bit-exact JVM fold)."""
@@ -523,11 +587,11 @@ def test_assign_nearest_centroid_arrow_strategy_matches(spark):
     df = spark.createDataFrame(rows,
                                "vec_id long, tag string, embedding array<double>")
     cents = [[rnd.gauss(0, 1) for _ in range(12)] for _ in range(6)]
-    dat = {r["vec_id"]: (r["__cluster"], r["tag"]) for r in
-           sim.assign_nearest_centroid(df, cents, strategy="data").collect()}
+    jvm = {r["vec_id"]: (r["__cluster"], r["tag"]) for r in
+           sim.assign_nearest_centroid(df, cents).collect()}
     arw = {r["vec_id"]: (r["__cluster"], r["tag"]) for r in
            sim.assign_nearest_centroid(df, cents, strategy="arrow").collect()}
-    assert dat == arw
+    assert jvm == arw
     # zero vector: every cosine is 0.0 -> lowest index on both paths
     assert arw[999][0] == 0
     # normalized variant agrees too
@@ -536,16 +600,18 @@ def test_assign_nearest_centroid_arrow_strategy_matches(spark):
     for c in cents:
         n = sum(x * x for x in c) ** 0.5
         ucents.append([x / n for x in c])
-    d2 = {r["vec_id"]: r["__cluster"] for r in sim.assign_nearest_centroid(
-        unit, ucents, assume_normalized=True, strategy="data").collect()}
+    j2 = {r["vec_id"]: r["__cluster"] for r in sim.assign_nearest_centroid(
+        unit, ucents, assume_normalized=True).collect()}
     a2 = {r["vec_id"]: r["__cluster"] for r in sim.assign_nearest_centroid(
         unit, ucents, assume_normalized=True, strategy="arrow").collect()}
-    assert d2 == a2
-    # auto never picks arrow: a big codebook goes to the data JOIN plan
+    assert j2 == a2
+    # auto never picks arrow: a big codebook goes to the broadcast JOIN
     big = [[float(i), 1.0] + [0.0] * 10 for i in range(2000)]
     plan = sim.assign_nearest_centroid(df, big, strategy="auto") \
         ._jdf.queryExecution().analyzed().toString()
-    assert "Join" in plan  # data strategy, not a mapInPandas node
+    assert "Join" in plan and "MapInPandas" not in plan
+    with pytest.raises(ValueError, match=r"auto\|arrow"):
+        sim.assign_nearest_centroid(df, cents, strategy="literal")
 
 
 def test_assign_nearest_centroid_tie_breaks_to_lowest_cluster(spark):
@@ -553,36 +619,44 @@ def test_assign_nearest_centroid_tie_breaks_to_lowest_cluster(spark):
 
     df = spark.createDataFrame([(0, [1.0, 0.0])],
                                "vec_id long, embedding array<double>")
-    # clusters 1 and 2 are the SAME vector -> identical score; both
-    # strategies must pick cluster 1 (lowest index among the tied max)
+    # clusters 1 and 2 are the SAME vector -> identical score; the
+    # argmax must pick cluster 1 (lowest index among the tied max), on
+    # both the cosine and the dot form
     cents = [[0.0, 1.0], [1.0, 0.0], [1.0, 0.0]]
-    for strategy in ("literal", "data"):
-        got = assign_nearest_centroid(df, cents, strategy=strategy).first()
-        assert got["__cluster"] == 1, strategy
+    for normalized in (False, True):
+        got = assign_nearest_centroid(df, cents,
+                                      assume_normalized=normalized).first()
+        assert got["__cluster"] == 1, normalized
 
 
-def test_assign_nearest_centroid_auto_switches_on_budget(spark):
+@pytest.mark.parametrize("k", [16, 1024])
+def test_fixed_matrix_kernels_plan_size_is_constant(spark, k):
+    """Every fixed-matrix kernel ships its matrix as one broadcast row,
+    so the analyzed plan stays small at any k x dim: no inlined
+    literal matrix (a literal 16x64 centroid ladder alone analyzed to
+    135k characters)."""
     from dsgrid_spark.pipeline import similarity as sim
 
-    df = spark.createDataFrame([(0, [1.0, 0.0])],
+    dim = 64
+    df = spark.createDataFrame([(0, [1.0] * dim)],
                                "vec_id long, embedding array<double>")
-    big_k = sim.LITERAL_CENTROID_BUDGET // 2 + 1  # k*dim just over budget
-    cents = [[float(i), 1.0] for i in range(big_k)]
-    plan = sim.assign_nearest_centroid(df, cents, strategy="auto") \
-        ._jdf.queryExecution().analyzed().toString()
-    # auto at k*dim > budget must be the broadcast-data plan (a join),
-    # not an inlined literal matrix
-    assert "Join" in plan
-    small = sim.assign_nearest_centroid(df, cents[:3], strategy="auto") \
-        ._jdf.queryExecution().analyzed().toString()
-    assert "Join" not in small
+    cents = [[float(i + j) for j in range(dim)] for i in range(k)]
+    kernels = {
+        "assign": sim.assign_nearest_centroid(df, cents),
+        "project": sim.random_projection(df, dim=dim, out_dim=k),
+        "bucket": sim.add_lsh_bucket(df, dim=dim, n_planes=k),
+        "probes": sim.lsh_probe_buckets(df, dim=dim, n_planes=k,
+                                        n_probes=2),
+    }
+    for name, out in kernels.items():
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert "Join" in plan and len(plan) < 30_000, (name, len(plan))
 
 
 def test_random_projection_data_path_bit_exact(spark):
-    """The broadcast-matrix projection must equal the literal-matrix
-    projection bit-for-bit (same per-element fold order) — it is the
-    auto path above LITERAL_CENTROID_BUDGET, where a 1536x64 sign
-    matrix would otherwise be 98k plan literals."""
+    """The broadcast-matrix projection equals a Python left-to-right
+    fold over the same md5 sign matrix bit for bit, and leaks no
+    helper column."""
     import random
 
     from dsgrid_spark.pipeline import similarity as sim
@@ -590,24 +664,20 @@ def test_random_projection_data_path_bit_exact(spark):
     rnd = random.Random(13)
     rows = [(i, [rnd.gauss(0, 1) for _ in range(16)]) for i in range(80)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    lit = {r["vec_id"]: list(r["projected"]) for r in sim.random_projection(
-        df, dim=16, out_dim=6, strategy="literal").collect()}
-    dat = {r["vec_id"]: list(r["projected"]) for r in sim.random_projection(
-        df, dim=16, out_dim=6, strategy="data").collect()}
-    assert lit == dat  # exact float equality, not approx
-    # data plan carries no sign literals and stays O(1) in the matrix
-    big = sim.random_projection(df, dim=16, out_dim=200, strategy="auto")
-    plan = big._jdf.queryExecution().analyzed().toString()
-    assert "Join" in plan and len(plan) < 30_000
-    # output schema is clean: no helper columns leak
-    assert "__rp_mat" not in big.columns
+    out = sim.random_projection(df, dim=16, out_dim=6)
+    got = {r["vec_id"]: list(r["projected"]) for r in out.collect()}
+    signs = sim.projection_signs(16, 6, "rp")
+    want = {i: [sum(x * s for x, s in zip(v, row)) for row in signs]
+            for i, v in rows}
+    assert got == want  # exact float equality, not approx
+    assert out.columns == ["vec_id", "embedding", "projected"]
 
 
 def test_lsh_bucket_and_probes_data_path_bit_exact(spark):
-    """LSH bucket ids and multi-probe fan-out are strategy-invariant:
-    the broadcast-plane path must reproduce the literal path exactly
-    (bucket ids are integer bit-sums; probe order follows the same
-    margin sort)."""
+    """LSH bucket ids equal the Python bit sums over the same seeded
+    hyperplanes, and the multi-probe fan-out flips the bits of the
+    planes with the smallest |margin|, in that order; no helper column
+    leaks."""
     import random
 
     from dsgrid_spark.pipeline import similarity as sim
@@ -615,19 +685,26 @@ def test_lsh_bucket_and_probes_data_path_bit_exact(spark):
     rnd = random.Random(17)
     rows = [(i, [rnd.gauss(0, 1) for _ in range(12)]) for i in range(100)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    lit = {r["vec_id"]: r["bucket"] for r in sim.add_lsh_bucket(
-        df, dim=12, n_planes=10, strategy="literal").collect()}
-    dat = {r["vec_id"]: r["bucket"] for r in sim.add_lsh_bucket(
-        df, dim=12, n_planes=10, strategy="data").collect()}
-    assert lit == dat
-    plit = sorted((r["vec_id"], r["bucket"]) for r in sim.lsh_probe_buckets(
-        df, dim=12, n_planes=10, n_probes=3, strategy="literal").collect())
-    pdat = sorted((r["vec_id"], r["bucket"]) for r in sim.lsh_probe_buckets(
-        df, dim=12, n_planes=10, n_probes=3, strategy="data").collect())
-    assert plit == pdat
-    out = sim.lsh_probe_buckets(df, dim=12, n_planes=10, n_probes=2,
-                                strategy="data")
-    assert "__probe_mat" not in out.columns and "__b0" not in out.columns
+    planes = sim._hyperplanes(12, 10, 7)
+
+    def dots(v):
+        return [sum(x * p for x, p in zip(v, plane)) for plane in planes]
+
+    def bucket(v):
+        return sum(1 << i for i, d in enumerate(dots(v)) if d > 0)
+
+    got = {r["vec_id"]: r["bucket"] for r in sim.add_lsh_bucket(
+        df, dim=12, n_planes=10).collect()}
+    assert got == {i: bucket(v) for i, v in rows}
+    out = sim.lsh_probe_buckets(df, dim=12, n_planes=10, n_probes=3)
+    want = []
+    for i, v in rows:
+        b = bucket(v)
+        order = sorted(range(10), key=lambda j: (abs(dots(v)[j]), j))
+        want += [(i, b)] + [(i, b ^ (1 << j)) for j in order[:2]]
+    assert sorted((r["vec_id"], r["bucket"]) for r in out.collect()) == \
+        sorted(want)
+    assert out.columns == ["vec_id", "embedding", "bucket"]
 
 
 def test_stratified_sample_targets_and_determinism(spark):
