@@ -8,14 +8,26 @@ a fraction of the code, and no string evaluation.
 Semantics (dsgrid/dataset/dataset_expression_handler.py:17-68):
 - ``|`` (union): column-identical union — the default combine.
 - ``+ - * / % **``: full-dimension equi-join of the two tables,
-  arithmetic on the value columns, with row-count guards against silent
-  key mismatch.
+  arithmetic on the value columns.
 - ``== != < <= > >=``: same join; the value columns become 1.0/0.0
   masks — composable as ``a * (a > b)`` for thresholded selection.
 - ``and`` / ``or``: join; masks of "both/either value nonzero".
 - ``a in b``: dimension semi-join — keep rows of ``a`` whose dimension
   key combination exists in ``b``.
 - unary ``-``: negate the value columns.
+
+Frames with no dimension column (a grand total) have one, empty, key:
+their joins are cross joins.
+
+Alignment audit: the reference ``DatasetExpressionHandler._op`` raises
+when an arithmetic join changes the row count. An arithmetic *region*
+is a maximal arithmetic, comparison or ``and``/``or`` subtree (a unary
+minus belongs to the region it sits in). Its *operands* are the frames
+of its other children: dataset leaves, ``|`` results and ``in``
+results. Every join inside a region keeps the row count exactly when
+all of its operands hold the same dimension keys, each once and none
+NULL, so one check of the operands covers every node of the region.
+Regions are independent: ``(a-b)|(c-d)`` stacks two key sets.
 """
 
 from __future__ import annotations
@@ -33,60 +45,56 @@ class DatasetExpressionError(ValueError):
     pass
 
 
+_REGION_OPS = {
+    ast.Add: "+", ast.Sub: "-", ast.Mult: "*", ast.Div: "/", ast.Mod: "%",
+    ast.Pow: "**", ast.Eq: "==", ast.NotEq: "!=", ast.Lt: "<",
+    ast.LtE: "<=", ast.Gt: ">", ast.GtE: ">=", ast.And: "and",
+    ast.Or: "or",
+}
+
+
+def _region_op(node: ast.AST) -> tuple[str, list[ast.AST]] | None:
+    """(operator, children) of an arithmetic-region node, else None."""
+    if isinstance(node, ast.BinOp):
+        op, children = node.op, [node.left, node.right]
+    elif isinstance(node, ast.Compare):
+        op, children = node.ops[0], [node.left, *node.comparators]
+    elif isinstance(node, ast.BoolOp):
+        op, children = node.op, node.values
+    else:
+        return None
+    sym = _REGION_OPS.get(type(op))
+    return (sym, children) if sym else None
+
+
 def _null_key(dim_cols) -> Column:
-    """True for a dimension key with a NULL in any column: the audits'
+    """True for a dimension key with a NULL in any column: the audit's
     group-by keeps such a key, but the inner equi-join never matches
-    it, so it counts as missing."""
+    it, so it counts as missing. The empty key is never NULL."""
+    if not dim_cols:
+        return F.lit(False)
     return reduce(operator.or_, [F.col(c).isNull() for c in dim_cols])
 
 
-def _combine_arith(left: DataFrame, right: DataFrame, op: str,
-                   value_columns: list[str],
-                   check_counts: bool = True) -> DataFrame:
-    dim_cols = [c for c in left.columns if c not in value_columns]
+def _dim_columns(left: DataFrame, right: DataFrame,
+                 value_columns: list[str]) -> list[str]:
+    """The dimension columns two operands share; raises, before any
+    Spark action, when their column sets differ."""
     if set(left.columns) != set(right.columns):
         raise DatasetExpressionError(
             f"datasets have different columns: {left.columns} vs {right.columns}"
         )
+    return [c for c in left.columns if c not in value_columns]
+
+
+def _combine_arith(left: DataFrame, right: DataFrame, op: str,
+                   value_columns: list[str]) -> DataFrame:
+    dim_cols = _dim_columns(left, right, value_columns)
     renamed = right
     for v in value_columns:
         renamed = renamed.withColumnRenamed(v, f"__other_{v}")
-    joined = left.join(renamed, dim_cols, "inner")
-    if check_counts:
-        # reference DatasetExpressionHandler._op raises DSGInvalidOperation
-        # when input lengths differ or the join changes the row count.
-        # One action instead of three counts (VERDICT r3 item): union the
-        # dim-key columns of both sides with a side marker and read
-        # (n_left, n_right, any non-1:1 key) off a single aggregate — the
-        # scan is column-pruned to the dimension keys, and a key that is
-        # missing or duplicated on either side is exactly what makes the
-        # inner join change the row count. check_counts=False skips.
-        tag = (
-            left.select(*dim_cols).withColumn("__l", F.lit(1))
-            .withColumn("__r", F.lit(0))
-            .unionByName(
-                right.select(*dim_cols).withColumn("__l", F.lit(0))
-                .withColumn("__r", F.lit(1)))
-            .groupBy(*dim_cols)
-            .agg(F.sum("__l").alias("__nl"), F.sum("__r").alias("__nr"))
-        )
-        audit = tag.agg(
-            F.sum("__nl").alias("n_left"),
-            F.sum("__nr").alias("n_right"),
-            F.sum(((F.col("__nl") != 1) | (F.col("__nr") != 1)
-                   | _null_key(dim_cols)).cast("int")).alias("bad_keys"),
-        ).collect()[0]
-        if audit["n_left"] != audit["n_right"]:
-            raise DatasetExpressionError(
-                f"dataset row counts differ for {op!r}: "
-                f"{audit['n_left']} vs {audit['n_right']}"
-            )
-        if audit["bad_keys"]:
-            raise DatasetExpressionError(
-                f"{op!r} join changed row count: {audit['bad_keys']} dimension "
-                "keys are missing, NULL or duplicated on one side "
-                "(misaligned or duplicated dimension keys)"
-            )
+    # ``on=None`` joins the empty key: a cross join
+    joined = left.join(renamed, dim_cols or None, "inner")
     for v in value_columns:
         lc, rc = F.col(v), F.col(f"__other_{v}")
         expr = {
@@ -105,153 +113,72 @@ def _combine_arith(left: DataFrame, right: DataFrame, op: str,
 def _combine_in(left: DataFrame, right: DataFrame,
                 value_columns: list[str]) -> DataFrame:
     """``a in b``: keep rows of ``a`` whose dimension keys exist in ``b``."""
-    dim_cols = [c for c in left.columns if c not in value_columns]
-    if set(left.columns) != set(right.columns):
-        raise DatasetExpressionError(
-            f"datasets have different columns: {left.columns} vs {right.columns}"
-        )
-    return left.join(right.select(*dim_cols).distinct(), dim_cols, "left_semi")
+    dim_cols = _dim_columns(left, right, value_columns)
+    return left.join(right.select(*dim_cols).distinct(), dim_cols or None,
+                     "left_semi")
 
 
-def _combine_union(left: DataFrame, right: DataFrame) -> DataFrame:
-    if set(left.columns) != set(right.columns):
-        raise DatasetExpressionError(
-            f"union requires identical columns: {left.columns} vs {right.columns}"
-        )
+def _combine_union(left: DataFrame, right: DataFrame,
+                   value_columns: list[str]) -> DataFrame:
+    _dim_columns(left, right, value_columns)
     return left.unionByName(right)
 
 
-def _leaf_names(node: ast.AST) -> set[str]:
-    """Leaf dataset names reachable through alignment-PRESERVING edges
-    (arith/compare/bool/unary-minus). Union and ``in`` change the key
-    multiset, so they break the chain and contribute nothing."""
-    if isinstance(node, ast.Name):
-        return {node.id}
-    if isinstance(node, ast.UnaryOp) and isinstance(node.op, ast.USub):
-        return _leaf_names(node.operand)
-    if isinstance(node, ast.BinOp) and not isinstance(node.op, ast.BitOr):
-        return _leaf_names(node.left) | _leaf_names(node.right)
-    if (isinstance(node, ast.Compare) and len(node.ops) == 1
-            and not isinstance(node.ops[0], ast.In)):
-        return _leaf_names(node.left) | _leaf_names(node.comparators[0])
-    if isinstance(node, ast.BoolOp):
-        out: set[str] = set()
-        for v in node.values:
-            out |= _leaf_names(v)
-        return out
-    return set()
+def _audit(regions: list[list[tuple[str, DataFrame]]],
+           value_columns: list[str]) -> None:
+    """Raise unless the operands of each region hold the same dimension
+    keys, each once and none NULL.
 
-
-def _arith_components(tree: ast.AST, known: set[str]) -> list[set[str]]:
-    """Leaf-name sets of the maximal alignment-preserving regions.
-
-    A region is a maximal subtree connected through arith/compare/bool
-    edges; union and ``in`` break regions apart, so the operands of a
-    union node start regions of their own. Frames inside ONE region must
-    be mutually 1:1-aligned for the arithmetic to succeed (the reference
-    DatasetExpressionHandler._op raises per operation otherwise); frames
-    in DIFFERENT regions carry no mutual constraint — ``(a-b)|(c-d)``
-    legitimately stacks two independently-aligned key sets.
+    Regions sharing a dimension-column signature (normally all of them)
+    are checked by ONE Spark action: union the key columns of every
+    operand tagged (region, operand index), count per (region, key,
+    operand), and read per-region totals and any non-1:1 key off one
+    per-region aggregate (one collected row per region). The scan is
+    column-pruned to the dimension keys.
     """
-    preserving = (
-        lambda n: (isinstance(n, ast.BinOp) and not isinstance(n.op, ast.BitOr))
-        or (isinstance(n, ast.Compare) and len(n.ops) == 1
-            and not isinstance(n.ops[0], ast.In))
-        or isinstance(n, ast.BoolOp)
-    )
-    components: list[set[str]] = []
+    by_sig: dict[tuple[str, ...], list[int]] = {}
+    for ri, operands in enumerate(regions):
+        cols = operands[0][1].columns
+        by_sig.setdefault(tuple(c for c in cols if c not in value_columns),
+                          []).append(ri)
 
-    def walk(node: ast.AST, in_region: bool) -> None:
-        if isinstance(node, ast.Expression):
-            walk(node.body, False)
-            return
-        if preserving(node) and not in_region:
-            leaves = _leaf_names(node) & known
-            if leaves:
-                components.append(leaves)
-            in_region = True
-        elif isinstance(node, (ast.Name, ast.Constant)):
-            return
-        elif not preserving(node) and not isinstance(node, ast.UnaryOp):
-            in_region = False  # union / ``in`` operands start fresh regions
-        for child in ast.iter_child_nodes(node):
-            walk(child, in_region)
-
-    walk(tree, False)
-    return components
-
-
-def _audit_components(components: list[dict[str, DataFrame]],
-                      value_columns: list[str]) -> set[str]:
-    """Verify each component's frames are mutually 1:1 over the SAME
-    dimension-key set, batching components that share a dim-column
-    signature into ONE Spark action (normally all of them): union the
-    key columns of every frame tagged (component, local source index),
-    count per (component, key, source), and read per-component totals +
-    any non-1:1 key off a single per-component aggregate (collects one
-    row per component — tiny). Replaces a guard action per expression
-    node — a tree of k operators costs one audit job instead of k.
-
-    Returns the names verified aligned-within-their-component; a name in
-    any skipped component (columns disagree inside the component — the
-    node-level column check owns that error; or no dim columns) is
-    excluded so callers fall back to per-node guards for it. Raises the
-    reference's guard errors on genuine misalignment.
-    """
-    by_sig: dict[tuple[str, ...], list[tuple[int, list[str]]]] = {}
-    skipped: set[str] = set()
-    for ci, frames in enumerate(components):
-        names = sorted(frames)
-        cols = set(frames[names[0]].columns)
-        dim_cols = tuple(c for c in frames[names[0]].columns
-                         if c not in value_columns)
-        if any(set(frames[n].columns) != cols for n in names[1:]) or not dim_cols:
-            skipped |= set(names)
-            continue
-        by_sig.setdefault(dim_cols, []).append((ci, names))
-
-    verified: set[str] = set()
     for dim_cols, group in by_sig.items():
-        tagged = None
-        kmax = max(len(names) for _, names in group)
-        for ci, names in group:
-            for i, n in enumerate(names):
-                t = (components[ci][n].select(*dim_cols)
-                     .withColumn("__comp", F.lit(ci))
-                     .withColumn("__src", F.lit(i)))
-                tagged = t if tagged is None else tagged.unionByName(t)
+        kmax = max(len(regions[ri]) for ri in group)
+        tagged = reduce(lambda a, b: a.unionByName(b), [
+            frame.select(*dim_cols).withColumn("__comp", F.lit(ri))
+            .withColumn("__src", F.lit(i))
+            for ri in group for i, (_, frame) in enumerate(regions[ri])
+        ])
         per_key = tagged.groupBy("__comp", *dim_cols).agg(*[
             F.sum((F.col("__src") == i).cast("int")).alias(f"__n{i}")
             for i in range(kmax)
         ])
-        # sources >= a component's size contribute 0 rows everywhere,
-        # so flag only duplicates and NULL keys here; per-source zero
-        # counts (keys missing from a live source) are read separately
-        # below.
+        # operands past a region's own count contribute 0 rows
+        # everywhere, so flag only duplicates and NULL keys here; keys
+        # missing from a live operand are read from the zero counts
         bad = reduce(operator.or_,
                      [F.col(f"__n{i}") > 1 for i in range(kmax)],
                      _null_key(dim_cols))
-        audit_rows = per_key.groupBy("__comp").agg(
+        rows = per_key.groupBy("__comp").agg(
             *[F.sum(f"__n{i}").alias(f"__t{i}") for i in range(kmax)],
             *[F.sum((F.col(f"__n{i}") == 0).cast("int")).alias(f"__z{i}")
               for i in range(kmax)],
             F.sum(bad.cast("int")).alias("__dup"),
         ).collect()
-        by_comp = {r["__comp"]: r for r in audit_rows}
-        for ci, names in group:
-            k = len(names)
-            row = by_comp.get(ci)
-            if row is None:  # all frames empty: trivially aligned
-                verified |= set(names)
+        by_region = {r["__comp"]: r for r in rows}
+        for ri in group:
+            row = by_region.get(ri)
+            if row is None:  # every operand is empty
                 continue
-            totals = [row[f"__t{i}"] or 0 for i in range(k)]
-            for i in range(1, k):
+            names = [label for label, _ in regions[ri]]
+            totals = [row[f"__t{i}"] or 0 for i in range(len(names))]
+            for i in range(1, len(names)):
                 if totals[i] != totals[0]:
                     raise DatasetExpressionError(
                         f"dataset row counts differ for {names[0]!r} vs "
                         f"{names[i]!r}: {totals[0]} vs {totals[i]}"
                     )
-            missing = sum(row[f"__z{i}"] or 0 for i in range(k))
+            missing = sum(row[f"__z{i}"] or 0 for i in range(len(names)))
             if row["__dup"] or missing:
                 raise DatasetExpressionError(
                     "expression join changed row count: "
@@ -259,8 +186,6 @@ def _audit_components(components: list[dict[str, DataFrame]],
                     f"NULL or duplicated across datasets {names} "
                     "(misaligned or duplicated dimension keys)"
                 )
-            verified |= set(names)
-    return verified - skipped
 
 
 def evaluate_expression(expression: str, datasets: dict[str, DataFrame],
@@ -268,17 +193,14 @@ def evaluate_expression(expression: str, datasets: dict[str, DataFrame],
                         check_counts: bool = True) -> DataFrame:
     """Evaluate a dataset arithmetic expression over named DataFrames.
 
-    Guard strategy (reference DatasetExpressionHandler._op semantics at a
-    fraction of the jobs): the leaf datasets of each maximal
-    alignment-preserving region (arith/compare/bool subtree; union and
-    ``in`` break regions) are verified mutually 1:1-aligned in ONE
-    up-front audit action; inner joins of aligned frames preserve the key
-    set, so every arithmetic node inside a region inherits the
-    verification and skips its own guard. Regions are audited
-    INDEPENDENTLY — ``(a-b)|(c-d)`` stacking disjoint key sets is valid.
-    Only operands derived through union or ``in`` (which legitimately
-    change the key multiset) re-guard at the node. ``check_counts=False``
-    skips every guard (silent inner-join semantics for scale).
+    Two steps. First the lazy frames are built with no Spark action;
+    column mismatches and unsupported syntax raise here. Each arithmetic
+    region records its operand frames (a frame used twice counts once)
+    as it is built. Then one audit (:func:`_audit`) checks every region
+    at once, normally in one action, and raises the reference's errors:
+    "row counts differ" and "changed row count" for keys that are
+    missing, NULL or duplicated. ``check_counts=False`` skips the audit
+    (silent inner-join semantics, for scale) and runs no action at all.
     """
     value_columns = value_columns or [VALUE_COLUMN]
     try:
@@ -286,73 +208,50 @@ def evaluate_expression(expression: str, datasets: dict[str, DataFrame],
     except SyntaxError as e:
         raise DatasetExpressionError(f"invalid expression {expression!r}: {e}") from e
 
-    verified: set[str] = set()
-    if check_counts:
-        components = _arith_components(tree, set(datasets))
-        if components:
-            verified = _audit_components(
-                [{n: datasets[n] for n in comp} for comp in components],
-                value_columns,
-            )
+    regions: list[list[tuple[str, DataFrame]]] = []
 
-    def ev(node: ast.AST) -> tuple[DataFrame, bool]:
-        """Returns (frame, aligned): aligned means provably 1:1 over the
-        audited global key set, so arith over two aligned frames needs no
-        per-node guard."""
-        if isinstance(node, ast.Expression):
-            return ev(node.body)
+    def ev(node: ast.AST, region: list | None) -> DataFrame:
+        """Frame of ``node``; ``region`` collects the operands of the
+        region ``node`` sits in, None outside every region."""
+        if isinstance(node, ast.Compare) and len(node.ops) != 1:
+            raise DatasetExpressionError(
+                f"chained comparisons unsupported in {expression!r}"
+            )
+        if isinstance(node, ast.UnaryOp) and isinstance(node.op, ast.USub):
+            inner = ev(node.operand, region)
+            return inner.withColumns({v: -F.col(v) for v in value_columns})
+        arith = _region_op(node)
+        if arith:
+            if region is None:
+                region = []
+                regions.append(region)
+            sym, children = arith
+            return reduce(
+                lambda left, right: _combine_arith(left, right, sym,
+                                                   value_columns),
+                [ev(c, region) for c in children])
         if isinstance(node, ast.Name):
             if node.id not in datasets:
                 raise DatasetExpressionError(f"unknown dataset {node.id!r}")
-            return datasets[node.id], node.id in verified
-        if isinstance(node, ast.BinOp):
-            (left, la), (right, ra) = ev(node.left), ev(node.right)
-            if isinstance(node.op, ast.BitOr):
-                return _combine_union(left, right), False
-            ops = {ast.Add: "+", ast.Sub: "-", ast.Mult: "*", ast.Div: "/",
-                   ast.Mod: "%", ast.Pow: "**"}
-            for t, sym in ops.items():
-                if isinstance(node.op, t):
-                    skip = la and ra
-                    out = _combine_arith(left, right, sym, value_columns,
-                                         check_counts=check_counts and not skip)
-                    return out, skip or ((la or ra) and check_counts)
-        if isinstance(node, ast.Compare):
-            if len(node.ops) != 1 or len(node.comparators) != 1:
-                raise DatasetExpressionError(
-                    f"chained comparisons unsupported in {expression!r}"
-                )
-            (left, la), (right, ra) = ev(node.left), ev(node.comparators[0])
-            if isinstance(node.ops[0], ast.In):
-                return _combine_in(left, right, value_columns), False
-            cmps = {ast.Eq: "==", ast.NotEq: "!=", ast.Lt: "<",
-                    ast.LtE: "<=", ast.Gt: ">", ast.GtE: ">="}
-            for t, sym in cmps.items():
-                if isinstance(node.ops[0], t):
-                    skip = la and ra
-                    out = _combine_arith(left, right, sym, value_columns,
-                                         check_counts=check_counts and not skip)
-                    return out, skip or ((la or ra) and check_counts)
-        if isinstance(node, ast.BoolOp):
-            sym = "and" if isinstance(node.op, ast.And) else "or"
-            acc, aa = ev(node.values[0])
-            for nxt in node.values[1:]:
-                nxt_df, na = ev(nxt)
-                skip = aa and na
-                acc = _combine_arith(acc, nxt_df, sym, value_columns,
-                                     check_counts=check_counts and not skip)
-                aa = skip or ((aa or na) and check_counts)
-            return acc, aa
-        if isinstance(node, ast.UnaryOp) and isinstance(node.op, ast.USub):
-            inner, ia = ev(node.operand)
-            for v in value_columns:
-                inner = inner.withColumn(v, -F.col(v))
-            return inner, ia
-        raise DatasetExpressionError(
-            f"unsupported syntax in {expression!r}: {ast.dump(node)}"
-        )
+            frame = datasets[node.id]
+        elif isinstance(node, ast.BinOp) and isinstance(node.op, ast.BitOr):
+            frame = _combine_union(ev(node.left, None), ev(node.right, None),
+                                   value_columns)
+        elif isinstance(node, ast.Compare) and isinstance(node.ops[0], ast.In):
+            frame = _combine_in(ev(node.left, None),
+                                ev(node.comparators[0], None), value_columns)
+        else:
+            raise DatasetExpressionError(
+                f"unsupported syntax in {expression!r}: {ast.dump(node)}"
+            )
+        if region is not None and all(f is not frame for _, f in region):
+            region.append((ast.unparse(node), frame))
+        return frame
 
-    return ev(tree)[0]
+    out = ev(tree.body, None)
+    if check_counts:
+        _audit(regions, value_columns)
+    return out
 
 
 def is_union(expression: str) -> bool:

@@ -671,9 +671,11 @@ def _kmeans_parallel_seeds(fit_df: DataFrame, k: int, vector_column: str,
     import numpy as np  # noqa: F401  (parity with the pp seeder's deps)
 
     l = oversample or 2 * k
+    v = F.col(vector_column)
+    # a NULL vector has no direction: it is never a candidate
+    fit_df = fit_df.where(v.isNotNull())
     # first center: deterministic content-hash argmin — no collect of a
     # pool, independent of partition layout
-    v = F.col(vector_column)
     first = (fit_df.select(v.alias("__v"))
              .agg(F.min_by("__v", F.xxhash64(F.col("__v"))).alias("c"))
              .collect()[0]["c"])
@@ -816,11 +818,15 @@ def kmeans_centroids(df: DataFrame, n_clusters: int, dim: int,
     # which on sorted/clustered data yields unrepresentative seeds
     n_pool = max(n_clusters * 20, 200)
     fraction = min(1.0, (n_pool * 2.0) / max(total, 1))
-    pool = fit_df.select(vector_column).sample(fraction=fraction, seed=seed)
+    # NULL vectors are dropped AFTER the draw, so a NULL-free corpus
+    # draws the same pool whether or not the filter is there
+    pool = (fit_df.select(vector_column).sample(fraction=fraction, seed=seed)
+            .where(v.isNotNull()))
     sample = [list(r[vector_column]) for r in pool.limit(n_pool).collect()]
     if len(sample) < n_clusters:  # tiny corpus: fall back to everything
         sample = [list(r[vector_column])
-                  for r in fit_df.select(vector_column).limit(n_pool).collect()]
+                  for r in fit_df.select(vector_column).where(v.isNotNull())
+                  .limit(n_pool).collect()]
     if init == "kmeanspp":
         centroids = _kmeanspp_seeds(sample, n_clusters, rnd)
     elif init == "sample":

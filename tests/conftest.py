@@ -44,6 +44,21 @@ def value_fn(i_hour, county, metric, sector_sub, scenario, model_year):
     return round(base * mult * growth, 6)
 
 
+def plan_jobs(spark, build) -> int:
+    """Spark jobs launched while ``build()`` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan construction")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dsgrid_spark.session import get_spark

@@ -18,6 +18,8 @@ from dsgrid_spark.operators.reshape import pivot, unpivot
 from dsgrid_spark.operators.setops import symmetric_difference, union_checked
 from dsgrid_spark.operators.units import conversion_factor, convert_units
 
+from .conftest import plan_jobs
+
 
 def test_percentiles_per_group(spark):
     from dsgrid_spark.operators.aggregation import percentiles_per_group
@@ -418,6 +420,46 @@ def test_expression_union_of_independent_arith_branches(spark):
     # its own region and is audited there
     with pytest.raises(DatasetExpressionError, match="row counts differ"):
         evaluate_expression("a | (c - b)", {"a": a, "b": b, "c": c})
+
+
+def test_expression_audit_is_one_action(spark):
+    """Operands from ``|`` join their region's one audit: a tree with a
+    union under its arithmetic launches no more jobs than ``x - y``, and
+    ``check_counts=False`` launches none."""
+    def mk(rows):
+        return spark.createDataFrame(rows, "k string, value double")
+
+    ds = {"x": mk([("a", 1.0), ("b", 2.0)]), "y": mk([("a", 3.0), ("b", 4.0)]),
+          "z": mk([("c", 5.0)]),
+          "w": mk([("a", 1.0), ("b", 1.0), ("c", 2.0)])}
+    pair = plan_jobs(spark, lambda: evaluate_expression("x - y", ds))
+    nested = plan_jobs(spark, lambda: evaluate_expression(
+        "((x | z) - w) * w", ds))
+    assert 0 < nested <= pair
+    assert plan_jobs(spark, lambda: evaluate_expression(
+        "((x | z) - w) * w", ds, check_counts=False)) == 0
+    got = {r["k"]: r["value"] for r in evaluate_expression(
+        "((x | z) - w) * w", ds).collect()}
+    assert got == {"a": 0.0, "b": 1.0, "c": 6.0}
+
+
+def test_expression_without_dimension_columns(spark):
+    """Frames with no dimension column have one, empty, key: one row on
+    each side combines through a cross join, and any other counts are
+    misaligned."""
+    one_a = spark.createDataFrame([(10.0,)], "value double")
+    one_b = spark.createDataFrame([(4.0,)], "value double")
+    two = spark.createDataFrame([(1.0,), (2.0,)], "value double")
+    ds = {"a": one_a, "b": one_b, "two": two}
+    for check in (True, False):
+        got = evaluate_expression("a - b", ds, check_counts=check).collect()
+        assert [r["value"] for r in got] == [6.0]
+    assert [r["value"] for r in evaluate_expression(
+        "a in b", ds).collect()] == [10.0]
+    with pytest.raises(DatasetExpressionError, match="row counts differ"):
+        evaluate_expression("a - two", ds)
+    with pytest.raises(DatasetExpressionError, match="changed row count"):
+        evaluate_expression("two * two", ds)
 
 
 def test_restore_expected_missing_after_mapping_adds_columns(spark):

@@ -496,6 +496,21 @@ def test_kmeans_rejects_wrong_dim_rows(spark):
         kmeans_centroids(df.filter("vec_id < 300"), 3, 5, iterations=2)
 
 
+@pytest.mark.parametrize("init", ["sample", "kmeanspp", "parallel"])
+def test_kmeans_skips_null_vectors(spark, init):
+    """A NULL vector is never a seed: every init draws its seeds from
+    the non-NULL rows, and the fit returns k full-dim centroids."""
+    import random
+
+    rnd = random.Random(5)
+    rows = [(i, [rnd.gauss(0, 1) for _ in range(4)]) for i in range(50)]
+    df = spark.createDataFrame(rows + [(50, None)],
+                               "vec_id long, embedding array<double>")
+    cents = kmeans_centroids(df, 3, 4, iterations=1, seed=5, init=init)
+    assert len(cents) == 3
+    assert all(len(c) == 4 and None not in c for c in cents), cents
+
+
 @pytest.mark.parametrize("dtype", ["long", "string"])
 def test_candidate_filter_over_budget_ships_typed_ids(spark, monkeypatch,
                                                       dtype):

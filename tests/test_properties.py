@@ -438,6 +438,91 @@ def test_shuffle_corpus_is_permutation(spark, n_shards):
         assert sorted(positions) == list(range(len(positions)))
 
 
+_ARITH = {"+": lambda x, y: x + y, "-": lambda x, y: x - y,
+          "*": lambda x, y: x * y}
+_KEYS = ["x", "y", "z"]
+
+
+def _render(tree) -> str:
+    if isinstance(tree, str):
+        return tree
+    op, left, right = tree
+    return f"({_render(left)} {op} {_render(right)})"
+
+
+def _expr_model(tree, frames):
+    """(rows, aligned) of ``tree`` in plain Python. Arithmetic
+    inner-joins on the key, where a NULL key never matches; ``aligned``
+    is False when the operands of some arithmetic region do not all
+    hold the same keys, each once and none NULL."""
+    aligned = True
+
+    def ev(t, region):
+        nonlocal aligned
+        if isinstance(t, str):
+            rows = frames[t]
+        elif t[0] in _ARITH:
+            operands = [] if region is None else region
+            left, right = ev(t[1], operands), ev(t[2], operands)
+            if region is None:
+                keysets = [[k for k, _ in rows] for rows in operands]
+                aligned &= all(
+                    None not in ks and len(set(ks)) == len(ks)
+                    and set(ks) == set(keysets[0]) for ks in keysets)
+            return [(k, _ARITH[t[0]](x, y)) for k, x in left
+                    for k2, y in right if k is not None and k == k2]
+        else:
+            left, right = ev(t[1], None), ev(t[2], None)
+            if t[0] == "|":
+                rows = left + right
+            else:
+                keep = {k for k, _ in right}
+                rows = [(k, x) for k, x in left
+                        if k is not None and k in keep]
+        if region is not None:
+            region.append(rows)
+        return rows
+
+    rows = ev(tree, None)
+    return rows, aligned
+
+
+@given(
+    tree=st.recursive(
+        st.sampled_from(["a", "b", "c"]),
+        lambda kids: st.tuples(st.sampled_from(["+", "-", "*", "|", "in"]),
+                               kids, kids),
+        max_leaves=5),
+    keys=st.fixed_dictionaries({n: st.one_of(
+        st.just(_KEYS),
+        st.lists(st.sampled_from([*_KEYS, None]), max_size=4),
+    ) for n in "abc"}),
+)
+@SETTINGS
+def test_expression_guard_matches_python_model(spark, tree, keys):
+    """Every arithmetic join is covered by its region's audit: an
+    expression raises exactly when some region's operands are not 1:1
+    on their keys, and otherwise equals the plain-Python evaluation."""
+    from collections import Counter
+
+    from dsgrid_spark.operators.expressions import (
+        DatasetExpressionError, evaluate_expression,
+    )
+
+    frames = {n: [(k, float(10 * j + i + 1)) for i, k in enumerate(keys[n])]
+              for j, n in enumerate("abc")}
+    ds = {n: spark.createDataFrame(rows, "k string, value double")
+          for n, rows in frames.items()}
+    want, aligned = _expr_model(tree, frames)
+    try:
+        got = evaluate_expression(_render(tree), ds).collect()
+    except DatasetExpressionError:
+        assert not aligned, _render(tree)
+        return
+    assert aligned, _render(tree)
+    assert Counter((r["k"], r["value"]) for r in got) == Counter(want)
+
+
 @given(st.data())
 @settings(max_examples=200, deadline=None)
 def test_retired_fixpoint_algebra(data):

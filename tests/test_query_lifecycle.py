@@ -26,6 +26,8 @@ from dsgrid_spark.query.models import (
 from dsgrid_spark.query.submitter import QuerySubmitter
 from dsgrid_spark.sources.catalog import Catalog
 
+from .conftest import plan_jobs
+
 
 @pytest.fixture()
 def catalog(spark, load_onetable, county_to_state, geography_records, metric_records):
@@ -471,6 +473,26 @@ def test_aggregate_each_dataset_keeps_datasets_separate(spark):
     assert rows == [2.0, 10.0]
 
 
+def test_aggregate_each_dataset_grand_total_difference(spark):
+    """A grand-total aggregation leaves no dimension column; ``a - b``
+    over the two one-row totals is their difference."""
+    cat = Catalog(spark)
+    cat.register_dataset("a", spark.createDataFrame(
+        [("CA", 1.0), ("CO", 3.0)], "geography string, value double"))
+    cat.register_dataset("b", spark.createDataFrame(
+        [("CA", 10.0)], "geography string, value double"))
+    q = ProjectQueryModel(
+        name="total_diff",
+        source_datasets=[DatasetModel(dataset_id="a"),
+                         DatasetModel(dataset_id="b")],
+        aggregate_each_dataset=True, expression="a - b",
+        result=ResultModel(aggregations=[AggregationModel(
+            group_by_columns=[], aggregation_function="sum")]),
+    )
+    rows = QuerySubmitter(cat).submit(q).collect()
+    assert [r.asDict() for r in rows] == [{"value": -6.0}]
+
+
 def test_checkpoint_duplicate_steps_distinct(spark, tmp_path):
     """Two identical persisted steps must checkpoint under distinct
     prefixes; resume must not double-apply."""
@@ -761,21 +783,6 @@ def test_dataset_query_sum_folds_fractions(fold_catalog, folded):
 
 # ---- catalog: each path source is read once per registration ------------
 
-def _plan_jobs(spark, build) -> int:
-    """Spark jobs launched while ``build()`` constructs a plan."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"plan-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "plan construction")
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture()
 def path_catalog(spark, tmp_path):
     cat = Catalog(spark)
@@ -800,8 +807,8 @@ def test_catalog_second_submit_reads_nothing(spark, path_catalog):
         name="q", source_datasets=[_mapped("a", "swap"), _mapped("b")],
         result=ResultModel(aggregations=_agg("sum", "geography")))
     sub = QuerySubmitter(path_catalog)
-    assert _plan_jobs(spark, lambda: sub.submit(query)) > 0
-    assert _plan_jobs(spark, lambda: sub.submit(query)) == 0
+    assert plan_jobs(spark, lambda: sub.submit(query)) > 0
+    assert plan_jobs(spark, lambda: sub.submit(query)) == 0
 
 
 def test_catalog_source_used_twice_in_one_query(spark, path_catalog):

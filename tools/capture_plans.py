@@ -1,7 +1,8 @@
 """Capture .explain('formatted') for every declared query into
-plans/r12/<query>_<suffix>.txt (suffix 'before'/'after' from argv).
+<out_dir>/<query>_<suffix>.txt.
 
-Usage: python tools/capture_plans_r12.py before [q30_minhash_dedup ...]
+Usage: python tools/capture_plans.py <out_dir> before|after [query ...]
+e.g.   python tools/capture_plans.py plans/r13 before q30_minhash_dedup
 Runs at sf0.1 (the bench scale) so plan shapes match the timed runs.
 Queries that build on-disk indexes during construction run those builds
 here too — the captured plan is the RETURNED DataFrame's, which is what
@@ -19,15 +20,14 @@ from dsgrid_spark.session import get_spark  # noqa: E402
 
 
 def main():
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    out_dir, suffix, only = sys.argv[1], sys.argv[2], set(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark("dsgrid-plan-capture", master=f"local[{cpus}]",
                       shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r12")
     os.makedirs(out_dir, exist_ok=True)
     for name, fn in entry_mod.queries().items():
         if only and name not in only:
